@@ -8,6 +8,7 @@ Catalyst, Arrow-batched pandas UDFs only where relational primitives cannot
 express the semantics (LIME ridge fits, as-of merge, LSH banding).
 """
 
+from lime_on_spark_spark import _zipimport  # noqa: F401  (first: patches zipimport)
 from lime_on_spark_spark.session import configure, get_spark
 from lime_on_spark_spark.sources.catalog import TABLES, load_tables
 

@@ -16,7 +16,7 @@ TABLES = (
 def spark():
     from lime_on_spark_spark.session import get_spark
 
-    spark = get_spark("lime-on-spark-tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("lime-on-spark-tests", shuffle_partitions=8)
     yield spark
     spark.stop()
 

@@ -31,7 +31,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
 
-    spark = get_spark(cpus=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

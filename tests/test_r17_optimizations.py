@@ -220,16 +220,23 @@ def test_streaming_query_leaves_no_checkpoint_manager_threads(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(60)
+    assert q.awaitTermination(60), "availableNow query did not terminate in 60 s"
 
     jvm = spark.sparkContext._jvm
     tg = jvm.java.lang.Thread.currentThread().getThreadGroup()
     while tg.getParent() is not None:
         tg = tg.getParent()
-    arr = jvm.java.lang.reflect.Array.newInstance(
-        jvm.java.lang.Thread._java_lang_class, tg.activeCount() + 200
-    )
-    n = tg.enumerate(arr, True)
+    # enumerate() silently drops threads that do not fit: grow the array
+    # until the snapshot leaves room to spare.
+    size = tg.activeCount() + 200
+    while True:
+        arr = jvm.java.lang.reflect.Array.newInstance(
+            jvm.java.lang.Thread._java_lang_class, size
+        )
+        n = tg.enumerate(arr, True)
+        if n < size:
+            break
+        size *= 2
     leaked = [
         arr[i].getName()
         for i in range(n)
