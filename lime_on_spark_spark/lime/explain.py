@@ -2,18 +2,23 @@
 
 The Spark raison d'être: explain MANY instances at once. Shape (§3.3):
 
-1. instances DF -> explode to instances × num_samples rows (L2/L3, JVM
-   expressions, deterministic xxhash64 masks);
+1. one `mapInArrow` pass turns each instance row into its num_samples
+   neighborhood rows (L2/L3: deterministic xxhash64 masks, the
+   reconstruction and, for tabular, the euclidean distance — NumPy over
+   Arrow, see `perturb.py`);
 2. score every perturbation with the broadcast MLlib model (L4 — the only
    JVM↔model boundary, still DataFrame-native `model.transform`);
-3. distances + kernel weights as columns (L5, pure JVM);
+3. kernel weights as one codegen'd column over the distance (L5);
 4. `groupBy(instance_id).applyInPandas` — one Arrow batch per instance
-   holds its full neighborhood; closed-form ridge + highest-weights
+   holds its full neighborhood; the target class (the black box's first
+   argmax on the unperturbed sample 0), closed-form ridge and feature
    selection run in NumPy (L6/L7).
 
 Scale: one shuffle (the group-by on instance_id); each group is
 num_samples rows regardless of corpus size, so executor memory is bounded
-by the neighborhood, not the data.
+by the neighborhood, not the data. The target class is read inside the
+group, where sample 0 already is, so no window or join branches the
+perturb→score lineage.
 """
 
 from __future__ import annotations
@@ -23,12 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lime_on_spark_spark.lime.kernel import (
-    default_kernel_width,
-    euclidean_distance,
-    exponential_kernel,
-)
-from lime_on_spark_spark.lime.perturb import perturb_tabular, perturb_text
+from lime_on_spark_spark.lime.kernel import default_kernel_width, exponential_kernel
+from lime_on_spark_spark.lime.perturb import _tabular_samples, _text_samples
 from lime_on_spark_spark.lime.ridge import explain_with_data
 from lime_on_spark_spark.lime.models import (
     score_tabular,
@@ -81,7 +82,13 @@ def _fit_group(
 ) -> pd.DataFrame:
     pdf = pdf.sort_values("sample_id").reset_index(drop=True)
     Z = np.stack(pdf["z"].to_numpy())
-    y = pdf["y"].to_numpy(dtype=np.float64)
+    if "probs" in pdf:
+        # Classifier: y = P(target) per sample, the target being the first
+        # argmax of the black box on the unperturbed sample 0.
+        probs = np.stack(pdf["probs"].to_numpy())
+        y = probs[:, int(np.argmax(probs[0]))]
+    else:
+        y = pdf["y"].to_numpy(dtype=np.float64)
     w = pdf["weight"].to_numpy(dtype=np.float64)
     idx, beta, intercept, r2, local_pred = explain_with_data(
         Z, y, w, k, alpha, method=method
@@ -98,30 +105,6 @@ def _fit_group(
         words = pdf["words"].iloc[0]
         out["word"] = [words[i] for i in idx]
     return pd.DataFrame(out)
-
-
-def _with_label_prob(scored: DataFrame) -> DataFrame:
-    """y = P(target class) for every sample, where the target class is the
-    black-box argmax on the instance's UNPERTURBED row (sample_id == 0).
-
-    Computed with a window over instance_id, not a filter-aggregate-join:
-    the join form branches the scoring lineage and re-executes the whole
-    perturb→model.transform pipeline for BOTH branches (~2x the pipeline
-    cost). The window is one hash shuffle on instance_id — the exact
-    distribution the downstream groupBy(instance_id).applyInPandas needs,
-    so Catalyst inserts no second Exchange and the pipeline stays
-    single-pass.
-    """
-    from pyspark.sql import Window
-
-    argmax = (F.array_position(F.col("probs"), F.array_max("probs")) - 1).cast(
-        "int"
-    )
-    w = Window.partitionBy("instance_id")
-    target = F.max(F.when(F.col("sample_id") == 0, argmax)).over(w)
-    return scored.withColumn("target", target).withColumn(
-        "y", F.element_at("probs", F.col("target") + 1)
-    )
 
 
 def explain_tabular(
@@ -153,20 +136,17 @@ def explain_tabular(
     instances = emb.filter(F.col("vec_id").isin(instance_ids)).select(
         F.col("vec_id").alias("instance_id"), as_double.alias("x")
     )
-    samples = perturb_tabular(
-        instances, mu=mu, num_samples=num_samples, seed=seed
+    samples = _tabular_samples(
+        instances, x_col="x", id_col="instance_id", mu=mu,
+        num_samples=num_samples, seed=seed, with_dist=True,
     )
     model = train_tabular_model(spark, sf_dir)
-    scored = _with_label_prob(score_tabular(model, samples))
-    weighted = scored.withColumn(
+    weighted = score_tabular(model, samples).withColumn(
         "weight",
-        exponential_kernel(
-            euclidean_distance(F.col("raw"), F.col("x")),
-            default_kernel_width(d) * kernel_scale,
-        ),
+        exponential_kernel(F.col("dist"), default_kernel_width(d) * kernel_scale),
     )
     return (
-        weighted.select("instance_id", "sample_id", "z", "y", "weight")
+        weighted.select("instance_id", "sample_id", "z", "probs", "weight")
         .groupBy("instance_id")
         .applyInPandas(
             lambda pdf: _fit_group(pdf, k, alpha, with_words=False, method=feature_selection),
@@ -194,30 +174,17 @@ def explain_text(
     (perturb_text_bow); ``bow=False`` is the positional mode. The
     downstream pipeline is identical — only the z-space and the feature
     naming change (vocab words vs positioned words)."""
-    from lime_on_spark_spark.lime.perturb import perturb_text_bow
-
     docs = load_table(spark, sf_dir, "documents")
     instances = docs.filter(F.col("doc_id").isin(doc_ids)).select(
         F.col("doc_id").alias("instance_id"), "text", "lang"
     )
     # "doc_words" not "words": the scoring pipeline's Tokenizer owns "words".
-    if bow:
-        samples = (
-            perturb_text_bow(
-                instances,
-                id_col="instance_id",
-                num_samples=num_samples,
-                seed=seed,
-            )
-            .withColumn("doc_words", F.col("vocab"))
-            .drop("text", "vocab")
-        )
-    else:
-        samples = perturb_text(
-            instances, id_col="instance_id", num_samples=num_samples, seed=seed
-        ).withColumn("doc_words", F.split("text", " ")).drop("text")
+    samples = _text_samples(
+        instances, text_col="text", id_col="instance_id",
+        num_samples=num_samples, seed=seed, bow=bow, with_words=True,
+    )
     model, _labels = train_text_model(spark, sf_dir)
-    scored = _with_label_prob(score_text(model, samples))
+    scored = score_text(model, samples)
     # Cosine distance between binary z and the all-ones original:
     # 1 - sum(z) / (sqrt(sum(z)) * sqrt(d')) = 1 - sqrt(n_kept / d'),
     # scaled by 100 as upstream lime_text does before its width-25 kernel —
@@ -230,7 +197,7 @@ def explain_text(
     return (
         weighted.select(
             "instance_id", "sample_id", "z",
-            F.col("doc_words").alias("words"), "y", "weight",
+            F.col("doc_words").alias("words"), "probs", "weight",
         )
         .groupBy("instance_id")
         .applyInPandas(
@@ -265,14 +232,13 @@ def explain_tabular_regression(
     instances = emb.filter(F.col("vec_id").isin(instance_ids)).select(
         F.col("vec_id").alias("instance_id"), as_double.alias("x")
     )
-    samples = perturb_tabular(instances, mu=mu, num_samples=num_samples, seed=seed)
+    samples = _tabular_samples(
+        instances, x_col="x", id_col="instance_id", mu=mu,
+        num_samples=num_samples, seed=seed, with_dist=True,
+    )
     model = train_regression_model(spark, sf_dir)
-    scored = score_regression(model, samples)
-    weighted = scored.withColumn(
-        "weight",
-        exponential_kernel(
-            euclidean_distance(F.col("raw"), F.col("x")), default_kernel_width(d)
-        ),
+    weighted = score_regression(model, samples).withColumn(
+        "weight", exponential_kernel(F.col("dist"), default_kernel_width(d))
     )
     return (
         weighted.select("instance_id", "sample_id", "z", "y", "weight")

@@ -21,7 +21,9 @@ def default_kernel_width(dim: int) -> float:
 
 
 def euclidean_distance(a: Column, b: Column) -> Column:
-    """L2 distance between two array<double> columns, JVM-side."""
+    """L2 distance between two array<double> columns, JVM-side. The tabular
+    explainers take the same value, bit for bit, from the sampler's Arrow
+    pass instead (``perturb._tabular_samples(with_dist=True)``)."""
     sq = F.zip_with(
         a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
     )

@@ -4,20 +4,36 @@ Upstream analogue [public, unverified locally]: ``lime_tabular``'s
 neighborhood sampler and ``lime_text.IndexedString`` word masking.
 
 Determinism without driver-side RNG: every Bernoulli draw is
-``xxhash64(seed, instance_id, sample_id, position) mod 2`` — a pure JVM
-expression, reproducible across runs, partitionings, and cluster sizes
-(no per-partition RNG state, no collect). Sample 0 is always the
-unperturbed instance, as upstream.
+``xxhash64(seed, instance_id, sample_id, position) mod 2`` — reproducible
+across runs, partitionings, and cluster sizes (no per-partition RNG state,
+no collect). Sample 0 is always the unperturbed instance, as upstream.
 
-Scale design: the instances × num_samples explosion happens via
-``explode(sequence(...))`` — each instance's neighborhood is generated
-where the instance row lives; nothing round-trips the driver.
+Scale design: each sampler is ONE ``mapInArrow`` pass. An instance's whole
+neighborhood — masks, reconstruction, text re-join, and for the explainers
+the euclidean distance — is built by NumPy over the instance's Arrow row
+where that row lives; nothing round-trips the driver. The draws come from
+``_xxhash64_*``, a vectorized twin of Spark's ``XXH64`` fed the same hash
+chain as ``_bernoulli_keep`` (the column form, kept for image-LIME and as
+the reference the tests compare against), so the masks are bit-identical
+to ``F.xxhash64``. The arithmetic keeps Spark's operation order
+(``x*z + mu*(1-z)``, a left-to-right sum for the distance), so the floats
+are bit-identical too. (The column form paid for Spark 4.1 running
+``transform``/``zip_with``/``aggregate`` as interpreted ``CodegenFallback``
+trees, once per array element of every sample row.)
+
+Output batches cover whole instances and hold at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (read on the driver
+when the plan is built); a single instance may exceed it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _bernoulli_keep(seed: int, instance_id: Column, sample_id: Column, pos: Column) -> Column:
@@ -30,6 +46,226 @@ def with_samples(instances: DataFrame, num_samples: int) -> DataFrame:
     """Explode each instance row into `num_samples` sample rows."""
     return instances.withColumn(
         "sample_id", F.explode(F.sequence(F.lit(0), F.lit(num_samples - 1)))
+    )
+
+
+# --------------------------------------------------------------------------
+# NumPy twin of org.apache.spark.sql.catalyst.expressions.XXH64 (the hash
+# behind F.xxhash64, default seed 42). uint64 arithmetic wraps like Java's
+# long; the result's parity equals pmod(hash, 2).
+# --------------------------------------------------------------------------
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+_XXHASH64_SEED = np.uint64(42)
+
+
+def _rotl(h: np.ndarray, r: int) -> np.ndarray:
+    return (h << np.uint64(r)) | (h >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xxhash64_int(v, seed) -> np.ndarray:
+    """``XXH64.hashInt(v, seed)``, broadcast over int arrays ``v``/``seed``."""
+    v = np.asarray(v).astype(np.uint32).astype(np.uint64)
+    h = np.asarray(seed, dtype=np.uint64) + (_P5 + np.uint64(4))
+    h = h ^ (v * _P1)
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def _xxhash64_long(v, seed) -> np.ndarray:
+    """``XXH64.hashLong(v, seed)``, broadcast over int arrays ``v``/``seed``."""
+    v = np.asarray(v).astype(np.int64).astype(np.uint64)
+    h = np.asarray(seed, dtype=np.uint64) + (_P5 + np.uint64(8))
+    h = h ^ (_rotl(v * _P2, 31) * _P1)
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _id_hasher(schema: T.StructType, id_col: str) -> Callable:
+    """The XXH64 step Spark applies to ``id_col``'s type. Raises TypeError
+    for other types while the plan is built, not inside a worker."""
+    dtype = schema[id_col].dataType
+    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType)):
+        return _xxhash64_int
+    if isinstance(dtype, T.LongType):
+        return _xxhash64_long
+    raise TypeError(
+        f"{id_col} must be an integral column (tinyint/smallint/int/bigint) "
+        f"to seed the perturbation hash, got {dtype.simpleString()}"
+    )
+
+
+def _seed_hash(seed: int) -> np.uint64:
+    """The hash chain after ``F.lit(seed)``: a Python int literal is an int
+    when it fits 32 bits, else a bigint."""
+    if isinstance(seed, bool) or not isinstance(seed, (int, np.integer)):
+        raise TypeError(f"seed must be an int, got {type(seed).__name__}")
+    seed = int(seed)
+    # One-element arrays: NumPy warns on wrapping scalar arithmetic.
+    start = np.array([_XXHASH64_SEED])
+    if -(2**31) <= seed < 2**31:
+        return _xxhash64_int(np.array([seed]), start)[0]
+    if -(2**63) <= seed < 2**63:
+        return _xxhash64_long(np.array([seed]), start)[0]
+    raise TypeError(f"seed {seed} does not fit a bigint")
+
+
+def _keep_mask(h_id: np.ndarray, num_samples: int, width: int) -> np.ndarray:
+    """(len(h_id), num_samples, width) twin of ``_bernoulli_keep`` given the
+    chain hashed through each instance id; sample 0 keeps everything."""
+    sample_id = np.arange(num_samples, dtype=np.int32)
+    h = _xxhash64_int(sample_id[None, :], h_id[:, None])
+    h = _xxhash64_int(np.arange(width, dtype=np.int32), h[:, :, None])
+    keep = (h & np.uint64(1)) == 0
+    keep[:, 0, :] = True
+    return keep
+
+
+def _instance_hashes(batch, id_col: str, id_hash: Callable, seed_h) -> np.ndarray:
+    """The chain through each row's id; xxhash64 skips a null id."""
+    ids = batch.column(id_col)
+    h = id_hash(ids.fill_null(0).to_numpy(), seed_h)
+    if ids.null_count:
+        h = np.where(ids.is_valid().to_numpy(zero_copy_only=False), h, seed_h)
+    return h
+
+
+def _list_array(values, lengths: np.ndarray, *, row_null=None, item_null=None):
+    """Arrow list array whose row r holds the next ``lengths[r]`` items of
+    ``values`` (a NumPy or Arrow array); the masks mark null rows/items."""
+    import pyarrow as pa
+
+    offsets = np.zeros(lengths.size + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    if not isinstance(values, pa.Array):
+        values = pa.array(values, mask=item_null)
+    mask = None if row_null is None else pa.array(row_null)
+    return pa.ListArray.from_arrays(pa.array(offsets), values, mask=mask)
+
+
+def _neighborhoods(
+    instances: DataFrame,
+    num_samples: int,
+    fields: list[T.StructField],
+    build: Callable,
+    drop: tuple[str, ...] = (),
+) -> DataFrame:
+    """The shared ``mapInArrow`` shell: every input row (minus ``drop``)
+    repeated ``num_samples`` times with ``sample_id``, plus the ``fields``
+    that ``build(chunk)`` returns as Arrow arrays of ``len(chunk) *
+    num_samples`` rows."""
+    import pyarrow as pa
+
+    spark = instances.sparkSession
+    limit = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    step = max(1, limit // num_samples) if limit > 0 else None
+    kept = [f for f in instances.schema.fields if f.name not in drop]
+    names = [f.name for f in kept] + ["sample_id"] + [f.name for f in fields]
+    schema = T.StructType(
+        kept + [T.StructField("sample_id", T.IntegerType(), False)] + fields
+    )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for lo in range(0, batch.num_rows, step or batch.num_rows or 1):
+                chunk = batch.slice(lo, step)
+                n = chunk.num_rows
+                rows = pa.array(np.repeat(np.arange(n), num_samples))
+                sample_id = np.tile(np.arange(num_samples, dtype=np.int32), n)
+                cols = [chunk.column(f.name).take(rows) for f in kept]
+                yield pa.RecordBatch.from_arrays(
+                    cols + [pa.array(sample_id)] + build(chunk), names=names
+                )
+
+    return instances.mapInArrow(run, schema)
+
+
+# --------------------------------------------------------------------------
+# Tabular
+# --------------------------------------------------------------------------
+_NUMERIC = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType,
+)
+
+
+def _tabular_samples(
+    instances: DataFrame,
+    *,
+    x_col: str,
+    id_col: str,
+    mu: list[float],
+    num_samples: int,
+    seed: int,
+    with_dist: bool,
+) -> DataFrame:
+    """``perturb_tabular``'s pass. ``with_dist`` (the explainers) drops
+    ``x_col`` and adds ``dist``: the euclidean distance from ``raw`` to x,
+    bit-identical to ``kernel.euclidean_distance(raw, x)``."""
+    import pyarrow as pa
+
+    x_type = instances.schema[x_col].dataType
+    if not (isinstance(x_type, T.ArrayType) and isinstance(x_type.elementType, _NUMERIC)):
+        raise TypeError(f"{x_col} must be a numeric array, got {x_type.simpleString()}")
+    id_hash = _id_hasher(instances.schema, id_col)
+    seed_h = _seed_hash(seed)
+    mu_arr = np.asarray(mu, dtype=np.float64)
+    d = mu_arr.size
+    if d == 0:
+        raise ValueError("mu must have at least one dimension")
+
+    def build(chunk: pa.RecordBatch) -> list[pa.Array]:
+        n = chunk.num_rows
+        xs = chunk.column(x_col)
+        lengths = xs.value_lengths().fill_null(d).to_numpy()
+        if (lengths != d).any():
+            raise ValueError(f"{x_col} arrays must have len(mu) = {d} elements")
+        row_ok = xs.is_valid().to_numpy(zero_copy_only=False)
+        values = xs.flatten()
+        x = np.zeros((n, d))
+        x[row_ok] = values.fill_null(0).to_numpy().astype(np.float64).reshape(-1, d)
+        valid = np.zeros((n, d), dtype=bool)
+        valid[row_ok] = values.is_valid().to_numpy(zero_copy_only=False).reshape(-1, d)
+
+        z = _keep_mask(_instance_hashes(chunk, id_col, id_hash, seed_h), num_samples, d)
+        z = z.astype(np.int32)
+        zf = z.astype(np.float64)
+        # Spark's order: element_at(x)*z + mu*(1 - z), each product rounded.
+        raw = x[:, None, :] * zf + mu_arr * (1.0 - zf)
+        # A null x element makes the raw element (and the distance) null.
+        null = None
+        if not valid.all():
+            null = np.broadcast_to(~valid[:, None, :], raw.shape).ravel()
+        widths = np.full(n * num_samples, d)
+        out = [_list_array(z.ravel(), widths), _list_array(raw.ravel(), widths, item_null=null)]
+        if with_dist:
+            sq = (raw - x[:, None, :]).reshape(-1, d)
+            sq = sq * sq
+            # aggregate() folds left from 0.0; np.sum adds pairwise and
+            # would round differently.
+            acc = np.zeros(sq.shape[0])
+            for j in range(d):
+                acc = acc + sq[:, j]
+            dist_null = None if null is None else null.reshape(-1, d).any(axis=1)
+            out.append(pa.array(np.sqrt(acc), mask=dist_null))
+        return out
+
+    fields = [
+        T.StructField("z", T.ArrayType(T.IntegerType(), False), False),
+        T.StructField("raw", T.ArrayType(T.DoubleType(), True), False),
+    ]
+    if with_dist:
+        fields.append(T.StructField("dist", T.DoubleType(), True))
+    return _neighborhoods(
+        instances, num_samples, fields, build, drop=(x_col,) if with_dist else ()
     )
 
 
@@ -48,30 +284,10 @@ def perturb_tabular(
     Output adds: sample_id, z (array<int> interpretable rep), raw
     (array<double> reconstruction fed to the black box).
     """
-    d = len(mu)
-    mu_col = F.array(*[F.lit(float(m)) for m in mu])
-    samples = with_samples(instances, num_samples)
-    keep = lambda i: _bernoulli_keep(  # noqa: E731
-        seed, F.col(id_col), F.col("sample_id"), i
+    return _tabular_samples(
+        instances, x_col=x_col, id_col=id_col, mu=mu,
+        num_samples=num_samples, seed=seed, with_dist=False,
     )
-    z = F.when(
-        F.col("sample_id") == 0, F.array_repeat(F.lit(1), d)
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(d - 1)), lambda i: keep(i).cast("int")
-        )
-    )
-    samples = samples.withColumn("z", z)
-    raw = F.transform(
-        F.sequence(F.lit(0), F.lit(d - 1)),
-        lambda i: (
-            F.element_at(F.col(x_col), i + 1).cast("double")
-            * F.element_at(F.col("z"), i + 1)
-            + F.element_at(mu_col, i + 1)
-            * (1 - F.element_at(F.col("z"), i + 1))
-        ),
-    )
-    return samples.withColumn("raw", raw)
 
 
 def perturb_tabular_gaussian(
@@ -91,7 +307,7 @@ def perturb_tabular_gaussian(
     (`sample_around_instance=True`). Sample 0 is the unperturbed instance.
 
     Alternative L2 mode: the deterministic mask-to-mean `perturb_tabular`
-    stays the default (exactly reproducible, pure JVM); this mode exists
+    stays the default (exactly reproducible, hash-seeded); this mode exists
     for fidelity with the published algorithm's sampling distribution.
 
     Determinism without driver-side RNG state: each instance's whole
@@ -99,9 +315,6 @@ def perturb_tabular_gaussian(
     seeded by (seed, instance_id) — reproducible across runs, partitionings
     and cluster sizes, because the stream never crosses instances.
     """
-    from collections.abc import Iterator
-
-    import numpy as np
     import pandas as pd
 
     d = len(mu)
@@ -142,6 +355,98 @@ def perturb_tabular_gaussian(
     )
 
 
+# --------------------------------------------------------------------------
+# Text
+# --------------------------------------------------------------------------
+def _text_samples(
+    docs: DataFrame,
+    *,
+    text_col: str,
+    id_col: str,
+    num_samples: int,
+    seed: int,
+    bow: bool,
+    with_words: bool = False,
+) -> DataFrame:
+    """``perturb_text`` (``bow=False``) / ``perturb_text_bow`` pass.
+
+    Tokens are ``split(text, " ")``, empty tokens kept as Java's split with
+    limit -1 keeps them; ``perturbed`` is the kept tokens joined by one
+    space. A null text gives null z, vocab and n_kept and an empty
+    ``perturbed``, as the column form did. ``with_words`` (the explainers)
+    drops ``text_col`` and ``vocab`` and adds ``doc_words``: the
+    interpretable features' words — the vocabulary in bow mode, the tokens
+    otherwise — on sample 0's row only (null on the others, which no reader
+    looks at)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not isinstance(docs.schema[text_col].dataType, T.StringType):
+        raise TypeError(f"{text_col} must be a string column")
+    id_hash = _id_hasher(docs.schema, id_col)
+    seed_h = _seed_hash(seed)
+    S = num_samples
+
+    def build(chunk: pa.RecordBatch) -> list[pa.Array]:
+        n = chunk.num_rows
+        toks = pc.split_pattern(chunk.column(text_col), " ")
+        offsets = toks.offsets.to_numpy()
+        h_id = _instance_hashes(chunk, id_col, id_hash, seed_h)
+        null = ~toks.is_valid().to_numpy(zero_copy_only=False)
+        z_len = np.zeros((n, S), dtype=np.int32)
+        n_kept = np.zeros((n, S), dtype=np.int32)
+        kept_len = np.zeros((n, S), dtype=np.int32)
+        z_vals, kept_idx, vocab = [np.zeros(0, bool)], [np.zeros(0, np.intp)], [None] * n
+        for i in np.flatnonzero(~null):
+            lo, ntok = offsets[i], offsets[i + 1] - offsets[i]
+            if bow:
+                # array_distinct order: first appearance.
+                slot: dict[str, int] = {}
+                words = toks.values[lo : lo + ntok].to_pylist()
+                feature = np.fromiter(
+                    (slot.setdefault(t, len(slot)) for t in words), np.intp, ntok
+                )
+                vocab[i] = list(slot)
+            else:
+                feature = np.arange(ntok)
+            z = _keep_mask(h_id[i : i + 1], S, len(slot) if bow else ntok)[0]
+            tok_keep = z[:, feature]
+            z_vals.append(z.ravel())
+            z_len[i] = z.shape[1]
+            n_kept[i] = z.sum(axis=1)
+            kept_len[i] = tok_keep.sum(axis=1)
+            kept_idx.append(lo + np.nonzero(tok_keep)[1])
+
+        row_null = np.repeat(null, S) if null.any() else None
+        z_arr = _list_array(
+            np.concatenate(z_vals).astype(np.int32), z_len.ravel(), row_null=row_null
+        )
+        kept_words = toks.values.take(pa.array(np.concatenate(kept_idx)))
+        perturbed = pc.binary_join(_list_array(kept_words, kept_len.ravel()), " ")
+        out = [z_arr, perturbed, pa.array(n_kept.ravel(), mask=row_null)]
+        features = pa.array(vocab, pa.list_(pa.string())) if bow else toks
+        rows = np.repeat(np.arange(n), S)
+        if with_words:
+            not_sample0 = np.tile(np.arange(S) > 0, n)
+            out.append(features.take(pa.array(rows, mask=not_sample0)))
+        elif bow:
+            out.insert(0, features.take(pa.array(rows)))
+        return out
+
+    fields = [
+        T.StructField("z", T.ArrayType(T.IntegerType(), False), True),
+        T.StructField("perturbed", T.StringType(), False),
+        T.StructField("n_kept", T.IntegerType(), True),
+    ]
+    drop: tuple[str, ...] = ()
+    if with_words:
+        fields.append(T.StructField("doc_words", T.ArrayType(T.StringType(), True), True))
+        drop = (text_col,)
+    elif bow:
+        fields.insert(0, T.StructField("vocab", T.ArrayType(T.StringType(), True), True))
+    return _neighborhoods(docs, num_samples, fields, build, drop=drop)
+
+
 def perturb_text(
     docs: DataFrame,
     *,
@@ -156,38 +461,9 @@ def perturb_text(
     Output adds: sample_id, z (array<int> over word positions), perturbed
     (string), n_kept.
     """
-    # Materialize the token array as a column BEFORE indexing it inside
-    # transform lambdas: element_at over an inline split() re-evaluates the
-    # split per element access — O(words²) per sample row.
-    samples = with_samples(docs, num_samples).withColumn(
-        "_toks", F.split(F.col(text_col), " ")
-    )
-    toks = F.col("_toks")
-    keep = lambda i: _bernoulli_keep(  # noqa: E731
-        seed, F.col(id_col), F.col("sample_id"), i
-    )
-    z = F.when(
-        F.col("sample_id") == 0,
-        F.array_repeat(F.lit(1), F.size(toks)),
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 1),
-            lambda i: keep(i).cast("int"),
-        )
-    )
-    samples = samples.withColumn("z", z)
-    kept_words = F.array_compact(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 1),
-            lambda i: F.when(
-                F.element_at(F.col("z"), i + 1) == 1, F.element_at(toks, i + 1)
-            ),
-        )
-    )
-    return (
-        samples.withColumn("perturbed", F.concat_ws(" ", kept_words))
-        .withColumn("n_kept", F.aggregate("z", F.lit(0), lambda s, v: s + v))
-        .drop("_toks")
+    return _text_samples(
+        docs, text_col=text_col, id_col=id_col, num_samples=num_samples,
+        seed=seed, bow=False,
     )
 
 
@@ -208,35 +484,7 @@ def perturb_text_bow(
     Output adds: sample_id, vocab (array<string>), z (array<int> over
     vocab positions), perturbed (string), n_kept (kept vocab count).
     """
-    samples = with_samples(docs, num_samples).withColumn(
-        "_toks", F.split(F.col(text_col), " ")
-    )
-    # array_distinct preserves first-appearance order.
-    samples = samples.withColumn("vocab", F.array_distinct(F.col("_toks")))
-    keep = lambda i: _bernoulli_keep(  # noqa: E731
-        seed, F.col(id_col), F.col("sample_id"), i
-    )
-    z = F.when(
-        F.col("sample_id") == 0,
-        F.array_repeat(F.lit(1), F.size("vocab")),
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size("vocab") - 1),
-            lambda i: keep(i).cast("int"),
-        )
-    )
-    samples = samples.withColumn("z", z)
-    # A word survives iff its VOCAB slot is kept — every occurrence moves
-    # together (|vocab| is small, so array_position stays cheap).
-    kept_words = F.filter(
-        F.col("_toks"),
-        lambda w: F.element_at(
-            F.col("z"), F.array_position(F.col("vocab"), w).cast("int")
-        )
-        == 1,
-    )
-    return (
-        samples.withColumn("perturbed", F.concat_ws(" ", kept_words))
-        .withColumn("n_kept", F.aggregate("z", F.lit(0), lambda s, v: s + v))
-        .drop("_toks")
+    return _text_samples(
+        docs, text_col=text_col, id_col=id_col, num_samples=num_samples,
+        seed=seed, bow=True,
     )

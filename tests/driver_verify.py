@@ -9,11 +9,19 @@ Usage: python tests/driver_verify.py [sf_dir] [only_csv]
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# The checkout this script lives in, not a fixed path: a run from another
+# worktree or copy must verify that copy, in the driver and in the Python
+# workers (which otherwise import the package from the working directory).
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb  # noqa: E402
 
