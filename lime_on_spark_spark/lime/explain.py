@@ -37,6 +37,7 @@ from lime_on_spark_spark.lime.models import (
     train_tabular_model,
     train_text_model,
 )
+from lime_on_spark_spark.session import session_memo
 from lime_on_spark_spark.sources.catalog import load_table
 
 TABULAR_SCHEMA = (
@@ -51,16 +52,13 @@ TEXT_SCHEMA = (
 #: Upstream default kernel width for text explanations.
 TEXT_KERNEL_WIDTH = 25.0
 
-#: Corpus per-dimension means, cached per (applicationId, sf_dir) like the
-#: trained models: the corpus is immutable for a session, the agg is
-#: deterministic, and recomputing it per explain call puts a full
-#: posexplode-aggregate job in every invocation's wall-time.
-_MU_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
 def _corpus_means(spark: SparkSession, sf_dir: str) -> list[float]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MU_CACHE:
+    """Corpus per-dimension means, memoized per session: the corpus is
+    immutable for a session, the agg is deterministic, and recomputing it
+    per explain call puts a full posexplode-aggregate job in every
+    invocation's wall-time."""
+
+    def build() -> list[float]:
         emb = load_table(spark, sf_dir, "embeddings")
         as_double = F.transform("embedding", lambda v: v.cast("double"))
         mu_rows = (
@@ -69,8 +67,9 @@ def _corpus_means(spark: SparkSession, sf_dir: str) -> list[float]:
             .agg(F.avg("v").alias("mu"))
             .collect()
         )
-        _MU_CACHE[key] = [r["mu"] for r in sorted(mu_rows, key=lambda r: r["pos"])]
-    return _MU_CACHE[key]
+        return [r["mu"] for r in sorted(mu_rows, key=lambda r: r["pos"])]
+
+    return session_memo(spark, ("corpus_means", sf_dir), build)
 
 
 def _fit_group(

@@ -2,9 +2,10 @@
 
 These are the black boxes LIME explains — a 10-class logistic regression
 over the 64-d embeddings (tabular path) and a Tokenizer→HashingTF→LogReg
-pipeline predicting `lang` from `text` (text path). Fitted models are
-cached per (session, sf_dir) so the driver's repeated query calls don't
-retrain.
+pipeline predicting `lang` from `text` (text path). Each fit is memoized
+in ``session.session_memo`` under ``("model", sf_dir, kind)``, so the
+driver's repeated query calls don't retrain, and a model fitted under a
+stopped application is dropped, not served to the next one.
 """
 
 from __future__ import annotations
@@ -12,22 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lime_on_spark_spark.session import session_memo
 from lime_on_spark_spark.sources.catalog import load_table
-
-_CACHE: dict[tuple[str, str, str], object] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str, kind: str) -> tuple[str, str, str]:
-    """Key on applicationId, not id(spark): a new session after a stop can
-    reuse the same id() and would silently receive a model bound to the dead
-    session's JVM. applicationId is unique per SparkContext."""
-    return (spark.sparkContext.applicationId, sf_dir, kind)
-
 
 def train_tabular_model(spark: SparkSession, sf_dir: str):
     """LogisticRegression on embeddings -> label (10 classes)."""
-    key = _cache_key(spark, sf_dir, "tabular")
-    if key not in _CACHE:
+
+    def build():
         from pyspark.ml.classification import LogisticRegression
         from pyspark.ml.functions import array_to_vector
 
@@ -37,8 +29,9 @@ def train_tabular_model(spark: SparkSession, sf_dir: str):
             F.col("label").cast("double").alias("label"),
         )
         lr = LogisticRegression(maxIter=50, regParam=0.01)
-        _CACHE[key] = lr.fit(train)
-    return _CACHE[key]
+        return lr.fit(train)
+
+    return session_memo(spark, ("model", sf_dir, "tabular"), build)
 
 
 def train_text_model(spark: SparkSession, sf_dir: str):
@@ -47,8 +40,8 @@ def train_text_model(spark: SparkSession, sf_dir: str):
     Returns (pipeline_model, labels) where labels[i] is the lang string for
     model class i (StringIndexer order).
     """
-    key = _cache_key(spark, sf_dir, "text")
-    if key not in _CACHE:
+
+    def build():
         from pyspark.ml import Pipeline
         from pyspark.ml.classification import LogisticRegression
         from pyspark.ml.feature import HashingTF, StringIndexer, Tokenizer
@@ -63,8 +56,9 @@ def train_text_model(spark: SparkSession, sf_dir: str):
             ]
         )
         model = pipe.fit(docs)
-        _CACHE[key] = (model, list(model.stages[0].labels))
-    return _CACHE[key]
+        return (model, list(model.stages[0].labels))
+
+    return session_memo(spark, ("model", sf_dir, "text"), build)
 
 
 def score_tabular(model, df: DataFrame, raw_col: str = "raw") -> DataFrame:
@@ -95,8 +89,8 @@ def train_regression_model(spark: SparkSession, sf_dir: str):
     needs a regressor to explain; this one is constructed so the local
     surrogate's fit quality is provable (the black box is globally linear
     in the features LIME perturbs), which the l11 verdict exploits."""
-    key = _cache_key(spark, sf_dir, "regression")
-    if key not in _CACHE:
+
+    def build():
         from pyspark.ml.functions import array_to_vector
         from pyspark.ml.regression import LinearRegression
 
@@ -113,8 +107,9 @@ def train_regression_model(spark: SparkSession, sf_dir: str):
             target.alias("label"),
         )
         lr = LinearRegression(maxIter=50, regParam=0.0)
-        _CACHE[key] = lr.fit(train)
-    return _CACHE[key]
+        return lr.fit(train)
+
+    return session_memo(spark, ("model", sf_dir, "regression"), build)
 
 
 def score_regression(model, df: DataFrame, raw_col: str = "raw") -> DataFrame:
@@ -150,8 +145,8 @@ def train_quality_model(spark: SparkSession, sf_dir: str):
     is bounded by the labeled quartiles either way), and scoring is a
     broadcast-model map with no shuffle.
     """
-    key = _cache_key(spark, sf_dir, "quality")
-    if key not in _CACHE:
+
+    def build():
         from pyspark.ml import Pipeline
         from pyspark.ml.classification import LogisticRegression
         from pyspark.ml.feature import HashingTF, Tokenizer
@@ -175,8 +170,9 @@ def train_quality_model(spark: SparkSession, sf_dir: str):
                 LogisticRegression(maxIter=50, regParam=0.01),
             ]
         )
-        _CACHE[key] = (pipe.fit(train), float(lo), float(hi))
-    return _CACHE[key]
+        return (pipe.fit(train), float(lo), float(hi))
+
+    return session_memo(spark, ("model", sf_dir, "quality"), build)
 
 
 def score_quality(model, df: DataFrame) -> DataFrame:
@@ -289,8 +285,8 @@ def train_langid_model(spark: SparkSession, sf_dir: str):
     would train on any labeled sample the same way); scoring is a
     broadcast-model map stage with no shuffle, linear in the corpus.
     """
-    key = _cache_key(spark, sf_dir, "langid")
-    if key not in _CACHE:
+
+    def build():
         from pyspark.ml import Pipeline
         from pyspark.ml.classification import LogisticRegression
         from pyspark.ml.feature import HashingTF, NGram
@@ -315,8 +311,9 @@ def train_langid_model(spark: SparkSession, sf_dir: str):
                 LogisticRegression(maxIter=60, regParam=0.01),
             ]
         )
-        _CACHE[key] = pipe.fit(train)
-    return _CACHE[key]
+        return pipe.fit(train)
+
+    return session_memo(spark, ("model", sf_dir, "langid"), build)
 
 
 def score_langid(model, df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -21,42 +21,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lime_on_spark_spark.functions.vector import cosine
+from lime_on_spark_spark.session import session_memo
 from lime_on_spark_spark.sources.catalog import load_table
 
 
-#: Fitted indexes memoized per (applicationId, sf_dir, n_cells, seed) — the
-#: lime/models.py discipline: an IVF index is built once and amortized over
-#: every query against the same corpus (d4_ivf_knn, d63b_* share one fit).
-#: applicationId (not id(spark)) keys the cache so a stopped session's
-#: DataFrames are never resurrected in a new JVM.
-_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
 def build_ivf_index(spark: SparkSession, sf_dir: str, n_cells: int = 16, seed: int = 42):
-    """Fit KMeans cells and return (assigned_df, centroids ndarray)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    """Fit KMeans cells and return (assigned_df, centroids ndarray).
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, seed)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    # Evict entries from any other application before inserting: only one
-    # app is live at a time in this codebase, so stale keys would otherwise
-    # pin dead localCheckpoint'd DataFrame handles for the process lifetime.
-    app_id = key[0]
-    for stale in [k for k in _INDEX_CACHE if k[0] != app_id]:
-        del _INDEX_CACHE[stale]
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.withColumn("features", array_to_vector("embedding"))
-    km = KMeans(k=n_cells, seed=seed, featuresCol="features", predictionCol="cell")
-    model = km.fit(vecs)
-    # localCheckpoint: the cached index must not re-run the fit lineage on
-    # every consumer; k x d centroids + the assigned table are tiny
-    # relative to any corpus where IVF matters.
-    assigned = model.transform(vecs).drop("features").localCheckpoint(eager=True)
-    centroids = np.array([np.asarray(c) for c in model.clusterCenters()])
-    _INDEX_CACHE[key] = (assigned, centroids)
-    return _INDEX_CACHE[key]
+    Memoized per session: an IVF index is built once and amortized over
+    every query against the same corpus (d4_ivf_knn, d63b_* share one fit).
+    """
+
+    def build():
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
+
+        emb = load_table(spark, sf_dir, "embeddings")
+        vecs = emb.withColumn("features", array_to_vector("embedding"))
+        km = KMeans(k=n_cells, seed=seed, featuresCol="features", predictionCol="cell")
+        model = km.fit(vecs)
+        # localCheckpoint: the cached index must not re-run the fit lineage
+        # on every consumer; k x d centroids + the assigned table are tiny
+        # relative to any corpus where IVF matters.
+        assigned = model.transform(vecs).drop("features").localCheckpoint(eager=True)
+        centroids = np.array([np.asarray(c) for c in model.clusterCenters()])
+        return (assigned, centroids)
+
+    return session_memo(spark, ("ivf", sf_dir, n_cells, seed), build)
 
 
 def ivf_topk(

@@ -4,7 +4,7 @@ what each cell stores (operators/pq.py), and the two compose so a query
 scans ONLY the compressed codes of the probed cells:
 
   1. coarse quantizer: KMeans cells over the corpus (the d63b IVF index,
-     memoized per application + corpus);
+     memoized per session + corpus);
   2. residual encoding: every vector's RESIDUAL to its cell centroid is
      PQ-encoded (residuals cluster tighter than raw vectors, so the same
      codebook budget buys less quantization error — the reason FAISS
@@ -42,12 +42,7 @@ from pyspark.sql import functions as F
 
 from lime_on_spark_spark.operators.ivf import build_ivf_index
 from lime_on_spark_spark.operators.pq import train_pq
-
-#: Fitted IVF+PQ indexes memoized per (applicationId, sf_dir, params) —
-#: the operators/ivf.py discipline: one build amortized over every query
-#: against the same corpus; applicationId keys the cache so a stopped
-#: session's DataFrames are never resurrected in a new JVM.
-_IVFADC_CACHE: dict[tuple, tuple] = {}
+from lime_on_spark_spark.session import session_memo
 
 
 def build_ivfadc_index(
@@ -67,62 +62,54 @@ def build_ivfadc_index(
     tagged with its IVF cell; pq_cent = {(m, cid): coords} driver-held
     codebooks; centroids = the coarse KMeans centers (ndarray);
     cell_sizes = {cell: n_vectors} driver-held routing stats.
-    """
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dim,
-        n_cells,
-        m_subspaces,
-        k_centroids,
-        seed,
-    )
-    if key in _IVFADC_CACHE:
-        return _IVFADC_CACHE[key]
-    app_id = key[0]
-    for stale in [k for k in _IVFADC_CACHE if k[0] != app_id]:
-        del _IVFADC_CACHE[stale]
 
-    assigned, centroids = build_ivf_index(
-        spark, sf_dir, n_cells=n_cells, seed=seed
-    )
-    # Residual = vector - its cell centroid, via a broadcast equi-join on
-    # the cell id (n_cells rows — never a cross join) and one zip_with.
-    cent_df = spark.createDataFrame(
-        [(int(c), [float(x) for x in centroids[c]]) for c in range(len(centroids))],
-        "cell int, cvec array<double>",
-    )
-    residuals = (
-        assigned.join(F.broadcast(cent_df), "cell")
-        .select(
-            "cell",
-            "vec_id",
-            F.zip_with(
-                "embedding", "cvec", lambda x, y: x.cast("double") - y
-            ).alias("embedding"),
+    Memoized per session: one build is amortized over every query against
+    the same corpus.
+    """
+
+    def build():
+        assigned, centroids = build_ivf_index(
+            spark, sf_dir, n_cells=n_cells, seed=seed
         )
-    )
-    codes, pq_cent = train_pq(
-        residuals.select("vec_id", "embedding"),
-        dim=dim,
-        m_subspaces=m_subspaces,
-        k=k_centroids,
-    )
-    # Codes tagged with their cell = the physical layout (at 100 TB:
-    # bucketed files per cell). localCheckpoint: the cached index must not
-    # re-run the Lloyd lineage on every consumer.
-    coded = (
-        codes.drop("dist")
-        .join(residuals.select("cell", "vec_id"), "vec_id")
-        .select("cell", "vec_id", "m", "cid")
-        .localCheckpoint(eager=True)
-    )
-    cell_sizes = {
-        int(r["cell"]): int(r["n"])
-        for r in assigned.groupBy("cell").agg(F.count("*").alias("n")).collect()
-    }
-    _IVFADC_CACHE[key] = (coded, pq_cent, centroids, cell_sizes)
-    return _IVFADC_CACHE[key]
+        # Residual = vector - its cell centroid, via a broadcast equi-join
+        # on the cell id (n_cells rows — never a cross join) and one zip_with.
+        cent_df = spark.createDataFrame(
+            [(int(c), [float(x) for x in v]) for c, v in enumerate(centroids)],
+            "cell int, cvec array<double>",
+        )
+        residuals = (
+            assigned.join(F.broadcast(cent_df), "cell")
+            .select(
+                "cell",
+                "vec_id",
+                F.zip_with(
+                    "embedding", "cvec", lambda x, y: x.cast("double") - y
+                ).alias("embedding"),
+            )
+        )
+        codes, pq_cent = train_pq(
+            residuals.select("vec_id", "embedding"),
+            dim=dim,
+            m_subspaces=m_subspaces,
+            k=k_centroids,
+        )
+        # Codes tagged with their cell = the physical layout (at 100 TB:
+        # bucketed files per cell). localCheckpoint: the cached index must
+        # not re-run the Lloyd lineage on every consumer.
+        coded = (
+            codes.drop("dist")
+            .join(residuals.select("cell", "vec_id"), "vec_id")
+            .select("cell", "vec_id", "m", "cid")
+            .localCheckpoint(eager=True)
+        )
+        cell_sizes = {
+            int(r["cell"]): int(r["n"])
+            for r in assigned.groupBy("cell").agg(F.count("*").alias("n")).collect()
+        }
+        return (coded, pq_cent, centroids, cell_sizes)
+
+    key = ("ivfadc", sf_dir, dim, n_cells, m_subspaces, k_centroids, seed)
+    return session_memo(spark, key, build)
 
 
 def _select_probes(

@@ -91,6 +91,42 @@ def get_spark(
     return builder.getOrCreate()
 
 
+#: The engine's one session-scoped memo: plan handles, fitted models, index
+#: builds and small collected results, keyed ``(name, sf_dir, ...)``.
+#: Every entry belongs to ``_memo_app``, the applicationId that built it
+#: (not ``id(spark)``, which a session built after a stop can reuse); the
+#: first call under any other application clears them all, so a stopped
+#: session's DataFrames and models are never served to (or pinned beside)
+#: a new one. Builds nest (ivfadc -> ivf -> table, model -> table), so the
+#: dict is never iterated or locked while ``build`` runs.
+_MEMO: dict[tuple, object] = {}
+_memo_app: str | None = None
+_MEMO_STATS: dict[str, dict[str, int]] = {}
+
+
+def session_memo(spark: SparkSession, key: tuple, build):
+    """Return the value memoized under ``key`` for this session's
+    application, calling ``build()`` on a miss. Nothing is stored when
+    ``build`` raises. Hits and misses are counted per name ``key[0]``."""
+    global _memo_app
+    app = spark.sparkContext.applicationId
+    if app != _memo_app:
+        _MEMO.clear()
+        _memo_app = app
+    stats = _MEMO_STATS.setdefault(key[0], {"hits": 0, "misses": 0})
+    if key in _MEMO:
+        stats["hits"] += 1
+        return _MEMO[key]
+    stats["misses"] += 1
+    value = _MEMO[key] = build()
+    return value
+
+
+def memo_stats() -> dict[str, dict[str, int]]:
+    """Hit and miss counts per memo name since the process started."""
+    return {name: dict(counts) for name, counts in _MEMO_STATS.items()}
+
+
 @contextmanager
 def temp_conf(spark: SparkSession, key: str, value: str):
     """Set a session conf for the duration of a block, then restore the

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lime_on_spark_spark.session import configure
+from lime_on_spark_spark.session import configure, session_memo
 
 #: All tables the driver generates (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -54,17 +54,6 @@ def repair_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Lazy DataFrame HANDLES memoized per (applicationId, sf_dir, table) —
-#: the operators/ivfadc.py discipline. ``spark.read.parquet`` costs
-#: ~200 ms of py4j + footer/schema work per call on this corpus, paid
-#: inside the timed construction of every extended-bench row; the memo
-#: reuses the analyzed PLAN only. No data or results are cached: every
-#: action on the returned frame still scans the parquet input, and the
-#: applicationId key means a stopped session's plans are never
-#: resurrected in a new JVM.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one parquet table, applying per-table repairs.
 
@@ -72,23 +61,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (not one we built), and without ``nanosAsLong`` the events scan raises
     PARQUET_TYPE_ILLEGAL. Conf-set on an already-configured session is a
     cheap local no-op.
+
+    The lazy DataFrame HANDLE is memoized per session: ``spark.read.parquet``
+    costs ~200 ms of py4j + footer/schema work per call on this corpus,
+    paid inside the timed construction of every extended-bench row. Only
+    the analyzed PLAN is reused; every action on the returned frame still
+    scans the parquet input.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    # Stale-application sweep BEFORE the hit check: eviction must not
-    # depend on the next access being a miss. The memo never exceeds
-    # #tables x #corpus dirs per live app (~30 keys), so the scan is
-    # cheaper than one py4j round-trip.
-    for stale in [k for k in _TABLE_CACHE if k[0] != key[0]]:
-        del _TABLE_CACHE[stale]
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = repair_event_ts(df)
-    _TABLE_CACHE[key] = df
-    return df
+
+    def build() -> DataFrame:
+        configure(spark)
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return repair_event_ts(df) if name == "events" else df
+
+    return session_memo(spark, ("table", sf_dir, name), build)
 
 
 def load_tables(

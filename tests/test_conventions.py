@@ -136,3 +136,71 @@ def test_scanner_catches_the_a19_class():
     FROM lineitem
     """
     assert not _unguarded_decimal_aggs(green)
+
+
+# ------------------------------------------------ one session memo
+
+#: Modules whose f-strings may embed the applicationId to make per-run
+#: names (checkpoint dirs, sink tables) unique. Everything keyed on the
+#: application lives in session.py's ``session_memo``.
+_UNIQUE_NAME_MODULES = frozenset({
+    "plans/streaming_plans.py",
+    "plans/sources_sinks.py",
+    "plans/datapipe.py",
+    "streaming/sources.py",
+})
+
+
+def _application_id_uses(source: str, rel: str) -> list[str]:
+    """``applicationId`` uses in code (comments and docstrings are not
+    code) other than an f-string in one of the unique-name modules."""
+    import ast
+
+    tree = ast.parse(source)
+    in_fstring = {
+        id(node)
+        for joined in ast.walk(tree)
+        if isinstance(joined, ast.JoinedStr)
+        for node in ast.walk(joined)
+    }
+    bad = []
+    for node in ast.walk(tree):
+        named = (
+            isinstance(node, ast.Attribute) and node.attr == "applicationId"
+        ) or (isinstance(node, ast.Constant) and node.value == "applicationId")
+        if named and not (rel in _UNIQUE_NAME_MODULES and id(node) in in_fstring):
+            bad.append(f"{rel}:{node.lineno}")
+    return bad
+
+
+def test_application_keyed_state_only_in_session_memo():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    offenders = [
+        use
+        for path in sorted(root.rglob("*.py"))
+        if (rel := path.relative_to(root).as_posix()) != "session.py"
+        for use in _application_id_uses(path.read_text(), rel)
+    ]
+    assert not offenders, (
+        "applicationId used outside session.session_memo and the per-run "
+        f"unique-name f-strings — memoize through session_memo: {offenders}"
+    )
+
+
+def test_application_id_scanner_catches_a_hand_rolled_memo():
+    memo = (
+        "_C = {}\n"
+        "def f(spark, sf_dir):\n"
+        "    key = (spark.sparkContext.applicationId, sf_dir)  # memo\n"
+    )
+    assert _application_id_uses(memo, "plans/vectors.py") == ["plans/vectors.py:3"]
+    # Even a unique-name module may not key state on it outside an f-string.
+    assert _application_id_uses(memo, "plans/datapipe.py")
+    fstring = 'u = f"{spark.sparkContext.applicationId}-x"  # applicationId\n'
+    assert not _application_id_uses(fstring, "plans/datapipe.py")
+    assert _application_id_uses(fstring, "plans/vectors.py")
+    assert not _application_id_uses('"""applicationId + uuid."""\n', "x.py")

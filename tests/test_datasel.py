@@ -553,7 +553,7 @@ def test_quality_classifier_deterministic_and_separating(spark, sf_dir):
     """d83's fitted filter is deterministic (LBFGS on a fixed weak-label
     set: two fits -> the identical kept set) and actually separates its
     weak labels (per-source keep rates exist and are probabilities)."""
-    from lime_on_spark_spark.lime import models
+    from lime_on_spark_spark import session
     from lime_on_spark_spark.lime.models import score_quality, train_quality_model
 
     def kept_set():
@@ -564,7 +564,7 @@ def test_quality_classifier_deterministic_and_separating(spark, sf_dir):
 
     first, lo, hi = kept_set()
     # Drop the cache so the second call genuinely refits.
-    models._CACHE.pop(models._cache_key(spark, sf_dir, "quality"))
+    session._MEMO.pop(("model", sf_dir, "quality"))
     second, lo2, hi2 = kept_set()
     assert (lo, hi) == (lo2, hi2)
     assert first == second
@@ -639,7 +639,7 @@ def test_langid_classifier_deterministic_and_fixture_exact(spark, sf_dir):
     planted fixture languages (measured acc 1.0 — the suite pins every
     holdout doc correct, well inside the query's 0.9/0.8 verdict bars).
     Fixture generation itself is md5-keyed: two builds are row-identical."""
-    from lime_on_spark_spark.lime import models
+    from lime_on_spark_spark import session
     from lime_on_spark_spark.lime.models import (
         langid_fixtures,
         score_langid,
@@ -660,7 +660,7 @@ def test_langid_classifier_deterministic_and_fixture_exact(spark, sf_dir):
         return {r["i"]: (r["lang"], r["pred_lang"]) for r in hold.collect()}
 
     first = holdout_preds()
-    models._CACHE.pop(models._cache_key(spark, sf_dir, "langid"))
+    session._MEMO.pop(("model", sf_dir, "langid"))
     second = holdout_preds()
     assert first == second
     # Perfect per-doc separation on the distinctive-vocabulary fixtures.

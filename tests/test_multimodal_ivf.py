@@ -195,16 +195,15 @@ def test_ivfadc_two_builds_identical_and_budget_enforced(spark, sf_dir):
     cleared between) produce identical (cell, vec_id, m) -> cid codes and
     identical codebooks; and the mass-bounded router never exceeds its
     scan budget while always probing at least one cell."""
-    from lime_on_spark_spark.operators import ivfadc as mod
-    from lime_on_spark_spark.operators import ivf as ivf_mod
+    from lime_on_spark_spark import session
     from lime_on_spark_spark.operators.ivfadc import (
         build_ivfadc_index,
         ivfadc_adc_table,
     )
 
     def build():
-        mod._IVFADC_CACHE.clear()
-        ivf_mod._INDEX_CACHE.clear()
+        for key in [k for k in session._MEMO if k[0] in ("ivf", "ivfadc")]:
+            del session._MEMO[key]
         codes, pq_cent, centroids, cell_sizes = build_ivfadc_index(
             spark, sf_dir, dim=64, n_cells=8, m_subspaces=8, k_centroids=16
         )

@@ -4,7 +4,7 @@ Each test targets an internals change that kept an operator's OUTPUT
 identical while restructuring how it executes:
 
 * ``sources.catalog.load_table`` memoizes the lazy DataFrame handle per
-  (applicationId, sf_dir, table) — plans only, never results.
+  (application, sf_dir, table) — plans only, never results.
 * ``connected_components`` detects convergence with an order-free
   signature (count + hash-sum) and runs the exact change-count join only
   when the signature matches.
@@ -24,6 +24,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_load_table_memoizes_plan_handle(spark):
+    from lime_on_spark_spark import session
     from lime_on_spark_spark.sources import catalog
 
     a = catalog.load_table(spark, SF_DIR, "nation")
@@ -35,11 +36,17 @@ def test_load_table_memoizes_plan_handle(spark):
     assert a.count() == 25
 
     # Stale-application eviction: keys from a dead appId are dropped on
-    # the next miss, so a new session never resurrects old plans.
-    dead = ("app-dead-0000", SF_DIR, "region")
-    catalog._TABLE_CACHE[dead] = a
-    catalog.load_table(spark, SF_DIR, "customer")
-    assert dead not in catalog._TABLE_CACHE
+    # the next call, so a new session never resurrects old plans.
+    live, live_app = dict(session._MEMO), session._memo_app
+    dead = ("table", SF_DIR, "region")
+    session._memo_app = "app-dead-0000"
+    session._MEMO[dead] = a
+    try:
+        catalog.load_table(spark, SF_DIR, "customer")
+        assert dead not in session._MEMO
+    finally:
+        session._MEMO.update(live)
+        session._memo_app = live_app
 
 
 def test_min_label_cc_signature_convergence(spark):
