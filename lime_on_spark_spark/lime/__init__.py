@@ -3,7 +3,7 @@
 Public surface for a user switching from the reference:
 
 - :func:`explain_tabular` / :func:`explain_text` — batch L8 explainers
-  (one `groupBy(instance_id).applyInPandas` pipeline each).
+  (one shuffle-free Arrow pipeline each: sample, score, fit).
 - :func:`submodular_pick` — SP-LIME greedy coverage over a fitted
   explanation matrix (L9).
 - :func:`weighted_ridge` / :func:`explain_with_data` — the closed-form

@@ -9,19 +9,24 @@ The Spark raison d'être: explain MANY instances at once. Shape (§3.3):
 2. score every perturbation with the broadcast MLlib model (L4 — the only
    JVM↔model boundary, still DataFrame-native `model.transform`);
 3. kernel weights as one codegen'd column over the distance (L5);
-4. `groupBy(instance_id).applyInPandas` — one Arrow batch per instance
-   holds its full neighborhood; the target class (the black box's first
-   argmax on the unperturbed sample 0), closed-form ridge and feature
-   selection run in NumPy (L6/L7).
+4. one `mapInArrow` fit pass (`_fit_pass`) — it cuts each partition's
+   batches into runs of equal instance_id, and when a run ends it fits
+   that instance: the target class (the black box's first argmax on the
+   unperturbed sample 0), closed-form ridge and feature selection in
+   NumPy (L6/L7), reading z, probs and y straight from the Arrow columns.
 
-Scale: one shuffle (the group-by on instance_id); each group is
-num_samples rows regardless of corpus size, so executor memory is bounded
-by the neighborhood, not the data. The target class is read inside the
-group, where sample 0 already is, so no window or join branches the
-perturb→score lineage.
+Scale: no shuffle. The sampler emits each instance's whole neighborhood
+as one run of rows inside one partition, and scoring and weighting are
+narrow maps, so the fit runs where the neighborhood was built: one job,
+one stage. Executor memory holds one run (num_samples rows) regardless of
+corpus size. The pass raises on the executor if an instance_id shows up
+again after its run closed, so a plan that breaks contiguity fails loudly
+instead of fitting half-neighborhoods.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -72,6 +77,41 @@ def _corpus_means(spark: SparkSession, sf_dir: str) -> list[float]:
     return session_memo(spark, ("corpus_means", sf_dir), build)
 
 
+def _fit_instance(
+    instance_id: int,
+    Z: np.ndarray,
+    w: np.ndarray,
+    *,
+    y: np.ndarray | None = None,
+    probs: np.ndarray | None = None,
+    words: list[str] | None = None,
+    k: int,
+    alpha: float,
+    method: str = "highest_weights",
+) -> dict:
+    """The L6/L7 fit of one neighborhood, rows in sample_id order: the
+    output columns of TABULAR_SCHEMA (TEXT_SCHEMA with ``words``).
+    Regression passes ``y``; a classifier passes ``probs`` instead."""
+    if probs is not None:
+        # Classifier: y = P(target) per sample, the target being the first
+        # argmax of the black box on the unperturbed sample 0.
+        y = probs[:, int(np.argmax(probs[0]))]
+    idx, beta, intercept, r2, local_pred = explain_with_data(
+        Z, y, w, k, alpha, method=method
+    )
+    out = {
+        "instance_id": np.full(len(idx), instance_id, dtype=np.int64),
+        "feature_idx": idx.astype(np.int32),
+        "weight": beta,
+        "intercept": np.repeat(intercept, len(idx)),
+        "r2": np.repeat(r2, len(idx)),
+        "local_pred": np.repeat(local_pred, len(idx)),
+    }
+    if words is not None:
+        out["word"] = [words[i] for i in idx]
+    return out
+
+
 def _fit_group(
     pdf: pd.DataFrame,
     k: int,
@@ -79,31 +119,113 @@ def _fit_group(
     with_words: bool,
     method: str = "highest_weights",
 ) -> pd.DataFrame:
+    """`_fit_instance` over one ``groupBy(instance_id).applyInPandas``
+    group: the reference pipelines the fit pass is tested against."""
     pdf = pdf.sort_values("sample_id").reset_index(drop=True)
-    Z = np.stack(pdf["z"].to_numpy())
-    if "probs" in pdf:
-        # Classifier: y = P(target) per sample, the target being the first
-        # argmax of the black box on the unperturbed sample 0.
-        probs = np.stack(pdf["probs"].to_numpy())
-        y = probs[:, int(np.argmax(probs[0]))]
-    else:
-        y = pdf["y"].to_numpy(dtype=np.float64)
-    w = pdf["weight"].to_numpy(dtype=np.float64)
-    idx, beta, intercept, r2, local_pred = explain_with_data(
-        Z, y, w, k, alpha, method=method
+    probs = np.stack(pdf["probs"].to_numpy()) if "probs" in pdf else None
+    return pd.DataFrame(
+        _fit_instance(
+            pdf["instance_id"].iloc[0],
+            np.stack(pdf["z"].to_numpy()),
+            pdf["weight"].to_numpy(dtype=np.float64),
+            y=None if probs is not None else pdf["y"].to_numpy(dtype=np.float64),
+            probs=probs,
+            words=pdf["words"].iloc[0] if with_words else None,
+            k=k,
+            alpha=alpha,
+            method=method,
+        )
     )
-    out = {
-        "instance_id": np.repeat(pdf["instance_id"].iloc[0], len(idx)),
-        "feature_idx": idx.astype(np.int32),
-        "weight": beta,
-        "intercept": np.repeat(intercept, len(idx)),
-        "r2": np.repeat(r2, len(idx)),
-        "local_pred": np.repeat(local_pred, len(idx)),
-    }
-    if with_words:
-        words = pdf["words"].iloc[0]
-        out["word"] = [words[i] for i in idx]
-    return pd.DataFrame(out)
+
+
+def _fit_pass(
+    frame: DataFrame,
+    *,
+    k: int,
+    alpha: float,
+    with_words: bool = False,
+    method: str = "highest_weights",
+) -> DataFrame:
+    """Fit every neighborhood of ``frame`` (instance_id, sample_id, z,
+    probs or y, weight, and words when ``with_words``) in the partition
+    that holds it, one `mapInArrow` pass with no shuffle.
+
+    Contract: each instance's rows are one contiguous run within one
+    partition — what the samplers emit and narrow maps keep. A run may
+    span Arrow batches; it is fitted when the next id starts or the
+    partition ends. An id that appears again after its run closed raises
+    ValueError on the executor."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    ddl = TEXT_SCHEMA if with_words else TABULAR_SCHEMA
+    out_schema = to_arrow_schema(StructType.fromDDL(ddl))
+    classifier = "probs" in frame.columns
+
+    def column(run: list, name: str):
+        chunks = [part.column(name) for part in run]
+        return chunks[0] if len(chunks) == 1 else pa.concat_arrays(chunks)
+
+    def values(run: list, name: str) -> np.ndarray:
+        return column(run, name).to_numpy(zero_copy_only=False)
+
+    def matrix(run: list, name: str) -> np.ndarray:
+        arr = column(run, name)
+        return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), -1)
+
+    def fit(instance_id: int, run: list) -> dict:
+        order = np.argsort(values(run, "sample_id"), kind="stable")
+        return _fit_instance(
+            instance_id,
+            matrix(run, "z")[order],
+            values(run, "weight")[order],
+            y=None if classifier else values(run, "y")[order],
+            probs=matrix(run, "probs")[order] if classifier else None,
+            words=column(run, "words")[int(order[0])].as_py() if with_words else None,
+            k=k,
+            alpha=alpha,
+            method=method,
+        )
+
+    def to_batch(fits: list[dict]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_pydict(
+            {name: np.concatenate([f[name] for f in fits]) for name in out_schema.names},
+            schema=out_schema,
+        )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        closed: set[int] = set()
+        current, parts = None, []
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = batch.column("instance_id")
+            if ids.null_count:
+                raise ValueError("the LIME fit pass needs a non-null instance_id")
+            ids = ids.to_numpy()
+            cuts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist(), len(ids)]
+            fits = []
+            for lo, hi in zip(cuts[:-1], cuts[1:]):
+                instance_id = int(ids[lo])
+                if instance_id != current:
+                    if parts:
+                        fits.append(fit(current, parts))
+                        closed.add(current)
+                    if instance_id in closed:
+                        raise ValueError(
+                            f"instance_id {instance_id} appears again after its "
+                            "run closed: the LIME fit pass needs each instance's "
+                            "rows contiguous within one partition"
+                        )
+                    current, parts = instance_id, []
+                parts.append(batch.slice(lo, hi - lo))
+            if fits:
+                yield to_batch(fits)
+        if parts:
+            yield to_batch([fit(current, parts)])
+
+    return frame.mapInArrow(run, ddl)
 
 
 def explain_tabular(
@@ -144,13 +266,9 @@ def explain_tabular(
         "weight",
         exponential_kernel(F.col("dist"), default_kernel_width(d) * kernel_scale),
     )
-    return (
-        weighted.select("instance_id", "sample_id", "z", "probs", "weight")
-        .groupBy("instance_id")
-        .applyInPandas(
-            lambda pdf: _fit_group(pdf, k, alpha, with_words=False, method=feature_selection),
-            schema=TABULAR_SCHEMA,
-        )
+    return _fit_pass(
+        weighted.select("instance_id", "sample_id", "z", "probs", "weight"),
+        k=k, alpha=alpha, method=feature_selection,
     )
 
 
@@ -193,16 +311,12 @@ def explain_text(
     weighted = scored.withColumn(
         "weight", exponential_kernel(dist, TEXT_KERNEL_WIDTH)
     )
-    return (
+    return _fit_pass(
         weighted.select(
             "instance_id", "sample_id", "z",
             F.col("doc_words").alias("words"), "probs", "weight",
-        )
-        .groupBy("instance_id")
-        .applyInPandas(
-            lambda pdf: _fit_group(pdf, k, alpha, with_words=True, method=feature_selection),
-            schema=TEXT_SCHEMA,
-        )
+        ),
+        k=k, alpha=alpha, with_words=True, method=feature_selection,
     )
 
 
@@ -239,11 +353,7 @@ def explain_tabular_regression(
     weighted = score_regression(model, samples).withColumn(
         "weight", exponential_kernel(F.col("dist"), default_kernel_width(d))
     )
-    return (
-        weighted.select("instance_id", "sample_id", "z", "y", "weight")
-        .groupBy("instance_id")
-        .applyInPandas(
-            lambda pdf: _fit_group(pdf, k, alpha, with_words=False),
-            schema=TABULAR_SCHEMA,
-        )
+    return _fit_pass(
+        weighted.select("instance_id", "sample_id", "z", "y", "weight"),
+        k=k, alpha=alpha,
     )

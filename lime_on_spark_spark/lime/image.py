@@ -22,8 +22,8 @@ Sandbox adaptation, stated honestly:
 
 Scale: decode + block means are one `mapInPandas` scan stage (Arrow
 batches, no shuffle of bytes); the neighborhood explosion, masks, black
-box, and kernel are JVM expressions; the only shuffle is the
-groupBy(instance_id) into the ridge — identical shape to L8.
+box, and kernel are JVM expressions; the ridge is L8's `_fit_pass` over
+the runs the explosion emits — no shuffle anywhere, identical shape to L8.
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lime_on_spark_spark.lime.explain import _fit_pass
 from lime_on_spark_spark.lime.kernel import exponential_kernel
 from lime_on_spark_spark.lime.perturb import _bernoulli_keep, with_samples
 from lime_on_spark_spark.sources.catalog import load_table
@@ -93,8 +94,6 @@ def explain_image(
     """Full image-LIME batch: one row per (instance, segment) with the
     surrogate weight. Full-width fit (k = N_SEGMENTS) so recovery of the
     planted scorer is provable."""
-    from lime_on_spark_spark.lime.explain import _fit_group
-
     bm = block_means(spark, sf_dir, doc_ids)
     samples = with_samples(bm, num_samples)
     z = F.when(
@@ -123,19 +122,9 @@ def explain_image(
     weighted = samples.withColumn("y", y).withColumn(
         "weight", exponential_kernel(dist, IMAGE_KERNEL_WIDTH)
     )
-    schema = (
-        "instance_id bigint, feature_idx int, weight double, "
-        "intercept double, r2 double, local_pred double"
-    )
-    return (
-        weighted.select("instance_id", "sample_id", "z", "y", "weight")
-        .groupBy("instance_id")
-        .applyInPandas(
-            lambda pdf: _fit_group(
-                pdf, N_SEGMENTS, alpha, with_words=False
-            ),
-            schema=schema,
-        )
+    return _fit_pass(
+        weighted.select("instance_id", "sample_id", "z", "y", "weight"),
+        k=N_SEGMENTS, alpha=alpha,
     )
 
 

@@ -447,10 +447,8 @@ def l6_ridge_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standalone L6: fit the per-instance weighted ridge where y is a known
     linear function of the interpretable rep (y = 0.3*z0 + 0.2*z1 + 0.1),
     so the surrogate must recover ~those weights — a distributed end-to-end
-    check of the applyInPandas fit path, reproducible bit-for-bit."""
-    import pandas as pd
-
-    from lime_on_spark_spark.lime.explain import TABULAR_SCHEMA, _fit_group
+    check of the LIME fit pass, reproducible bit-for-bit."""
+    from lime_on_spark_spark.lime.explain import _fit_pass
     from lime_on_spark_spark.lime.perturb import perturb_tabular
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -470,10 +468,7 @@ def l6_ridge_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("double").alias("y"),
         F.lit(1.0).alias("weight"),
     )
-    out = with_y.groupBy("instance_id").applyInPandas(
-        lambda pdf: _fit_group(pdf, k=3, alpha=1.0, with_words=False),
-        schema=TABULAR_SCHEMA,
-    )
+    out = _fit_pass(with_y, k=3, alpha=1.0)
     return out.select(
         "instance_id",
         "feature_idx",
@@ -528,7 +523,7 @@ def l1_discretizer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # linear neighborhood (y = 0.3*z0 + 0.2*z1 + 0.1, zero noise), the fitted
 # surrogate must recover the generating coefficients within ridge-shrinkage
 # tolerance and fit near-perfectly. Oracle pins the deterministic instance
-# list + TRUE (a3-verdict pattern), making the applyInPandas ridge path
+# list + TRUE (a3-verdict pattern), making the LIME fit pass
 # driver-checkable instead of rows-only.
 # --------------------------------------------------------------------------
 @register(
@@ -1170,7 +1165,7 @@ def l15_categorical_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |f(x_del) - f(x)| is NOT used: signed contributions can cancel
 # (observed on this corpus: instance 2's 0.5/0.3/0.15 contributions
 # sum to ~0.002), which audits the arithmetic, not the explanation.
-# Scale: the LIME fit is the l6/l8 Arrow path (per-instance groups); the
+# Scale: the LIME fit is the l6/l8 fit pass (no shuffle); the
 # audit itself is one explode-join of k rows per instance against the
 # instance vector — bounded by k*|instances|, no extra corpus scan.
 # --------------------------------------------------------------------------
@@ -1188,7 +1183,7 @@ _L16_C = (0.5, 0.3, 0.15, 0.01, 0.01, 0.01, 0.01, 0.01)
     """,
 )
 def l16_deletion_faithfulness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lime_on_spark_spark.lime.explain import TABULAR_SCHEMA, _fit_group
+    from lime_on_spark_spark.lime.explain import _fit_pass
     from lime_on_spark_spark.lime.perturb import perturb_tabular
 
     d = len(_L16_C)
@@ -1214,10 +1209,7 @@ def l16_deletion_faithfulness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "instance_id", "sample_id", "z",
         y.cast("double").alias("y"), F.lit(1.0).alias("weight"),
     )
-    fit = with_y.groupBy("instance_id").applyInPandas(
-        lambda pdf: _fit_group(pdf, k=3, alpha=1.0, with_words=False),
-        schema=TABULAR_SCHEMA,
-    )
+    fit = _fit_pass(with_y, k=3, alpha=1.0)
     # Deletion audit: top-set effect from the ACTUAL picks, control-set
     # effect from the fixed tail dims {5, 6, 7}.
     contrib = fit.join(instances, "instance_id").select(

@@ -33,8 +33,15 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for pandas UDF exchange (LIME ridge, as-of merge fallback).
+    # Arrow for pandas exchange (as-of merge fallback).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+#: Streaming confs right for the sessions ``get_spark()`` builds, whose
+#: streaming queries are short-lived with ephemeral checkpoints. Not
+#: forced by ``configure()``: a host's long-lived session keeps its own
+#: checkpoint corruption detection and state-store policy.
+STREAMING_CONFS: dict[str, str] = {
     # r17: Spark 4.1's ChecksumCheckpointFileManager leaks its per-manager
     # thread pool when a streaming query terminates (~112 threads PER
     # availableNow query, measured): a long-lived session accumulates
@@ -55,7 +62,8 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an externally-owned session (best-effort)."""
+    """Apply RUNTIME_CONFS to an externally-owned session (best-effort);
+    STREAMING_CONFS stay the owner's choice."""
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
@@ -86,7 +94,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for key, value in RUNTIME_CONFS.items():
+    for key, value in {**RUNTIME_CONFS, **STREAMING_CONFS}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 

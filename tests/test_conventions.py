@@ -204,3 +204,71 @@ def test_application_id_scanner_catches_a_hand_rolled_memo():
     assert not _application_id_uses(fstring, "plans/datapipe.py")
     assert _application_id_uses(fstring, "plans/vectors.py")
     assert not _application_id_uses('"""applicationId + uuid."""\n', "x.py")
+
+
+# ------------------------------------------------ the LIME fit pass
+
+
+def _grouped_fit_calls(source: str, rel: str) -> list[str]:
+    """``applyInPandas`` calls whose arguments reach ``_fit_group``: the
+    per-call shuffle that ``explain._fit_pass`` replaces."""
+    import ast
+
+    bad = []
+    for node in ast.walk(ast.parse(source)):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "applyInPandas"
+            and any(
+                (isinstance(sub, ast.Name) and sub.id == "_fit_group")
+                or (isinstance(sub, ast.Attribute) and sub.attr == "_fit_group")
+                for arg in [*node.args, *node.keywords]
+                for sub in ast.walk(arg)
+            )
+        ):
+            bad.append(f"{rel}:{node.lineno}")
+    return bad
+
+
+def test_lime_fits_do_not_group_by_instance():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    offenders = [
+        use
+        for path in sorted(root.rglob("*.py"))
+        for use in _grouped_fit_calls(
+            path.read_text(), path.relative_to(root).as_posix()
+        )
+    ]
+    assert not offenders, (
+        "groupBy(...).applyInPandas(_fit_group) shuffles neighborhoods the "
+        f"sampler already emits as contiguous runs — use explain._fit_pass: {offenders}"
+    )
+
+
+def test_grouped_fit_scanner_catches_a_planted_call():
+    planted = (
+        "from lime_on_spark_spark.lime import explain\n"
+        "def f(weighted, k):\n"
+        "    return weighted.groupBy('instance_id').applyInPandas(\n"
+        "        lambda pdf: explain._fit_group(pdf, k, 1.0, with_words=False),\n"
+        "        schema=explain.TABULAR_SCHEMA,\n"
+        "    )\n"
+        "def g(w):\n"
+        "    return w.groupBy('i').applyInPandas(func=_fit_group, schema='x int')\n"
+    )
+    assert _grouped_fit_calls(planted, "plans/x.py") == ["plans/x.py:3", "plans/x.py:8"]
+    # A mention outside an applyInPandas call (a comment, the adapter itself,
+    # another grouped function) is not the shuffle.
+    clean = (
+        "# applyInPandas(_fit_group) was the old shape\n"
+        "def _fit_group(pdf):\n"
+        "    return pdf\n"
+        "def h(w, fit):\n"
+        "    return w.groupBy('i').applyInPandas(fit, schema='x int')\n"
+    )
+    assert not _grouped_fit_calls(clean, "plans/x.py")

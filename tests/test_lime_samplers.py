@@ -5,8 +5,11 @@ neighborhood in one `mapInArrow` pass driven by a NumPy twin of Spark's
 `xxhash64`. These tests pin them bit for bit against references assembled
 here from `with_samples` + `_bernoulli_keep` and the column expressions the
 samplers used before (interpreted `transform`/`zip_with`/`aggregate`), and
-pin the explainers against the reference pipeline with the label window and
-the `zip_with` distance.
+pin the explainers against the reference pipeline with the label window,
+the `zip_with` distance and the `groupBy(instance_id).applyInPandas` fit.
+The explainers' own fit pass runs without a shuffle, keeps that equality
+when neighborhoods span Arrow batches and partitions, and refuses
+interleaved instance runs.
 """
 
 from __future__ import annotations
@@ -466,3 +469,82 @@ def test_explain_text_equals_reference(spark, sf_dir, bow):
         explain_text(spark, sf_dir, DOC_IDS, bow=bow),
         ref_explain_text(spark, sf_dir, DOC_IDS, bow=bow),
     )
+
+
+# --------------------------------------------------------------------------
+# The fit pass: each neighborhood fitted in the partition that built it
+# --------------------------------------------------------------------------
+def _explainers(spark, sf_dir):
+    from lime_on_spark_spark.lime.explain import (
+        explain_tabular,
+        explain_tabular_regression,
+        explain_text,
+    )
+    from lime_on_spark_spark.lime.image import explain_image
+
+    return {
+        "tabular": lambda: explain_tabular(spark, sf_dir, TAB_IDS),
+        "regression": lambda: explain_tabular_regression(spark, sf_dir, TAB_IDS),
+        "text": lambda: explain_text(spark, sf_dir, DOC_IDS),
+        "image": lambda: explain_image(spark, sf_dir, DOC_IDS),
+    }
+
+
+def test_explainers_run_without_a_shuffle_or_grouped_pandas_stage(spark, sf_dir):
+    for name, explain in _explainers(spark, sf_dir).items():
+        plan = explain()._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+
+
+def _spread(sampler):
+    """``sampler`` with its instance rows hash-partitioned three ways first."""
+    return lambda instances, **kwargs: sampler(
+        instances.repartition(3, "instance_id"), **kwargs
+    )
+
+
+def test_explainers_equal_reference_when_runs_span_batches_and_partitions(
+    spark, sf_dir, monkeypatch
+):
+    from lime_on_spark_spark.lime import explain, image
+    from lime_on_spark_spark.lime.explain import TABULAR_SCHEMA, _fit_group
+
+    monkeypatch.setattr(explain, "_tabular_samples", _spread(explain._tabular_samples))
+    monkeypatch.setattr(explain, "_text_samples", _spread(explain._text_samples))
+    block_means = image.block_means
+    monkeypatch.setattr(
+        image, "block_means", lambda *a: block_means(*a).repartition(3, "instance_id")
+    )
+    # Every neighborhood (at least 64 rows) spans three or more batches.
+    with temp_conf(spark, BATCH_CONF, "29"):
+        got = {name: explain() for name, explain in _explainers(spark, sf_dir).items()}
+        assert_same(got["tabular"], ref_explain_tabular(spark, sf_dir, TAB_IDS))
+        assert_same(
+            got["regression"], ref_explain_tabular(spark, sf_dir, TAB_IDS, regression=True)
+        )
+        assert_same(got["text"], ref_explain_text(spark, sf_dir, DOC_IDS))
+        monkeypatch.setattr(
+            image, "_fit_pass",
+            lambda df, k, alpha: df.groupBy("instance_id").applyInPandas(
+                lambda pdf: _fit_group(pdf, k, alpha, with_words=False),
+                schema=TABULAR_SCHEMA,
+            ),
+        )
+        assert_same(got["image"], _explainers(spark, sf_dir)["image"]())
+
+
+def test_fit_pass_raises_when_an_instance_run_is_interleaved(spark):
+    from lime_on_spark_spark.lime.explain import _fit_pass
+
+    rows = [
+        (iid, s, [1, s % 2], float(s), 1.0)
+        for iid in (1, 2, 1)
+        for s in range(3)
+    ]
+    frame = spark.createDataFrame(
+        rows, "instance_id bigint, sample_id int, z array<int>, y double, weight double"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="instance_id 1 appears again"):
+        _fit_pass(frame, k=1, alpha=1.0).collect()
+    assert _fit_pass(frame.filter("instance_id = 2"), k=1, alpha=1.0).count() == 1

@@ -9,7 +9,9 @@ argument) fails here rather than in a bench regression:
 * the manifest writer's vectorized (Arrow/orjson) and row-at-a-time
   spool paths produce identical parsed rows, zone stats and blooms;
 * the PQ subvector frame's pre-partitioning removes the per-iteration
-  argmin shuffle from the codes lineage.
+  argmin shuffle from the codes lineage;
+* the streaming thread-leak confs are set by ``get_spark()`` and left
+  alone by ``configure()`` on sessions the engine did not build.
 """
 from __future__ import annotations
 
@@ -244,3 +246,18 @@ def test_streaming_query_leaves_no_checkpoint_manager_threads(spark, tmp_path):
         and "ChecksumCheckpointFileManager" in arr[i].getName()
     ]
     assert leaked == [], f"leaked checkpoint-manager threads: {leaked[:5]}"
+
+
+def test_configure_leaves_streaming_confs_to_the_session_owner(spark):
+    """``get_spark()`` sets the two streaming confs above; ``configure()``,
+    which runs on sessions the engine did not build, must not force them
+    (checkpoint corruption detection stays on a host's own session)."""
+    from lime_on_spark_spark.session import STREAMING_CONFS, configure
+
+    foreign = spark.newSession()
+    for key in STREAMING_CONFS:
+        foreign.conf.unset(key)
+    configure(foreign)
+    settings = foreign._jsparkSession.sessionState().conf().getAllConfs()
+    assert [key for key in STREAMING_CONFS if settings.contains(key)] == []
+    assert configure(foreign).conf.get("spark.sql.session.timeZone") == "UTC"
