@@ -28,9 +28,9 @@ per query (broadcast), and only the L-row shortlist ever reads full
 vectors. Driver state is the centroid table + codebooks: O(n_cells*dim +
 M*K*dim/M) doubles, bounded by construction.
 
-Determinism contract: the coarse KMeans is seed-pinned, the PQ trainer is
-the kmeans.py discipline (lowest-id init, 6-dp rounding, lowest-cid ties),
-and every top-L/top-k window breaks ties on vec_id — two builds produce
+Determinism contract: the coarse KMeans is seed-pinned, the PQ trainer
+keeps pq.py's Lloyd contract (lowest-id init, 6-dp rounding, lowest-cid
+ties), and every top-L/top-k window breaks ties on vec_id — two builds produce
 identical codes and identical search results (pinned in pytest).
 """
 

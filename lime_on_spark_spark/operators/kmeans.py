@@ -2,29 +2,14 @@
 row D39; the honest training loop behind IVF-style cluster indexes and
 SemDeDup-style semantic dedup).
 
-Architecture = the canonical distributed Lloyd iteration:
-
-* centroids are DRIVER state — a k×d table of doubles, bounded by
-  construction (k=8, d=64 here; even k=65536, d=4096 is ~2 GB, never data-
-  sized). Each iteration re-broadcasts them as a tiny DataFrame.
-* assignment is a broadcast-nested-loop over the corpus: `crossJoin(
-  broadcast(centroids))` → squared-L2 via `zip_with`/`aggregate` (pure JVM
-  expressions, whole-stage codegen) → per-vector argmin via
-  `min(struct(dist, cid))` (map-side combinable, one shuffle on vec_id).
-* the centroid update is ONE shuffle: posexplode to (cid, pos, val) →
-  `avg` per (cid, pos) — map-side partial aggregation, k·d result rows.
-
-Determinism contract (what makes the unrolled SQL oracle possible):
-* init = the k lowest-vec_id vectors (no RNG);
-* distances rounded to 6 dp before the argmin; ties break to lowest cid;
-* updated centroid coordinates rounded to 6 dp each iteration — both
-  engines then iterate on IDENTICAL centroid values, so divergence cannot
-  compound across iterations.
-
-At 100 TB nothing changes shape: the corpus never materializes on the
-driver, each iteration is one broadcast + two shuffles, and cost is
-O(n·k·d / executors) per iteration — the same plan MLlib's KMeans lowers
-to, expressed in open DataFrame ops so the oracle can replay it.
+k-means is the engine's one Lloyd loop (`operators/pq.py`, whose docstring
+states the architecture and the determinism contract) with one subspace
+holding the whole vector and one K. At 100 TB nothing changes shape: the
+corpus never materializes on the driver, each iteration is one broadcast
+plus one update shuffle over a corpus partitioned once upfront, and cost
+is O(n·k·d / executors) per iteration — the same plan MLlib's KMeans
+lowers to, expressed in open DataFrame ops so the oracle below can replay
+it.
 """
 
 from __future__ import annotations
@@ -32,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lime_on_spark_spark.functions.vector import sq_l2
+from lime_on_spark_spark.operators.pq import _lloyd
 
 
 def lloyd_kmeans(emb: DataFrame, *, k: int = 8, iters: int = 3) -> DataFrame:
@@ -43,101 +28,24 @@ def lloyd_kmeans(emb: DataFrame, *, k: int = 8, iters: int = 3) -> DataFrame:
     assignments with `iters - 1` centroid updates in between (a1 c1 a2 c2
     a3 for iters=3), matching the unrolled oracle CTE chain.
     """
-    spark = emb.sparkSession
-    # r17 (the pq.py discipline, guide §2.4): persist the projected corpus
-    # PRE-PARTITIONED on vec_id — hash partitioning on the argmin's own
-    # grouping key makes every iteration's assignment aggregation (and the
-    # returned assignment's lineage) exchange-free, so one upfront shuffle
-    # replaces `iters` per-iteration ones. The ContextCleaner reclaims the
-    # blocks when the returned plan is dereferenced (the prefix_sum.py
-    # note); partition count stays conf-driven.
-    embd = (
-        emb.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-        .repartition("vec_id")
-        .persist()
+    whole = emb.select(
+        "vec_id",
+        F.lit(0).alias("m"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("sv"),
     )
-
-    from lime_on_spark_spark.session import temp_conf
-
-    # Deterministic seed: the k lowest-id vectors. Bounded driver collect
-    # (k rows), same class as IVF's centroid table. AQE off for the
-    # operator's bounded internal actions (the pq.py rationale: adaptive
-    # stage jobs on tiny bounded subplans are pure scheduler overhead).
-    with temp_conf(spark, "spark.sql.adaptive.enabled", "false"):
-        init = (
-            embd.filter(F.col("vec_id") < k)
-            .select(F.col("vec_id").alias("cid"), F.col("v").alias("cvec"))
-            .collect()
-        )
-    cent = [(int(r["cid"]), [float(x) for x in r["cvec"]]) for r in init]
-
-    assigned: DataFrame | None = None
-    for it in range(iters):
-        cent_df = spark.createDataFrame(cent, "cid bigint, cvec array<double>")
-        scored = embd.crossJoin(F.broadcast(cent_df)).select(
-            "vec_id",
-            "cid",
-            F.round(sq_l2(F.col("v"), F.col("cvec")), 6).alias("dist"),
-            "v",
-        )
-        if it < iters - 1:
-            # Update iteration: v RIDES the argmin struct so the centroid
-            # update needs no join back to embd (the r16 pq.py trick —
-            # previously one corpus-scale shuffle join per iteration).
-            # The winner is unchanged: cid is unique within a vec_id
-            # group, so comparison never reaches v; and v is
-            # group-constant, so the winning struct carries exactly the
-            # group's vector. One-shuffle update; k·d rows of driver state.
-            upd = (
-                scored.groupBy("vec_id")
-                .agg(F.min(F.struct("dist", "cid", "v")).alias("m"))
-                .select(
-                    F.col("m.cid").alias("cid"),
-                    F.posexplode("m.v").alias("pos", "val"),
-                )
-                .groupBy("cid", "pos")
-                .agg(F.round(F.avg("val"), 6).alias("cv"))
-            )
-            with temp_conf(spark, "spark.sql.adaptive.enabled", "false"):
-                rows = upd.collect()
-            by_cid: dict[int, dict[int, float]] = {}
-            for r in rows:
-                by_cid.setdefault(int(r["cid"]), {})[int(r["pos"])] = float(r["cv"])
-            # Empty clusters drop out (no assigned members -> no row), on
-            # both engines identically.
-            cent = [
-                (cid, [dims[p] for p in sorted(dims)])
-                for cid, dims in sorted(by_cid.items())
-            ]
-        else:
-            # Final iteration: the returned assignment — plain (dist, cid)
-            # argmin, no vector in the aggregation state. struct ordering
-            # is (dist, cid) lexicographic, so the min is the nearest
-            # centroid with lowest-cid tie-break — map-side combinable,
-            # unlike a row_number window.
-            assigned = (
-                scored.groupBy("vec_id")
-                .agg(F.min(F.struct("dist", "cid")).alias("m"))
-                .select(
-                    "vec_id",
-                    F.col("m.cid").alias("cid"),
-                    F.col("m.dist").alias("dist"),
-                )
-            )
-    assert assigned is not None
-    return assigned
+    codes, _ = _lloyd(whole, m_subspaces=1, ks=(k,), iters=iters)
+    return codes.select("vec_id", "cid", "dist")
 
 
 def kmeans_oracle_ctes(*, k: int = 8, iters: int = 3) -> str:
     """DuckDB CTE chain replaying :func:`lloyd_kmeans` exactly.
 
     Emits `emb`, `un`, `c0`, then a{i}/c{i} per iteration; the final
-    assignment CTE is `a{iters}`. Shared by every oracle that consumes the
-    clustering (d39 inertia profile, d40 semantic dedup) so the two engines
-    can never drift apart on the clustering itself.
+    assignment CTE is `a{iters}`. `c0` seeds from the k lowest distinct
+    vec_ids ranked 0..k-1 as cid, as the engine does. Shared by every
+    oracle that consumes the clustering (d39 inertia profile, d40 semantic
+    dedup, d55 purity) so the two engines can never drift apart on the
+    clustering itself.
     """
     parts = [
         """emb AS (
@@ -146,7 +54,10 @@ def kmeans_oracle_ctes(*, k: int = 8, iters: int = 3) -> str:
         SELECT vec_id, unnest(v) AS val, generate_subscripts(v, 1) AS pos
         FROM emb
     ), c0 AS (
-        SELECT vec_id AS cid, v AS cvec FROM emb WHERE vec_id < %d
+        SELECT cid, cvec FROM (
+            SELECT dense_rank() OVER (ORDER BY vec_id) - 1 AS cid, v AS cvec
+            FROM emb)
+        WHERE cid < %d
     )"""
         % k
     ]

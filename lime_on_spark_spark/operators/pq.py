@@ -1,27 +1,43 @@
-"""Product quantization (Jégou et al. 2011) over embedding columns — the
-memory-compression half of the ANN stack (IVF routes the search,
-`operators/ivf.py`; PQ shrinks what each cell stores: 64 float32 = 256
-bytes -> M=8 one-byte codes, 32x).
+"""The engine's Lloyd loop, and product quantization (Jégou et al. 2011)
+built on it — the memory-compression half of the ANN stack (IVF routes the
+search, `operators/ivf.py`; PQ shrinks what each cell stores: 64 float32 =
+256 bytes -> M=8 one-byte codes, 32x).
 
-Architecture mirrors `operators/kmeans.py`'s distributed Lloyd loop,
-generalized to M independent subspaces trained IN THE SAME JOBS:
+Lloyd architecture (:func:`_lloyd`). The loop runs over a (vec_id, m, sv)
+frame: M rows per vector, one per subspace. PQ feeds it the corpus split
+into M subvectors; k-means (`operators/kmeans.py`) feeds it the whole
+vector as m = 0. Every K of a variant set trains in the same jobs,
+tagged kk.
 
-* the corpus explodes once to (vec_id, m, subvector) — M rows per vector,
-  subvector length d/M;
-* centroids are DRIVER state keyed (m, cid) — M*K*(d/M) = K*d doubles,
-  bounded by construction — re-broadcast each iteration;
+* the frame is persisted, so its scan runs once and not once per action,
+  and PRE-PARTITIONED on vec_id: hash partitioning on a subset of the
+  argmin's grouping keys makes every iteration's assignment aggregation
+  (and the returned codes' lineage) exchange-free, so one upfront shuffle
+  replaces one per iteration. The ContextCleaner reclaims
+  the blocks when the returned plan is dereferenced (the prefix_sum.py
+  note); the partition count stays conf-driven;
+* centroids are DRIVER state keyed (kk, m, cid) — ΣK·d doubles, bounded by
+  construction — re-broadcast each iteration;
 * assignment is an EQUI-join on the subspace id m (broadcast hash, never a
-  cross join) -> squared-L2 -> per-(vec_id, m) argmin via
+  cross join) -> squared-L2 -> per-(kk, vec_id, m) argmin via
   `min(struct(dist, cid))` (map-side combinable);
 * the centroid update is one shuffle: the winning subvector rides the
   argmin struct (cid breaks every tie before sv is compared, and sv is
-  group-constant), then posexplode -> avg per (m, cid, pos) — no join
-  back to the subvector frame.
+  group-constant), then posexplode -> avg per (kk, m, cid, pos) — no join
+  back to the frame;
+* the driver collects run with AQE off: their subplans are bounded and
+  their only shuffle is the tiny update agg, so adaptive re-planning adds
+  a scheduler job per exchange and buys nothing. Values do not depend on
+  it: the cached partitioning fixes the avg's input layout, and the 6-dp
+  round absorbs reduce-order noise.
 
-Determinism contract (the kmeans.py discipline): init = the K lowest-
-vec_id subvectors per subspace, distances rounded to 6 dp before the
-argmin with lowest-cid tie-break, centroid coordinates rounded to 6 dp per
-iteration — two fits produce identical codes.
+Determinism contract (what lets `kmeans.kmeans_oracle_ctes` replay the loop
+in DuckDB exactly): init = the K lowest DISTINCT vec_ids, ranked 0..K-1 as
+cids — never `vec_id < K`, which trains fewer (or zero) centroids on ids
+that are 1-based, offset, or filtered; distances rounded to 6 dp before the
+argmin, ties to the lowest cid; centroid coordinates rounded to 6 dp per
+iteration, so two fits iterate on identical centroids and produce
+identical codes; a cluster with no members drops out.
 
 ADC (asymmetric distance computation): a query never gets encoded — its
 exact distance to every centroid forms a (m, cid) -> dt lookup table
@@ -54,62 +70,33 @@ def _subvectors(emb: DataFrame, m_subspaces: int, sub: int) -> DataFrame:
     ).select("vec_id", "e.m", "e.sv")
 
 
-def train_pq_variants(
-    emb: DataFrame,
-    *,
-    dim: int,
-    m_subspaces: int = 8,
-    ks: tuple[int, ...] = (16,),
-    iters: int = 3,
+def _lloyd(
+    svf: DataFrame, *, m_subspaces: int, ks: tuple[int, ...], iters: int
 ) -> tuple[DataFrame, dict[tuple[int, int, int], list[float]]]:
-    """Train per-subspace codebooks for EVERY K in ``ks`` in the SAME jobs
-    (centroids tagged by their variant, so the capacity-comparison
-    training d91 needs costs one pass, not one per K).
+    """Run `iters` Lloyd assignments over ``svf(vec_id, m, sv)``, which has
+    ``m_subspaces`` rows per vec_id, for every K in ``ks``; `iters - 1`
+    centroid updates fall in between (a1 c1 a2 c2 a3 for iters=3).
 
-    Returns ``(codes, centroids)``: codes = (kk, vec_id, m, cid, dist)
-    with dist the rounded squared L2 to the winning centroid (the
-    per-subspace quantization error), centroids = {(kk, m, cid): coords}
-    driver state (bounded: sum(K)*dim doubles).
+    Returns ``(codes, centroids)``: codes = (kk, vec_id, m, cid, dist), the
+    final assignment with dist the rounded squared L2 to the winning
+    centroid; centroids = {(kk, m, cid): coords}, the ones that assignment
+    used.
     """
-    spark = emb.sparkSession
-    sub = dim // m_subspaces
-    # Every iteration's assignment AND update re-reads the exploded
-    # subvector frame; persist so the scan+explode runs once, not once
-    # per action. Stays cached for the returned codes' lineage too — the
-    # ContextCleaner reclaims it on dereference (the prefix_sum.py note).
-    # r17 (guide §2.4): persist PRE-PARTITIONED on vec_id — hash
-    # partitioning on a subset of the grouping keys satisfies the
-    # per-(kk, vec_id, m) argmin's clustering, so EVERY iteration's
-    # assignment aggregation (and the returned codes frame, and the
-    # codes-side of IVFADC's cell join) runs without its own corpus
-    # shuffle: one upfront exchange replaces `iters` per-iteration ones.
-    # Partition count stays conf-driven (spark.sql.shuffle.partitions /
-    # AQE), never a local constant.
-    svf = _subvectors(emb, m_subspaces, sub).repartition("vec_id").persist()
-
-    # Init = the K lowest DISTINCT vec_ids, ranked 0..K-1 as cids — never
-    # `vec_id < K`, which silently trains fewer (or zero) centroids on any
-    # corpus whose ids are 1-based, offset, or non-contiguous after an
-    # upstream filter. Driver state is O(K) ids.
-    kmax = max(ks)
-    # ONE top-(K*M) collect fetches both the K lowest distinct vec_ids AND
-    # their subvectors (r16 optimization — previously a distinct+limit
-    # job followed by a filter+collect job): every vec_id owns exactly
-    # m_subspaces rows of svf by construction, so the K*M lowest-ordered
-    # rows cover the K lowest ids; one spare id's rows guard the slice.
-    # r17: the init TakeOrdered also materializes the persisted svf; with
-    # AQE off it is one DAG job instead of one per exchange (the same
-    # bounded-subplan rationale as the update collects below). The cached
-    # layout is the repartition's static shuffle-partition count — conf-
-    # driven, deterministic for a fixed config.
     from lime_on_spark_spark.session import temp_conf
 
+    spark = svf.sparkSession
+    svf = svf.repartition("vec_id").persist()
+
+    # Every vec_id owns m_subspaces rows, so the (K_max+1)·M lowest-ordered
+    # rows hold the K lowest distinct ids' subvectors plus one spare id;
+    # the collect also materializes the persisted frame.
+    kmax = max(ks)
     with temp_conf(spark, "spark.sql.adaptive.enabled", "false"):
         init = (
             svf.select("vec_id", "m", F.col("sv").alias("cvec"))
             .orderBy("vec_id", "m")
             .limit((kmax + 1) * m_subspaces)
-            .collect()
+            .collect()  # bounded: (K_max+1)·M rows.
         )
     low_ids = sorted({r["vec_id"] for r in init})[:kmax]
     rank = {vid: i for i, vid in enumerate(low_ids)}
@@ -127,58 +114,34 @@ def train_pq_variants(
             [(kk, m, c, v) for (kk, m, c), v in sorted(cent.items())],
             "kk int, m int, cid bigint, cvec array<double>",
         )
-        joined = svf.join(F.broadcast(cent_df), "m")
+        scored = svf.join(F.broadcast(cent_df), "m").select(
+            "kk", "vec_id", "m", "cid", "sv",
+            F.round(sq_l2(F.col("sv"), F.col("cvec")), 6).alias("dist"),
+        )
         if it < iters - 1:
-            # Update iteration: sv RIDES the argmin struct so the centroid
-            # update needs no join back to svf (r16 — previously a shuffle
-            # join of the corpus-scale codes frame against svf once per
-            # iteration). The winner is unchanged: cid is unique within a
-            # (kk, vec_id, m) group, so comparison never reaches sv; and
-            # sv is group-constant, so the winning struct carries exactly
-            # the group's subvector.
-            agg = (
-                joined.select(
-                    "kk", "vec_id", "m", "cid", "sv",
-                    F.round(sq_l2(F.col("sv"), F.col("cvec")), 6).alias(
-                        "dist"
-                    ),
-                )
-                .groupBy("kk", "vec_id", "m")
+            upd = (
+                scored.groupBy("kk", "vec_id", "m")
                 .agg(F.min(F.struct("dist", "cid", "sv")).alias("x"))
+                .select(
+                    "kk", "m",
+                    F.col("x.cid").alias("cid"),
+                    F.posexplode("x.sv").alias("pos", "val"),
+                )
+                .groupBy("kk", "m", "cid", "pos")
+                .agg(F.round(F.avg("val"), 6).alias("cv"))
             )
-            upd = agg.select(
-                "kk", "m",
-                F.col("x.cid").alias("cid"),
-                F.posexplode("x.sv").alias("pos", "val"),
-            ).groupBy("kk", "m", "cid", "pos").agg(
-                F.round(F.avg("val"), 6).alias("cv")
-            )
-            # r17: AQE adds one scheduler job per materialized exchange;
-            # this subplan is bounded (sum(K)*dim rows post-aggregation)
-            # and its only shuffle is the tiny update agg, so adaptive
-            # re-planning buys nothing — run the collect as one DAG job
-            # per iteration (VERDICT item 4). Values are unchanged: the
-            # cached svf partitioning (not AQE) fixes the avg's input
-            # layout, and the 6-dp round absorbs reduce-order noise.
             with temp_conf(spark, "spark.sql.adaptive.enabled", "false"):
-                rows = upd.collect()
+                rows = upd.collect()  # bounded: ΣK·d rows.
             nxt: dict[tuple[int, int, int], dict[int, float]] = {}
             for r in rows:
                 nxt.setdefault(
                     (int(r["kk"]), int(r["m"]), int(r["cid"])), {}
                 )[int(r["pos"])] = float(r["cv"])
-            # Empty clusters drop out per (variant, subspace), deterministically.
             cent = {
                 key: [dims[p] for p in sorted(dims)]
                 for key, dims in sorted(nxt.items())
             }
         else:
-            # Final iteration: the returned codes frame — plain
-            # (dist, cid) argmin, no sv in the shuffle.
-            scored = joined.select(
-                "kk", "vec_id", "m", "cid",
-                F.round(sq_l2(F.col("sv"), F.col("cvec")), 6).alias("dist"),
-            )
             codes = (
                 scored.groupBy("kk", "vec_id", "m")
                 .agg(F.min(F.struct("dist", "cid")).alias("x"))
@@ -190,6 +153,31 @@ def train_pq_variants(
             )
     assert codes is not None
     return codes, cent
+
+
+def train_pq_variants(
+    emb: DataFrame,
+    *,
+    dim: int,
+    m_subspaces: int = 8,
+    ks: tuple[int, ...] = (16,),
+    iters: int = 3,
+) -> tuple[DataFrame, dict[tuple[int, int, int], list[float]]]:
+    """Train per-subspace codebooks for EVERY K in ``ks`` in the SAME jobs
+    (centroids tagged by their variant, so the capacity-comparison
+    training d91 needs costs one pass, not one per K).
+
+    Returns ``(codes, centroids)``: codes = (kk, vec_id, m, cid, dist)
+    with dist the rounded squared L2 to the winning centroid (the
+    per-subspace quantization error), centroids = {(kk, m, cid): coords}
+    driver state (bounded: sum(K)*dim doubles).
+    """
+    return _lloyd(
+        _subvectors(emb, m_subspaces, dim // m_subspaces),
+        m_subspaces=m_subspaces,
+        ks=ks,
+        iters=iters,
+    )
 
 
 def train_pq(

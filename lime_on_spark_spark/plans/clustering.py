@@ -1,7 +1,8 @@
 """Embedding clustering + semantic dedup (SURVEY.md §2l rows D39/D40).
 
-D39 is a DataFrame-native Lloyd's k-means (`operators/kmeans.py`): driver-
-held k×d centroids re-broadcast per iteration, JVM-expression distances,
+D39 is a DataFrame-native Lloyd's k-means (`operators/kmeans.py`, the
+one-subspace case of `operators/pq.py`'s Lloyd loop): driver-held k×d
+centroids re-broadcast per iteration, JVM-expression distances,
 map-side-combinable argmin, one-shuffle centroid updates. Every float is
 rounded at the iteration boundary, so a DuckDB oracle can replay the WHOLE
 training loop as an unrolled CTE chain and the two engines agree exactly.
@@ -16,9 +17,10 @@ threshold, so no connected-components pass is needed and the oracle is a
 single self-join.
 
 Scale notes: at 100 TB you raise k so cluster sizes stay bounded (SemDeDup
-used k=11k on LAION); assignment stays broadcast-nested-loop, the within-
-cluster join shuffles on cid (AQE skew-split handles hot clusters), and
-nothing materializes on the driver but the k×d centroid table.
+used k=11k on LAION); assignment stays a broadcast-hash join of the
+corpus against the centroid table, the within-cluster join shuffles on
+cid (AQE skew-split handles hot clusters), and nothing materializes on
+the driver but the k×d centroid table.
 """
 
 from __future__ import annotations

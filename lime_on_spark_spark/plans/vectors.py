@@ -1338,8 +1338,8 @@ def d80_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # half of the ANN stack next to d32's int8 scalar quantizer and d63b's IVF
 # router — 64 float32 (256 B) -> 8 one-byte codes (32x), searched by ADC
 # (sum of M table lookups; the scan touches only codes, full vectors are
-# needed solely to rescore the shortlist). Training is the kmeans.py Lloyd
-# loop generalized to M subspaces in the same jobs (operators/pq.py).
+# needed solely to rescore the shortlist). Training is the engine's one
+# Lloyd loop over M subspaces in the same jobs (operators/pq.py).
 # Verdict conversion (the l10v/d83 pattern): structural scalars are
 # SQL-exact; model-dependent facts are booleans with wide measured margins
 # on this structureless corpus —

@@ -272,3 +272,85 @@ def test_grouped_fit_scanner_catches_a_planted_call():
         "    return w.groupBy('i').applyInPandas(fit, schema='x int')\n"
     )
     assert not _grouped_fit_calls(clean, "plans/x.py")
+
+
+# ------------------------------------------------ one Lloyd loop
+
+
+def _lloyd_argmin_functions(source: str, rel: str) -> list[str]:
+    """Functions holding a Lloyd argmin ``F.min(F.struct("dist", "cid", ...))``,
+    named ``rel:function``; each function is listed once."""
+    import ast
+
+    def is_argmin(node) -> bool:
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "min"
+            and node.args
+            and isinstance(node.args[0], ast.Call)
+        ):
+            return False
+        inner = node.args[0]
+        name = getattr(inner.func, "attr", getattr(inner.func, "id", None))
+        keys = [a.value for a in inner.args[:2] if isinstance(a, ast.Constant)]
+        return name == "struct" and keys == ["dist", "cid"]
+
+    found: list[str] = []
+
+    def visit(node, owner: str | None) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            owner = node.name
+        elif is_argmin(node) and f"{rel}:{owner}" not in found:
+            found.append(f"{rel}:{owner}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    visit(ast.parse(source), None)
+    return found
+
+
+def test_one_lloyd_argmin_in_the_package():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    owners = [
+        owner
+        for path in sorted(root.rglob("*.py"))
+        for owner in _lloyd_argmin_functions(
+            path.read_text(), path.relative_to(root).as_posix()
+        )
+    ]
+    assert len(owners) == 1, (
+        "the Lloyd argmin min(struct(dist, cid, ...)) must live in one "
+        f"function — call pq._lloyd instead of copying the loop: {owners}"
+    )
+
+
+def test_lloyd_argmin_scanner_catches_a_planted_copy():
+    planted = (
+        "from pyspark.sql import functions as F\n"
+        "def train(svf):\n"
+        "    upd = svf.groupBy('vec_id').agg(F.min(F.struct('dist', 'cid', 'sv')))\n"
+        "    return svf.groupBy('vec_id').agg(F.min(F.struct('dist', 'cid')))\n"
+        "def copied_kmeans(embd):\n"
+        "    def assign(scored):\n"
+        "        return scored.agg(F.min(F.struct('dist', 'cid', 'v')).alias('m'))\n"
+        "    return assign(embd)\n"
+    )
+    assert _lloyd_argmin_functions(planted, "operators/x.py") == [
+        "operators/x.py:train",
+        "operators/x.py:assign",
+    ]
+    # Other argmins (other keys, another order) and mentions in comments or
+    # strings are not the Lloyd loop.
+    clean = (
+        "# F.min(F.struct('dist', 'cid')) was copied here once\n"
+        "def nearest(df):\n"
+        "    doc = \"F.min(F.struct('dist', 'cid'))\"\n"
+        "    best = F.min(F.struct('score', 'id'))\n"
+        "    return df.agg(best, F.min(F.struct('cid', 'dist')))\n"
+    )
+    assert not _lloyd_argmin_functions(clean, "operators/x.py")

@@ -190,6 +190,62 @@ def test_pq_init_invariant_to_vec_id_base(spark, sf_dir):
     assert got == want
 
 
+@pytest.mark.parametrize("shift", [1, 10_000])
+def test_kmeans_init_invariant_to_vec_id_base(spark, sf_dir, shift):
+    """k-means seeds like PQ, from the k LOWEST vec_ids: on ids shifted by
+    ``shift`` all k centroids still train, the assignment equals the
+    0-based one modulo the shift, and the DuckDB oracle chain replayed over
+    the shifted table agrees with the engine."""
+    import duckdb
+
+    from lime_on_spark_spark.operators.kmeans import (
+        kmeans_oracle_ctes,
+        lloyd_kmeans,
+    )
+    from lime_on_spark_spark.sources.catalog import load_table
+
+    k, iters = 8, 2
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("vec_id") < 64)
+    )
+    shifted = emb.select((F.col("vec_id") + shift).alias("vec_id"), "embedding")
+    # After one assignment every seed is its own nearest centroid, so each
+    # of the k seeded centroids owns at least one vector.
+    seeded = lloyd_kmeans(shifted, k=k, iters=1).collect()
+    assert {r["cid"] for r in seeded} == set(range(k))
+
+    def assignment(df, base):
+        return {
+            r["vec_id"] - base: (r["cid"], r["dist"])
+            for r in lloyd_kmeans(df, k=k, iters=iters).collect()
+        }
+
+    got = assignment(shifted, shift)
+    assert len(got) == 64
+    assert got == assignment(emb, 0)
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT vec_id + {shift} AS vec_id, "
+            f"embedding FROM read_parquet('{sf_dir}/embeddings.parquet') "
+            "WHERE vec_id < 64"
+        )
+        oracle = con.execute(
+            f"WITH {kmeans_oracle_ctes(k=k, iters=iters)} "
+            f"SELECT vec_id, cid, dist FROM a{iters}"
+        ).fetchall()
+    finally:
+        con.close()
+    assert {v - shift: c for v, c, _ in oracle} == {
+        v: c for v, (c, _) in got.items()
+    }
+    for v, _, dist in oracle:
+        assert dist == pytest.approx(got[v - shift][1], abs=1e-6)
+
+
 def test_ivfadc_two_builds_identical_and_budget_enforced(spark, sf_dir):
     """d92's composed index is deterministic: two independent builds (cache
     cleared between) produce identical (cell, vec_id, m) -> cid codes and

@@ -240,7 +240,17 @@ def test_d39_kmeans_assignment_broadcasts_centroids(spark, sf_dir):
     """The Lloyd assignment is corpus x broadcast(k centroids): the tiny
     centroid side must broadcast; the corpus must never shuffle for it."""
     plan = _plan(_q(spark, sf_dir, "d39_kmeans_lloyd"))
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    # The join's corpus side is the cached, pre-partitioned frame itself:
+    # no exchange between its scan and the join.
+    lines = plan.splitlines()
+    join = next(i for i, line in enumerate(lines) if "BroadcastHashJoin" in line)
+    scan = next(
+        i for i in range(join, len(lines)) if "InMemoryTableScan" in lines[i]
+    )
+    assert not any("Exchange" in line for line in lines[join + 1 : scan]), plan
 
 
 def test_d47_chunking_is_scan_stage(spark, sf_dir):
