@@ -2,7 +2,10 @@
 
 Two entry paths:
 
-* ``get_spark()`` — builds a local session (tests, bench).
+* ``get_spark()`` — builds a local session (tests, bench). Its Python
+  processes start with ``_site/sitecustomize.py``, which installs the
+  zipimport fixes of ``_zipimport.py`` (the compile cache included) before
+  pyspark is imported.
 * ``configure(spark)`` — applies the runtime-settable confs to a session we
   did NOT build (the verify driver owns its own ``SparkSession``); every
   catalog load calls this so the engine works under a foreign session.
@@ -20,6 +23,9 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: Directory holding only the worker start-up hook ``sitecustomize.py``.
+WORKER_HOOK_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_site")
 
 #: Confs that are runtime-settable (spark.conf.set works after session start).
 RUNTIME_CONFS: dict[str, str] = {
@@ -96,7 +102,20 @@ def get_spark(
     )
     for key, value in {**RUNTIME_CONFS, **STREAMING_CONFS}.items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _add_worker_hook(spark.sparkContext.environment)
+    return spark
+
+
+def _add_worker_hook(env: dict[str, str]) -> None:
+    """Append the start-up hook's directory to the workers' PYTHONPATH in a
+    context's worker environment, which holds the value its
+    ``spark.executorEnv.PYTHONPATH`` resolved to from any source (defaults
+    file, submit arguments, builder). Python functions, data sources and
+    streaming runners created afterwards carry it to their processes."""
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if WORKER_HOOK_DIR not in parts:
+        env["PYTHONPATH"] = os.pathsep.join(parts + [WORKER_HOOK_DIR])
 
 
 #: The engine's one session-scoped memo: plan handles, fitted models, index

@@ -1493,23 +1493,26 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     if key_col not in fields:
         raise ValueError(f"MERGE key column not in schema: {key_col!r}")
 
-    from pyspark.sql import functions as _F
-
     # Pin ONE evaluation of the updates plan: validation, the key-set
     # collect, and the spool job below would otherwise each recompute it —
     # a nondeterministic source (sample(), a re-read of a changing table)
     # could then be validated against different rows than it spools,
     # publishing a silently torn snapshot.
     updates = updates.localCheckpoint(eager=True)
-    counts = updates.agg(
-        _F.count(_F.lit(1)).alias("n"),
-        _F.countDistinct(key_col).alias("d"),
-        _F.count(key_col).alias("nn"),
-    ).first()
-    if counts["n"] != counts["d"] or counts["nn"] != counts["n"]:
+    rows = updates.select(key_col).collect()  # bounded: one row per update key
+    # Validate from the collected keys, counting as Spark's count(*) and
+    # countDistinct(key) would: NULLs are not keys, and every NaN is one
+    # distinct key (0.0 and -0.0 already are one).
+    nan = float("nan")
+    keys = frozenset(
+        nan if isinstance(k, float) and k != k else k
+        for (k,) in rows
+        if k is not None
+    )
+    if len(rows) != len(keys):  # a duplicate or a NULL key
         raise ValueError(
             f"MERGE updates must be non-NULL-unique on {key_col!r}: "
-            f"{counts['n']} rows, {counts['d']} distinct keys"
+            f"{len(rows)} rows, {len(keys)} distinct keys"
         )
 
     # Matched-row scan: one task per candidate file, update key set in the
@@ -1517,9 +1520,6 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     # candidate list is ZONE-PRUNED first with the key column's manifest
     # stats (the s16/s19 machinery): a file whose [min, max] zone holds
     # none of the update keys is never opened.
-    keys = frozenset(
-        r[0] for r in updates.select(key_col).collect()
-    )
     sorted_keys = sorted(keys)
     # COLUMN MAPPING (s33): the scan and stats are keyed physical.
     cmap = manifest.get("column_mapping", {})
@@ -1691,7 +1691,7 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
                 }
             )
         rows_updated = len(matched_keys)
-        rows_inserted = int(counts["n"]) - rows_updated
+        rows_inserted = len(rows) - rows_updated
         # ROW TRACKING (s37): updated rows are delete+insert — the
         # re-inserted rows claim FRESH ids (documented divergence from
         # Delta row tracking's materialized preservation).

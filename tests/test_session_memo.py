@@ -110,3 +110,33 @@ def test_d94_then_d95_shares_exact_arm(spark, sf_dir, fresh_memo):
     # d95 reads only embeddings: no new table miss, at least one hit.
     assert stats["table"]["misses"] == tables["misses"]
     assert stats["table"]["hits"] > tables["hits"]
+
+
+def test_d39_d40_d55_share_one_clustering(spark, sf_dir, fresh_memo):
+    """d39, d40 and d55 read the same k=8, 3-iteration clustering: the first
+    row trains it, the other two construct without a Spark job (none of
+    the Lloyd init and update collects) and return the rows they return
+    when each trains its own."""
+    from lime_on_spark_spark.plans.registry import queries
+
+    names = ("d39_kmeans_lloyd", "d40_semantic_dedup", "d55_cluster_purity")
+    tracker = spark.sparkContext.statusTracker()
+    got = {}
+    try:
+        for name in names:
+            spark.sparkContext.setJobGroup(f"memo-{name}", name)
+            df = queries()[name](spark, sf_dir)
+            got[name] = (
+                len(tracker.getJobIdsForGroup(f"memo-{name}")),
+                sorted(df.collect()),  # bounded: k rows
+            )
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert session.memo_stats()["kmeans"] == {"hits": 2, "misses": 1}
+    assert got["d39_kmeans_lloyd"][0] > 0
+    assert got["d40_semantic_dedup"][0] == 0
+    assert got["d55_cluster_purity"][0] == 0
+
+    for name in names:
+        session._MEMO.pop(("kmeans", sf_dir, 8, 3))
+        assert sorted(queries()[name](spark, sf_dir).collect()) == got[name][1]
