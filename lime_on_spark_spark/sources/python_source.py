@@ -179,13 +179,13 @@ except ImportError:  # pragma: no cover — stdlib json path stays correct
 
 
 def _spool_plain_batch(batch, fh) -> None:
-    """Spool one Arrow RecordBatch as JSON lines (no per-row rules).
+    """Write one Arrow RecordBatch as JSON lines, keys in schema order —
+    the one encoder of every data file (see :class:`_Spool`).
 
-    orjson when every float is finite — orjson silently rewrites NaN/
-    Infinity to null, while the row-at-a-time path wrote bare NaN/Infinity
-    tokens (stdlib json), so non-finite batches keep the stdlib encoder to
-    preserve the on-disk values exactly. Key order (schema order) and the
-    parsed-back values are identical either way; only whitespace differs,
+    orjson when every float is finite. orjson rewrites NaN/Infinity to
+    null, so a batch holding one keeps the stdlib encoder, whose bare
+    NaN/Infinity/-Infinity tokens the reader's Arrow parser reads back.
+    The parsed values are identical either way; only whitespace differs,
     which no reader observes (every consumer parses the line)."""
     rows = batch.to_pylist()
     if _orjson is not None:
@@ -201,8 +201,7 @@ def _spool_plain_batch(batch, fh) -> None:
             d = _orjson.dumps
             fh.write(b"".join(d(r) + b"\n" for r in rows))
             return
-    for vals in rows:
-        fh.write((_json.dumps(vals) + "\n").encode("utf-8"))
+    fh.write("".join(_json.dumps(r) + "\n" for r in rows).encode("utf-8"))
 
 
 def _bloom_bit_positions(column: str, value, m: int, k: int) -> list[int]:
@@ -210,7 +209,8 @@ def _bloom_bit_positions(column: str, value, m: int, k: int) -> list[int]:
     (the repo-wide determinism discipline) and shared verbatim by the
     writer's insert and the reader's membership probe, so the two sides
     can never drift. Values are serialized as str(value); only str/int
-    values are bloomable (see JsonManifestWriter._bloomable)."""
+    values are bloomable (a float or bool column marks its bloom partial,
+    see _Spool._observe)."""
     import hashlib as _hashlib
 
     out = []
@@ -271,6 +271,9 @@ class JsonManifestSink(DataSource):
         return JsonManifestWriter(self.options, schema, overwrite)
 
     def streamWriter(self, schema, overwrite: bool) -> "JsonManifestStreamWriter":
+        _refuse_unreadable(
+            [f"{f.name} {f.dataType.simpleString()}" for f in schema.fields]
+        )
         return JsonManifestStreamWriter(
             self.options, [f.name for f in schema.fields]
         )
@@ -285,6 +288,234 @@ _GEN_OPS = {
     "mul": lambda a, b: a * b,
     "add": lambda a, b: a + b,
 }
+#: The same ops over int64 columns: NumPy's floor_divide and mod keep
+#: Python's signs (-7 // 2 == -4, -7 % 2 == 1), where Arrow's divide
+#: truncates toward zero.
+_GEN_UFUNCS = {
+    "div": "floor_divide",
+    "mod": "mod",
+    "mul": "multiply",
+    "add": "add",
+}
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _refuse_unreadable(schema_ddl, generated=None) -> None:
+    """Refuse on the driver, before any task runs, a schema whose files
+    `_read_data_file_table` could not read back: a type outside
+    `_pa_ddl_type`'s map, or a generated column over a non-integer
+    source (its rule would spool floats into the bigint it declares)."""
+    import pyarrow as pa
+
+    types = dict(ddl.split(" ", 1) for ddl in schema_ddl)
+    for name, t in types.items():
+        if _pa_ddl_type(t) is None:
+            raise ValueError(
+                f"json_manifest_sink cannot store column {name!r} of type "
+                f"{t}: supported types are bigint, int, smallint, tinyint, "
+                "double, float, string and boolean"
+            )
+    for gname, (gsrc, _op, _operand) in (generated or {}).items():
+        t = types.get(gsrc)
+        if t is not None and not pa.types.is_integer(_pa_ddl_type(t)):
+            raise ValueError(
+                f"generated column {gname!r} needs an integer source "
+                f"column; {gsrc!r} is {t}"
+            )
+
+
+def _generate(src, op: str, operand: int, n: int):
+    """Generated column over integer column `src` (None: absent): int64
+    values (NULL where the source is), and a mask of the rows whose exact
+    result may not fit int64 — a float estimate with a 2x margin."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if src is None or pa.types.is_null(src.type):
+        return pa.nulls(n, pa.int64()), np.zeros(n, dtype=bool)
+    valid = src.is_valid().to_numpy(zero_copy_only=False)
+    x = pc.fill_null(src, 0).to_numpy(zero_copy_only=False).astype(np.int64)
+    ufunc = getattr(np, _GEN_UFUNCS[op])
+    with np.errstate(all="ignore"):
+        out = ufunc(x, np.int64(operand))
+        approx = ufunc(x.astype(np.float64), float(operand))
+    return pa.array(out, mask=~valid), valid & (np.abs(approx) >= 2.0**62)
+
+
+class _Spool:
+    """The one spool of the manifest connector — the batch writer, the
+    stream writer and MERGE all write through it: Arrow batches in, one
+    JSON-lines data file plus its zone stats and blooms out.
+
+    Per batch, column at a time: generated columns are computed and
+    provided values verified, the poison and CHECK constraints become
+    Arrow masks, logical names become physical (s33), stats and blooms
+    update from the columns, and `_spool_plain_batch` encodes. The masks
+    may flag too many rows, never too few (a comparison Arrow cannot
+    decide flags every non-NULL row); only flagged rows run the exact
+    Python rules, in order (:meth:`_check_row`), so the first failing row
+    raises the row loop's exact message.
+
+    ``fields``: logical columns in commit order (the first carries the
+    poison). ``stats_columns``: None for stats on every column."""
+
+    def __init__(
+        self, fields, *, generated=None, poison=None, checks=(), colmap=None,
+        stats_columns=None, bloom_columns=(), bloom_bits=16384, bloom_k=6,
+    ) -> None:
+        self.fields = list(fields)
+        self.generated = dict(generated or {})
+        self.poison = poison
+        self.checks = list(checks)
+        self.colmap = dict(colmap or {})
+        phys = self.colmap.get
+        self.stat_cols = [
+            phys(c, c)
+            for c in self.fields
+            if stats_columns is None or c in stats_columns
+        ]
+        self.bloom_cols = [phys(c, c) for c in bloom_columns if c in fields]
+        self.bloom_bits, self.bloom_k = bloom_bits, bloom_k
+
+    def to_file(self, batches, temp: str) -> tuple[int, dict, dict]:
+        """Spool `batches` to the file `temp`: (rows, stats, blooms) keyed
+        by physical name. A column outside the stats allowlist is ABSENT,
+        not min=None: a None zone reads as "all NULL, prunable", which
+        would unsoundly skip files for a merely untracked column."""
+        mins: dict = {}
+        maxs: dict = {}
+        nans: set = set()
+        # One bitarray per bloom column: the filter IS the state.
+        bits = {c: bytearray(self.bloom_bits // 8) for c in self.bloom_cols}
+        partial: set = set()
+        n = 0
+        with open(temp, "wb") as fh:
+            for batch in batches:
+                batch = self._apply_rules(batch)
+                self._observe(batch, mins, maxs, nans, bits, partial)
+                _spool_plain_batch(batch, fh)
+                n += batch.num_rows
+        stats = {
+            k: {"min": mins.get(k), "max": maxs.get(k), "has_nan": k in nans}
+            for k in self.stat_cols
+        }
+        blooms = {
+            c: {"m": self.bloom_bits, "k": self.bloom_k,
+                "partial": c in partial, "bits": bytes(b).hex()}
+            for c, b in bits.items()
+        }
+        return n, stats, blooms
+
+    def _apply_rules(self, batch):
+        """The batch as spooled: generated columns filled (appended when
+        absent), every rule checked, names physical."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        n = batch.num_rows
+        cols = dict(zip(batch.schema.names, batch.columns))
+        order = list(cols)
+        flagged = np.zeros(n, dtype=bool)
+        for gname, (gsrc, gop, goperand) in self.generated.items():
+            values, unsure = _generate(cols.get(gsrc), gop, goperand, n)
+            flagged |= unsure
+            if gname in cols:  # provided: must equal the rule (NULL: fill)
+                given = cols[gname]
+                differs = given.is_valid().to_numpy(zero_copy_only=False)
+                if pa.types.is_integer(given.type):  # else 5.0 == 5: Python
+                    same = pc.fill_null(pc.equal(given, values), False)
+                    differs &= ~same.to_numpy(zero_copy_only=False)
+                flagged |= differs
+            else:
+                order.append(gname)
+            cols[gname] = values
+        rules = [(c, tag, bound, False) for c, tag, bound in self.checks]
+        if self.poison is not None:
+            rules.append((self.fields[0], "eq", self.poison, True))
+        for c, tag, v, fails_if in rules:
+            if c in cols:  # an absent CHECK column is NULL: never violates
+                valid = cols[c].is_valid().to_numpy(zero_copy_only=False)
+                holds = _pa_comparison_mask(cols[c], tag, v)
+                if holds is not None:
+                    valid &= holds if fails_if else ~holds
+                flagged |= valid
+        for i in np.flatnonzero(flagged):
+            self._check_row(batch.slice(int(i), 1).to_pylist()[0])
+        return pa.RecordBatch.from_arrays(
+            [cols[c] for c in order],
+            names=[self.colmap.get(c, c) for c in order],
+        )
+
+    def _check_row(self, vals: dict) -> None:
+        """The exact rules over one incoming row, in order: per generated
+        column verify a provided value, refuse a bigint overflow, fill;
+        then the poison; then each CHECK (3VL: NULL never violates)."""
+        for gname, (gsrc, gop, goperand) in self.generated.items():
+            s = vals.get(gsrc)
+            expect = None if s is None else _GEN_OPS[gop](s, goperand)
+            if vals.get(gname) is not None and vals[gname] != expect:
+                raise ValueError(
+                    f"generated column violation: {gname} = "
+                    f"{vals[gname]!r} but {gsrc} {gop} "
+                    f"{goperand} = {expect!r}"
+                )
+            if expect is not None and not _INT64_MIN <= expect <= _INT64_MAX:
+                raise ValueError(
+                    f"generated column overflow: {gname} = {gsrc} {gop} "
+                    f"{goperand} = {expect!r} does not fit bigint"
+                )
+            vals[gname] = expect
+        if self.poison is not None and vals[self.fields[0]] == self.poison:
+            raise RuntimeError(
+                f"planted failure on {self.fields[0]}={self.poison}"
+            )
+        for col, tag, bound in self.checks:
+            x = vals.get(col)
+            if x is not None and not _ROW_TESTS[tag](x, bound):
+                raise ValueError(
+                    f"check constraint violated: {col} {tag} "
+                    f"{bound!r} fails for row {vals!r}"
+                )
+
+    def _observe(self, batch, mins, maxs, nans, bits, partial) -> None:
+        """Fold one spooled batch into the stats and blooms. min/max skip
+        NULL and NaN (a NaN sets has_nan, so the reader declines filters
+        on the column); bool columns carry none. A float or bool value
+        could equal an int probe (5.0 == 5), so it marks its bloom PARTIAL
+        (the reader then never prunes with it)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for name, col in zip(batch.schema.names, batch.columns):
+            if name not in bits and name not in self.stat_cols:
+                continue
+            t = col.type
+            nn = col.drop_null()
+            if name in bits and len(nn):
+                if pa.types.is_boolean(t) or pa.types.is_floating(t):
+                    partial.add(name)
+                else:
+                    for v in pc.unique(nn).to_pylist():
+                        for pos in _bloom_bit_positions(
+                            name, v, self.bloom_bits, self.bloom_k
+                        ):
+                            bits[name][pos // 8] |= 1 << (pos % 8)
+            if name not in self.stat_cols or pa.types.is_boolean(t):
+                continue
+            if pa.types.is_floating(t) and len(nn):
+                is_nan = pc.is_nan(nn)  # min_max over NaN is (inf, -inf)
+                if pc.any(is_nan).as_py():
+                    nans.add(name)
+                    nn = nn.filter(pc.invert(is_nan))
+            if len(nn):
+                mm = pc.min_max(nn)
+                lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                if name not in mins or lo < mins[name]:
+                    mins[name] = lo
+                if name not in maxs or hi > maxs[name]:
+                    maxs[name] = hi
 
 
 class JsonManifestWriter(DataSourceArrowWriter):
@@ -445,6 +676,10 @@ class JsonManifestWriter(DataSourceArrowWriter):
                         f"generated column operand must be a non-zero int"
                         f" for {op}: {operand!r}"
                     )
+                if not _INT64_MIN <= operand <= _INT64_MAX:
+                    raise ValueError(
+                        f"generated column operand must fit bigint: {operand!r}"
+                    )
             self.generated.update(
                 {n: list(r) for n, r in rules.items()}
             )
@@ -492,24 +727,25 @@ class JsonManifestWriter(DataSourceArrowWriter):
             self.checks = [tuple(c) for c in checks]
         else:
             self.checks = []
+        _refuse_unreadable(self.schema_ddl, self.generated)
+        self.spool = _Spool(
+            self.fields,
+            generated=self.generated,
+            poison=self.poison,
+            checks=self.checks,
+            colmap=self.colmap,
+            stats_columns=self.stats_columns,
+            bloom_columns=self.bloom_columns,
+            bloom_bits=self.bloom_bits,
+            bloom_k=self.bloom_k,
+        )
 
     def _spool_dir(self) -> str:
         return _os.path.join(self.path, f"_temp-{self.job_id}")
 
-    @staticmethod
-    def _bloomable(v) -> bool:
-        # str/int only: floats have no canonical text form shared between
-        # writer and reader (repr drift), bools would alias 0/1.
-        return type(v) is not bool and isinstance(v, (int, str))
-
     def write(self, iterator):  # executor-side: spool one partition
-        # Arrow writer (guide §4): rows arrive as pyarrow RecordBatches —
-        # no per-row Row construction or per-value converters. Batches
-        # without per-row rules spool through the vectorized path; any
-        # batch with rules in force (generated columns, poison, CHECKs,
-        # column mapping) or with non-JSON-native column types runs the
-        # original row-at-a-time body, preserving the pinned per-row
-        # failure semantics (first offending row raises, same message).
+        # Arrow writer (guide §4): rows arrive as pyarrow RecordBatches and
+        # spool column at a time through _Spool, rules and all.
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -517,72 +753,7 @@ class JsonManifestWriter(DataSourceArrowWriter):
         temp_dir = self._spool_dir()
         _os.makedirs(temp_dir, exist_ok=True)
         temp = _os.path.join(temp_dir, f"attempt-{pid}-{attempt}.json")
-        n = 0
-        # Streaming per-column min/max (non-NULL values only; bool excluded
-        # — bool<int comparisons would poison an int column's zone; NaN
-        # excluded — `v < NaN` is always False, so a leading NaN would
-        # freeze the zone at NaN and prune files that match). One dict
-        # update per row, no buffering: the spool stays O(1) memory.
-        mins: dict = {}
-        maxs: dict = {}
-        nans: set = set()
-        statable = (int, float, str)
-        # Streaming bloom build: one bitarray per allowlisted column,
-        # k md5-derived bit inserts per row — O(m/8) memory per column,
-        # never a value set (the 100 TB shape: the filter IS the state).
-        bloom_bits = {
-            self.colmap.get(c, c): bytearray(self.bloom_bits // 8)
-            for c in self.bloom_columns
-            if c in self.fields
-        }
-        bloom_partial: set = set()
-        # Stats allowlist in physical terms (rows are translated below).
-        pstats_columns = (
-            {self.colmap.get(c, c) for c in self.stats_columns}
-            if self.stats_columns is not None
-            else None
-        )
-        # Per-row rules force the row path: their failure semantics (raise
-        # on the FIRST offending row, exact message) and the logical->
-        # physical key translation are row-scoped by contract.
-        rules = bool(
-            self.generated or self.checks or self.colmap
-            or self.poison is not None
-        )
-        with open(temp, "wb") as fh:
-            for batch in iterator:
-                if not rules and self._spool_batch_vectorized(
-                    batch, fh, mins, maxs, bloom_bits, bloom_partial,
-                    pstats_columns,
-                ):
-                    n += batch.num_rows
-                    continue
-                n += self._spool_batch_rows(
-                    batch, fh, mins, maxs, nans, statable, bloom_bits,
-                    bloom_partial, pstats_columns,
-                )
-        # Columns excluded by the stats allowlist must be ABSENT from the
-        # dict, not present with min=None: a None zone reads as "all NULL,
-        # prunable", which would unsoundly skip files for filters on a
-        # merely-untracked column (absence makes the reader decline).
-        stats = {
-            k: {
-                "min": mins.get(k),
-                "max": maxs.get(k),
-                "has_nan": k in nans,
-            }
-            for k in (self.colmap.get(c, c) for c in self.fields)
-            if pstats_columns is None or k in pstats_columns
-        }
-        blooms = {
-            c: {
-                "m": self.bloom_bits,
-                "k": self.bloom_k,
-                "partial": c in bloom_partial,
-                "bits": bytes(bits).hex(),
-            }
-            for c, bits in bloom_bits.items()
-        }
+        n, stats, blooms = self.spool.to_file(iterator, temp)
         return JsonManifestCommitMessage(
             temp,
             f"job-{self.job_id}-part-{pid:05d}.json",
@@ -591,158 +762,15 @@ class JsonManifestWriter(DataSourceArrowWriter):
             blooms or None,
         )
 
-    def _spool_batch_rows(
-        self, batch, fh, mins, maxs, nans, statable, bloom_bits,
-        bloom_partial, pstats_columns,
-    ) -> int:
-        """The original row-at-a-time spool body, over one Arrow batch —
-        the path every rule-bearing write takes, so the per-row failure
-        semantics (first offending row raises, exact message) and the
-        logical->physical key translation are unchanged."""
-        n = 0
-        for vals in batch.to_pylist():
-            # GENERATED COLUMNS (s36): compute when absent; verify
-            # when provided (a mismatch fails the task before any
-            # spool file is renamed in — the table stays untouched).
-            # A provided NULL is treated as absent (computed).
-            for gname, (gsrc, gop, goperand) in self.generated.items():
-                s = vals.get(gsrc)
-                expect = None if s is None else _GEN_OPS[gop](s, goperand)
-                if vals.get(gname) is not None and vals[gname] != expect:
-                    raise ValueError(
-                        f"generated column violation: {gname} = "
-                        f"{vals[gname]!r} but {gsrc} {gop} "
-                        f"{goperand} = {expect!r}"
-                    )
-                vals[gname] = expect
-            if self.poison is not None and vals[self.fields[0]] == self.poison:
-                raise RuntimeError(
-                    f"planted failure on {self.fields[0]}={self.poison}"
-                )
-            for col, tag, bound in self.checks:
-                x = vals.get(col)
-                # 3VL: NULL never VIOLATES a CHECK (ANSI/Delta).
-                if x is not None and not _ROW_TESTS[tag](x, bound):
-                    raise ValueError(
-                        f"check constraint violated: {col} {tag} "
-                        f"{bound!r} fails for row {vals!r}"
-                    )
-            if self.colmap:
-                # Disk boundary: logical row -> physical JSON keys.
-                vals = {
-                    self.colmap.get(k, k): v for k, v in vals.items()
-                }
-            for c, bits in bloom_bits.items():
-                v = vals.get(c)
-                if v is None:
-                    continue  # NULL never matches an eq probe (3VL)
-                if not self._bloomable(v):
-                    # A non-insertable value (float/bool) could still
-                    # equal an int probe (5.0 == 5): mark the bloom
-                    # PARTIAL so the reader declines to prune with it.
-                    bloom_partial.add(c)
-                    continue
-                for pos in _bloom_bit_positions(
-                    c, v, self.bloom_bits, self.bloom_k
-                ):
-                    bits[pos // 8] |= 1 << (pos % 8)
-            for k, v in vals.items():
-                if pstats_columns is not None and k not in pstats_columns:
-                    continue
-                if v is None or type(v) is bool or not isinstance(v, statable):
-                    continue
-                if isinstance(v, float) and v != v:
-                    nans.add(k)  # flagged so the reader declines filters
-                    continue
-                if k not in mins or v < mins[k]:
-                    mins[k] = v
-                if k not in maxs or v > maxs[k]:
-                    maxs[k] = v
-            fh.write((_json.dumps(vals) + "\n").encode("utf-8"))
-            n += 1
-        return n
-
-    def _spool_batch_vectorized(
-        self, batch, fh, mins, maxs, bloom_bits, bloom_partial,
-        pstats_columns,
-    ) -> bool:
-        """Column-at-a-time spool of one rule-free Arrow batch (guide §4.2).
-
-        Declines (returns False, caller takes the row path) when a column
-        type falls outside the JSON-native set, when a float column holds
-        a non-finite value (orjson rewrites NaN/Infinity to null; stdlib
-        json writes the bare tokens the readers round-trip), or when
-        orjson is unavailable. Stats/bloom updates compute the exact same
-        values as the per-row path: min/max over non-NULL values (bool
-        columns excluded; UTF-8 byte order == code-point order for str),
-        bloom inserts over the distinct non-NULL values (idempotent bits),
-        float/bool bloom columns marked partial iff any non-NULL value."""
-        if _orjson is None:
-            return False
-        if batch.num_rows == 0:
-            return True
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-
-        for field in batch.schema:
-            t = field.type
-            if not (
-                _pa.types.is_integer(t)
-                or _pa.types.is_floating(t)
-                or _pa.types.is_string(t)
-                or _pa.types.is_large_string(t)
-                or _pa.types.is_boolean(t)
-                or _pa.types.is_null(t)
-            ):
-                return False
-        for i, field in enumerate(batch.schema):
-            if _pa.types.is_floating(field.type):
-                col = batch.column(i).drop_null()
-                if len(col) and not _pc.all(_pc.is_finite(col)).as_py():
-                    return False
-        for i, field in enumerate(batch.schema):
-            name = field.name
-            col = batch.column(i)
-            if name in bloom_bits:
-                nn = col.drop_null()
-                if len(nn):
-                    if _pa.types.is_boolean(field.type) or _pa.types.is_floating(
-                        field.type
-                    ):
-                        bloom_partial.add(name)
-                    else:
-                        bits = bloom_bits[name]
-                        for v in _pc.unique(nn).to_pylist():
-                            for pos in _bloom_bit_positions(
-                                name, v, self.bloom_bits, self.bloom_k
-                            ):
-                                bits[pos // 8] |= 1 << (pos % 8)
-            if pstats_columns is not None and name not in pstats_columns:
-                continue
-            if _pa.types.is_boolean(field.type) or _pa.types.is_null(
-                field.type
-            ):
-                continue
-            nn = col.drop_null()
-            if len(nn):
-                mm = _pc.min_max(nn)
-                lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                if name not in mins or lo < mins[name]:
-                    mins[name] = lo
-                if name not in maxs or hi > maxs[name]:
-                    maxs[name] = hi
-        d = _orjson.dumps
-        fh.write(b"".join(d(r) + b"\n" for r in batch.to_pylist()))
-        return True
-
     def commit(self, messages):  # driver-side: publish atomically
-        mp = _os.path.join(self.path, "_MANIFEST.json")
         prior: dict | None = None
         prior_files: list = []
         prior_version = 0
-        if _os.path.exists(mp):
-            with open(mp, encoding="utf-8") as fh:
-                prior = _json.load(fh)
+        try:
+            prior = _load_manifest(self.path)
+        except FileNotFoundError:
+            pass
+        else:
             prior_files = prior["files"]
             prior_version = prior.get("version", 0)
         # IDEMPOTENT TRANSACTION (t26): a replayed (txn_app, txn_version)
@@ -1048,10 +1076,11 @@ class JsonManifestStreamWriter(DataSourceStreamArrowWriter):
         # restarted query instance never shares spools with its
         # predecessor's stragglers.
         self.query_id = _uuid.uuid4().hex
+        # No rules and no stats: the stream manifest lists files only.
+        self.spool = _Spool(field_names, stats_columns=())
 
     def write(self, iterator):  # executor-side: spool one partition
-        # Arrow batches in (guide §4); the spool bytes parse back to the
-        # same rows as the row-at-a-time path (see _spool_plain_batch).
+        # Arrow batches in (guide §4), through the batch writer's _Spool.
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -1059,11 +1088,7 @@ class JsonManifestStreamWriter(DataSourceStreamArrowWriter):
         temp_dir = _os.path.join(self.path, f"_temp-{self.query_id}")
         _os.makedirs(temp_dir, exist_ok=True)
         temp = _os.path.join(temp_dir, f"attempt-{pid}-{attempt}.json")
-        n = 0
-        with open(temp, "wb") as fh:
-            for batch in iterator:
-                _spool_plain_batch(batch, fh)
-                n += batch.num_rows
+        n, _stats, _blooms = self.spool.to_file(iterator, temp)
         return JsonManifestCommitMessage(temp, f"part-{pid:05d}.json", n)
 
     def _manifest_path(self) -> str:
@@ -1250,32 +1275,41 @@ def _publish_manifest(path: str, manifest: dict) -> None:
     _os.replace(tmp, mp)
 
 
-def _scan_file_for_deletes(
-    path: str,
-    name: str,
-    conjuncts: list,
-    prior_dv: set,
+def _delete_positions(
+    path: str, name: str, conjuncts: list, types: dict, prior_dv
 ) -> list[int]:
-    """Executor-side: line positions in one data file matching EVERY
-    (column, tag, value) conjunct (NULL never matches any — 3VL),
-    excluding already-deleted rows. Runs where the reader runs (shared-fs
-    contract, python_source.py:180); returns O(#matches) positions — the
+    """Executor-side DELETE scan of one data file: positions of the live
+    rows matching EVERY (column, tag, value) conjunct, by the reader's own
+    accepted-filter mask (`_pa_comparison_mask`), over only the conjunct
+    columns. Runs where the reader runs (the shared-filesystem contract
+    of JsonManifestSink); returns O(#matches) positions — the
     deletion-vector payload."""
-    out: list[int] = []
-    with open(_os.path.join(path, name), encoding="utf-8") as fh:
-        for pos, line in enumerate(fh):
-            if pos in prior_dv:
-                continue
-            vals = _json.loads(line)
-            ok = True
-            for column, tag, value in conjuncts:
-                x = vals.get(column)
-                if x is None or not _ROW_TESTS[tag](x, value):
-                    ok = False
-                    break
-            if ok:
-                out.append(pos)
-    return out
+    import numpy as np
+
+    cols = sorted({c for c, _, _ in conjuncts})
+    tbl = _read_data_file_table(path, name, cols, [types[c] for c in cols])
+    hit = np.ones(tbl.num_rows, dtype=bool)
+    for column, tag, value in conjuncts:
+        m = _pa_comparison_mask(tbl.column(column), tag, value)
+        hit &= False if m is None else m
+    hit[list(prior_dv)] = False
+    return np.flatnonzero(hit).tolist()
+
+
+def _add_dv(path: str, version: int, entry: dict, prior, hits) -> str:
+    """Publish the deletion vector of manifest `entry` at `version`: its
+    prior positions plus `hits`, as a `dv-v{N}-{file}` sidecar written
+    atomically (temp file, then rename); `entry` gains the "dv" and
+    "n_deleted" keys. Shared by DELETE and MERGE."""
+    merged = sorted(set(prior) | set(hits))
+    dv_name = f"dv-v{version}-{entry['name']}"
+    tmp = _os.path.join(path, dv_name + ".tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        _json.dump({"file": entry["name"], "positions": merged}, fh)
+    _os.replace(tmp, _os.path.join(path, dv_name))
+    entry["dv"] = dv_name
+    entry["n_deleted"] = len(merged)
+    return dv_name
 
 
 def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
@@ -1289,11 +1323,13 @@ def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
 
     ``conjuncts`` is a list of (column, tag, value) triples ANDed
     together, each tag one of the _ROW_TESTS comparisons (eq/lt/le/gt/
-    ge); predicate semantics are exactly the reader's accepted-filter
-    semantics (NULL never matches; a NaN cell never matches — Python
-    comparison semantics, NOT Spark's NaN-orders-above-all). Conjuncts
-    are validated against the committed schema before any task runs —
-    a class-mismatched value is a loud driver-side ValueError.
+    ge); a DELETE removes exactly the rows a read with the same accepted
+    filters returns — both match with `_pa_comparison_mask` (NULL never
+    matches; a NaN cell never matches — IEEE comparison, NOT Spark's
+    NaN-orders-above-all; mixed int/float comparisons are exact, as in
+    Python). Conjuncts are validated against the committed schema before
+    any task runs — a class-mismatched value is a loud driver-side
+    ValueError.
 
     Scale shape: the matching-position scan runs DISTRIBUTED (one task
     per candidate file, zone-pruned first — a clustered predicate scans
@@ -1364,6 +1400,7 @@ def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
         f["name"]: set(_load_dv(path, f["dv"])) if f.get("dv") else set()
         for f in candidates
     }
+    ptypes = {_cmap.get(c, c): t for c, t in col_types.items()}
     scanned = (
         spark.sparkContext.parallelize(
             [f["name"] for f in candidates], max(1, len(candidates))
@@ -1371,8 +1408,8 @@ def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
         .map(
             lambda name: (
                 name,
-                _scan_file_for_deletes(
-                    path, name, conjuncts, prior_dvs[name]
+                _delete_positions(
+                    path, name, conjuncts, ptypes, prior_dvs[name]
                 ),
             )
         )
@@ -1386,14 +1423,7 @@ def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
         hits = new_hits.get(f["name"])
         if not hits:
             continue
-        merged = sorted(set(prior_dvs.get(f["name"], set())) | set(hits))
-        dv_name = f"dv-v{version}-{f['name']}"
-        tmp = _os.path.join(path, dv_name + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            _json.dump({"file": f["name"], "positions": merged}, fh)
-        _os.replace(tmp, _os.path.join(path, dv_name))
-        f["dv"] = dv_name
-        f["n_deleted"] = len(merged)
+        _add_dv(path, version, f, prior_dvs[f["name"]], hits)
         n_new_deleted += len(hits)
         dv_written += 1
     new_manifest = {
@@ -1431,23 +1461,29 @@ def _load_dv(path: str, dv_name: str) -> list[int]:
         return _json.load(fh)["positions"]
 
 
-def _scan_file_for_keys(
-    path: str, name: str, key_col: str, keys: frozenset, prior_dv: set
+def _key_matches(
+    path: str, name: str, column: str, ddl_type: str, keys: list, prior_dv
 ) -> tuple[list[int], list]:
-    """Executor-side: (line positions, matched key values) for rows whose
-    key is in ``keys`` (the MERGE matched-row scan), excluding
-    already-deleted rows."""
-    out: list[int] = []
-    matched: list = []
-    with open(_os.path.join(path, name), encoding="utf-8") as fh:
-        for pos, line in enumerate(fh):
-            if pos in prior_dv:
-                continue
-            k = _json.loads(line).get(key_col)
-            if k in keys:
-                out.append(pos)
-                matched.append(k)
-    return out, matched
+    """Executor-side MERGE scan of one data file: (positions, stored key
+    values) of the live rows whose `column` value is one of `keys`, by one
+    Arrow membership test over that column. Matches as Python's `x in
+    set(keys)` does: `keys` holds no NaN (a parsed NaN is in no set), and
+    -0.0 folds into 0.0 on both sides (pc.is_in compares bits, `in`
+    compares values)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = _read_data_file_table(path, name, [column], [ddl_type]).column(0)
+    value_set = pa.array(keys, type=col.type)
+    if pa.types.is_floating(col.type):
+        zero = pa.scalar(0.0, col.type)
+        col, value_set = pc.add(col, zero), pc.add(value_set, zero)
+    hit = pc.fill_null(pc.is_in(col, value_set=value_set), False)
+    hit = hit.to_numpy(zero_copy_only=False)
+    hit[list(prior_dv)] = False
+    pos = np.flatnonzero(hit)
+    return pos.tolist(), col.take(pa.array(pos)).to_pylist()
 
 
 def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
@@ -1492,6 +1528,7 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     fields = [ddl.split(" ", 1)[0] for ddl in schema_ddl]
     if key_col not in fields:
         raise ValueError(f"MERGE key column not in schema: {key_col!r}")
+    _refuse_unreadable(schema_ddl, generated)
 
     # Pin ONE evaluation of the updates plan: validation, the key-set
     # collect, and the spool job below would otherwise each recompute it —
@@ -1519,15 +1556,20 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     # task closure (bounded by the update batch — the CDC contract). The
     # candidate list is ZONE-PRUNED first with the key column's manifest
     # stats (the s16/s19 machinery): a file whose [min, max] zone holds
-    # none of the update keys is never opened.
-    sorted_keys = sorted(keys)
+    # none of the update keys is never opened. A NaN key matches no
+    # stored row (NaN equals nothing), so it neither probes nor sorts:
+    # NaN in the sorted list would break the bisect below.
+    sorted_keys = sorted(k for k in keys if k == k)
     # COLUMN MAPPING (s33): the scan and stats are keyed physical.
     cmap = manifest.get("column_mapping", {})
     pkey = cmap.get(key_col, key_col)
+    key_type = dict(ddl.split(" ", 1) for ddl in schema_ddl)[key_col]
 
     def _zone_has_key(entry: dict) -> bool:
         import bisect as _bisect
 
+        if not sorted_keys:
+            return False
         stats = (entry.get("stats") or {}).get(pkey)
         if stats is None or stats.get("has_nan", True):
             return True  # no usable stats: scan, never skip unsoundly
@@ -1555,8 +1597,8 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
         .map(
             lambda name: (
                 name,
-                _scan_file_for_keys(
-                    path, name, pkey, keys, prior_dvs[name]
+                _key_matches(
+                    path, name, pkey, key_type, sorted_keys, prior_dvs[name]
                 ),
             )
         )
@@ -1574,14 +1616,11 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     job_id = _uuid.uuid4().hex
     spool = _os.path.join(path, f"_temp-{job_id}")
     _os.makedirs(spool, exist_ok=True)
-    statable = (int, float, str)
+    # Generated columns are computed (Delta MERGE semantics) or verified,
+    # names go physical (s33); stats on every column, no blooms.
+    rules = _Spool(fields, generated=generated, colmap=cmap)
 
     def _spool_partition(batches):
-        # Arrow batches in (guide §4 — was mapInPandas with per-row
-        # numpy `.item()` unwrapping; Arrow's to_pylist yields native
-        # Python values directly, and a NULL in an int column stays a
-        # JSON null instead of pandas' NaN-promoted float). Per-row
-        # generated-column verification keeps its exact message.
         import json as j
         import os as o
 
@@ -1592,55 +1631,7 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
         ctx = TaskContext.get()
         pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
         temp = o.path.join(spool, f"attempt-{pid}-{attempt}.json")
-        n = 0
-        mins: dict = {}
-        maxs: dict = {}
-        nans: set = set()
-        with open(temp, "w", encoding="utf-8") as fh:
-            for batch in batches:
-                for rec in batch.to_pylist():
-                    for gname, (gsrc, gop, goperand) in generated.items():
-                        s = rec.get(gsrc)
-                        expect = (
-                            None if s is None else _GEN_OPS[gop](s, goperand)
-                        )
-                        got = rec.get(gname)
-                        if got is not None and got != expect:
-                            raise ValueError(
-                                f"generated column violation: {gname} = "
-                                f"{got!r} but {gsrc} {gop} {goperand} = "
-                                f"{expect!r}"
-                            )
-                        rec[gname] = expect
-                    vals = {
-                        # logical -> physical at the disk boundary (s33)
-                        cmap.get(k, k): v
-                        for k, v in rec.items()
-                    }
-                    for k, v in vals.items():
-                        if (
-                            v is None
-                            or type(v) is bool
-                            or not isinstance(v, statable)
-                        ):
-                            continue
-                        if isinstance(v, float) and v != v:
-                            nans.add(k)
-                            continue
-                        if k not in mins or v < mins[k]:
-                            mins[k] = v
-                        if k not in maxs or v > maxs[k]:
-                            maxs[k] = v
-                    fh.write(j.dumps(vals) + "\n")
-                    n += 1
-        stats = {
-            k: {
-                "min": mins.get(k),
-                "max": maxs.get(k),
-                "has_nan": k in nans,
-            }
-            for k in (cmap.get(c, c) for c in fields)
-        }
+        n, stats, _blooms = rules.to_file(batches, temp)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array([temp], type=pa.string()),
@@ -1667,17 +1658,10 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
         ).collect()
         for f in files:
             hits = new_hits.get(f["name"])
-            if not hits:
-                continue
-            merged = sorted(set(prior_dvs.get(f["name"], set())) | set(hits))
-            dv_name = f"dv-v{version}-{f['name']}"
-            tmp = _os.path.join(path, dv_name + ".tmp")
-            with open(tmp, "w", encoding="utf-8") as fh:
-                _json.dump({"file": f["name"], "positions": merged}, fh)
-            _os.replace(tmp, _os.path.join(path, dv_name))
-            written.append(dv_name)
-            f["dv"] = dv_name
-            f["n_deleted"] = len(merged)
+            if hits:
+                written.append(
+                    _add_dv(path, version, f, prior_dvs[f["name"]], hits)
+                )
         for m in messages:
             if m["n"] == 0:
                 continue  # empty partition: nothing spooled to publish
@@ -1741,33 +1725,6 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     }
 
 
-def _scan_file_changes(
-    path: str,
-    name: str,
-    mode: str,
-    positions: frozenset,
-    fields: list,
-    casts: list,
-    change_type: str,
-):
-    """Executor-side CDF scan of one data file: yield rows at ``positions``
-    (mode="include") or rows NOT at them (mode="exclude"), tagged with
-    ``change_type``, cast per the manifest schema (JSON carries no type
-    tags; the latest-superset schema NULL-fills columns an old epoch
-    lacked — the s20 reconcile semantics)."""
-    with open(_os.path.join(path, name), encoding="utf-8") as fh:
-        for pos, line in enumerate(fh):
-            hit = pos in positions
-            if (mode == "include") != hit:
-                continue
-            vals = _json.loads(line)
-            out = []
-            for col, cast in zip(fields, casts):
-                x = vals.get(col)
-                out.append(cast(x) if x is not None and cast else x)
-            yield tuple(out) + (change_type,)
-
-
 def _cdf_file_batches(
     path: str,
     name: str,
@@ -1779,14 +1736,13 @@ def _cdf_file_batches(
     change_type: str,
     ver=None,
 ):
-    """Arrow-path CDF scan of one data file (guide §4.2): the same rows as
-    :func:`_scan_file_changes`, emitted as RecordBatches under the logical
-    `out_fields` names plus the `_change_type` tag (and `_commit_version`
-    when `ver` is given). Returns None when the Arrow parser declines the
-    file — callers run the row-at-a-time scan instead."""
+    """Executor-side CDF scan of one data file (guide §4.2): the rows at
+    ``positions`` (mode="include") or NOT at them (mode="exclude"), as
+    RecordBatches under the logical `out_fields` names plus the
+    `_change_type` tag (and `_commit_version` when `ver` is given). The
+    columns parse per v_to's schema: the latest superset NULL-fills
+    columns an old epoch lacked (the s20 reconcile semantics)."""
     tbl = _read_data_file_table(path, name, pfields, ddl_types)
-    if tbl is None:
-        return None
     import numpy as np
     import pyarrow as pa
 
@@ -1882,7 +1838,7 @@ def changes_between_manifest_path(
         t0, new = _cdf_tasks(path, v_from, v_to)
         tasks = [(n, m, pos, kind, None) for n, m, pos, kind in t0]
     # v_to's schema is the superset (s20 evolution only adds columns).
-    fields, pfields, casts = _schema_fields_casts(new)
+    fields, pfields, ddl_types = _schema_fields(new)
     if update_key is not None:
         # Contract checks run even for an empty feed (a typo'd key must
         # not pass silently on a zero-change range) ...
@@ -1910,16 +1866,21 @@ def changes_between_manifest_path(
     if not tasks:
         return spark.createDataFrame([], ddl)
 
-    def _rows(t):
-        rows = _scan_file_changes(
-            path, t[0], t[1], t[2], pfields, casts, t[3]
-        )
-        if t[4] is None:
-            return rows
-        return (r + (t[4],) for r in rows)
+    def _scan(batches):
+        for batch in batches:
+            for t in batch.to_pylist():
+                yield from _cdf_file_batches(
+                    path, t["name"], t["mode"], t["positions"], pfields,
+                    ddl_types, fields, t["kind"], ver=t["ver"],
+                )
 
-    rdd = spark.sparkContext.parallelize(tasks, len(tasks)).flatMap(_rows)
-    feed = spark.createDataFrame(rdd, ddl)
+    # One partition per task; each scan emits Arrow batches (mapInArrow).
+    task_rows = [(n, m, sorted(pos), kind, v) for n, m, pos, kind, v in tasks]
+    feed = spark.createDataFrame(
+        spark.sparkContext.parallelize(task_rows, len(task_rows)),
+        "name string, mode string, positions array<bigint>, kind string, "
+        "ver bigint",
+    ).mapInArrow(_scan, ddl)
     if update_key is None:
         return feed
     from pyspark.sql import Window as _W
@@ -1948,25 +1909,20 @@ def changes_between_manifest_path(
     )
 
 
-_CDF_CASTS = {"bigint": int, "long": int, "int": int, "smallint": int,
-              "tinyint": int, "double": float, "float": float}
-
-
-def _schema_fields_casts(manifest: dict) -> tuple[list, list, list]:
-    """(logical field names, PHYSICAL field names, per-field Python cast)
-    from a manifest's schema DDL — the one derivation shared by the batch
-    feed and the CDF stream reader so a parsing fix can never drift
+def _schema_fields(manifest: dict) -> tuple[list, list, list]:
+    """(logical field names, PHYSICAL field names, DDL types) from a
+    manifest's schema — the one derivation shared by the readers, the
+    batch feed and the CDF stream reader so a parsing fix can never drift
     between them. Physical names (the on-disk JSON keys, which a RENAME
     never changes — s33 column mapping) drive data access; logical names
     drive schema declaration and option validation."""
-    fields = [ddl.split(" ", 1)[0] for ddl in manifest["schema"]]
+    pairs = [ddl.split(" ", 1) for ddl in manifest["schema"]]
     cmap = manifest.get("column_mapping", {})
-    pfields = [cmap.get(c, c) for c in fields]
-    casts = [
-        _CDF_CASTS.get(ddl.split(" ", 1)[1].split("(")[0])
-        for ddl in manifest["schema"]
-    ]
-    return fields, pfields, casts
+    return (
+        [c for c, _ in pairs],
+        [cmap.get(c, c) for c, _ in pairs],
+        [t for _, t in pairs],
+    )
 
 
 def _cdf_tasks(
@@ -2166,9 +2122,10 @@ _ROW_TESTS = {
 
 def _pa_ddl_type(ddl_type: str):
     """Arrow type for a manifest DDL type, or None when the type falls
-    outside the JSON-native set (callers fall back to the row scan).
-    The mapping mirrors Spark's own arrow schema for these types, so a
-    RecordBatch built with it is exactly what the scan declares."""
+    outside the JSON-native set (writers refuse such a column up front,
+    see _refuse_unreadable). The mapping mirrors Spark's own arrow schema
+    for these types, so a RecordBatch built with it is exactly what the
+    scan declares."""
     import pyarrow as pa
 
     return {
@@ -2187,45 +2144,89 @@ def _pa_ddl_type(ddl_type: str):
 
 def _read_data_file_table(path: str, name: str, pfields, ddl_types):
     """One spooled JSON-lines data file as an Arrow table with columns
-    `pfields` parsed per `ddl_types` — the vectorized scan shared by the
-    manifest readers (guide §4.2: batch the Python boundary). Missing keys
-    NULL-fill (s20 schema evolution); unknown keys are ignored, never
-    inferred in (s34 dropped physicals). Returns None when a declared type
-    falls outside the JSON-native set or the file does not parse under the
-    explicit schema (a bare NaN/Infinity token, a type conflict): callers
-    then run the original row-at-a-time scan, which owns those semantics."""
+    `pfields` parsed per `ddl_types` — the only code that reads a data
+    file: the scans, the change feed, DELETE and MERGE all go through it
+    (guide §4.2: batch the Python boundary). Missing keys NULL-fill (s20
+    schema evolution); unknown keys are ignored, never inferred in (s34
+    dropped physicals). The bare NaN/Infinity/-Infinity tokens stdlib json
+    writes for non-finite floats parse as those values. A file that does
+    not parse under the declared schema raises: writers refuse schemas
+    this reader cannot declare (_refuse_unreadable), so no second reader
+    stands behind it."""
     import pyarrow as pa
-
-    types = []
-    for t in ddl_types:
-        at = _pa_ddl_type(t)
-        if at is None:
-            return None
-        types.append(at)
-    schema = pa.schema(list(zip(pfields, types)))
-    full = _os.path.join(path, name)
-    if _os.path.getsize(full) == 0:
-        return schema.empty_table()  # the JSON parser rejects empty files
     import pyarrow.json as paj
 
-    try:
-        return paj.read_json(
-            full,
-            parse_options=paj.ParseOptions(
-                explicit_schema=schema,
-                unexpected_field_behavior="ignore",
-            ),
-        )
-    except pa.ArrowInvalid:
-        return None
+    schema = pa.schema(
+        [(f, _pa_ddl_type(t)) for f, t in zip(pfields, ddl_types)]
+    )
+    full = _os.path.join(path, name)
+    size = _os.path.getsize(full)
+    if size == 0:
+        return schema.empty_table()  # the JSON parser rejects empty files
+    return paj.read_json(
+        full,
+        # One block per file (int32-capped): a line longer than the 1 MiB
+        # default block would not parse.
+        read_options=paj.ReadOptions(
+            block_size=min(max(size, 1 << 20), (1 << 31) - 1)
+        ),
+        parse_options=paj.ParseOptions(
+            explicit_schema=schema,
+            unexpected_field_behavior="ignore",
+        ),
+    )
+
+
+def _exact_probe(t, tag: str, v):
+    """(tag, v) restated so Arrow compares a column of type `t` with v as
+    exactly as Python does, or (None, answer) when every non-NULL row
+    answers alike. Arrow refuses to round an int64 above 2**53 to a
+    double, and rounds an int probe a double cannot hold, so a float probe
+    on an integer column becomes the equivalent integer probe (x < 2.5 is
+    x <= 2; NaN matches nothing), and an int probe on a float column that
+    falls between two doubles becomes a probe on one of them."""
+    import math
+
+    import pyarrow as pa
+
+    if pa.types.is_floating(t):
+        if not isinstance(v, int):
+            return tag, v
+        d = float(v)  # Arrow range-checks an int probe even where exact
+        if d == v:
+            return tag, d
+        if tag == "eq":
+            return None, False
+        if tag in ("lt", "le"):
+            return "le", d if d < v else math.nextafter(d, -math.inf)
+        return "ge", d if d > v else math.nextafter(d, math.inf)
+    if not pa.types.is_integer(t) or isinstance(v, str):
+        return tag, v
+    if isinstance(v, float):
+        if v != v:
+            return None, False
+        if math.isinf(v):
+            return None, tag != "eq" and (v > 0) == (tag in ("lt", "le"))
+        f = math.floor(v)
+        if f != v:
+            if tag == "eq":
+                return None, False
+            tag = "le" if tag in ("lt", "le") else "gt"
+        v = f
+    if not _INT64_MIN <= v <= _INT64_MAX:
+        return None, tag in (("lt", "le") if v > 0 else ("gt", "ge"))
+    return tag, v
 
 
 def _pa_comparison_mask(col, tag: str, v):
-    """Boolean numpy mask for one accepted (tag, value) comparison over an
-    Arrow column. NULL never satisfies a comparison (3VL) — nulls fill to
-    False; a comparison the engine cannot type (an int probe on a string
-    column, reachable only via a bloom-accepted EqualTo) matches nothing,
-    exactly the Python `x == v` row test."""
+    """Boolean numpy mask of the rows where Python's `x <tag> v` holds,
+    over an Arrow column — the one comparison behind the reader's accepted
+    filters, DELETE and the writer's CHECK/poison rules. NULL never
+    satisfies a comparison (3VL); NaN satisfies none; mixed int/float
+    comparisons are exact (see _exact_probe). None when Arrow cannot type
+    the comparison (an int probe on a string column, a bool on either
+    side): Python's `x == v` is then False and an ordering raises, so the
+    reader and DELETE match nothing and the writer asks Python."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -2237,10 +2238,21 @@ def _pa_comparison_mask(col, tag: str, v):
         "gt": pc.greater,
         "ge": pc.greater_equal,
     }
+    if (
+        type(v) is bool
+        or not isinstance(v, (int, float, str))
+        or pa.types.is_boolean(col.type)
+    ):
+        return None
     try:
+        tag, v = _exact_probe(col.type, tag, v)
+        if tag is None:
+            if not v:
+                return np.zeros(len(col), dtype=bool)
+            return col.is_valid().to_numpy(zero_copy_only=False)
         m = ops[tag](col, v)
-    except (pa.ArrowInvalid, pa.ArrowNotImplementedError, pa.ArrowTypeError):
-        return np.zeros(len(col), dtype=bool)
+    except (pa.ArrowException, TypeError, OverflowError):
+        return None
     return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
 
 
@@ -2252,15 +2264,13 @@ class JsonManifestSourceReader(DataSourceReader):
         if manifest is None:
             manifest = _load_manifest(self.path, options.get("version"))
         self.files = manifest["files"]
-        self.fields = [ddl.split(" ", 1)[0] for ddl in manifest["schema"]]
-        self.ddl_types = [ddl.split(" ", 1)[1] for ddl in manifest["schema"]]
         # COLUMN MAPPING (s33): data files are keyed by PHYSICAL names
         # forever (a RENAME is metadata-only — Delta's column-mapping
         # model); the schema speaks logical. Filters arrive logical and
         # are translated ONCE in pushFilters, so stats keys, bloom keys,
         # and row tests downstream are all physical.
+        self.fields, self.pfields, self.ddl_types = _schema_fields(manifest)
         self.colmap = manifest.get("column_mapping", {})
-        self.pfields = [self.colmap.get(c, c) for c in self.fields]
         # ROW TRACKING (s37): ids are base_row_id + file position —
         # stable under DELETE (positions never shift; a DV'd row's id
         # simply vanishes) and under appends (fresh files claim fresh
@@ -2404,9 +2414,6 @@ class JsonManifestSourceReader(DataSourceReader):
         tbl = _read_data_file_table(
             self.path, name, self.pfields, self.ddl_types
         )
-        if tbl is None:  # non-JSON-native type or unparseable: row scan
-            yield from self._read_rows(name, deleted, n_read, total, base_rid)
-            return
         import numpy as np
         import pyarrow as pa
 
@@ -2415,7 +2422,8 @@ class JsonManifestSourceReader(DataSourceReader):
         if deleted:
             keep[[p for p in deleted if p < nrows]] = False
         for tag, col, v in self.accepted:
-            keep &= _pa_comparison_mask(tbl.column(col), tag, v)
+            m = _pa_comparison_mask(tbl.column(col), tag, v)
+            keep &= False if m is None else m
         idx = np.nonzero(keep)[0]
         if len(idx) < nrows:
             tbl = tbl.take(pa.array(idx))
@@ -2428,33 +2436,6 @@ class JsonManifestSourceReader(DataSourceReader):
             names.append("_row_id")
             cols.append(pa.array(idx + base_rid, type=pa.int64()))
         yield from pa.table(cols, names=names).combine_chunks().to_batches()
-
-    def _read_rows(self, name, deleted, n_read, total, base_rid):
-        """Original row-at-a-time scan — the fallback for files the Arrow
-        parser declines (non-JSON-native declared types, NaN tokens)."""
-        with open(
-            _os.path.join(self.path, name), encoding="utf-8"
-        ) as fh:
-            for pos, line in enumerate(fh):
-                if pos in deleted:
-                    continue
-                vals = _json.loads(line)
-                ok = True
-                for tag, col, v in self.accepted:
-                    x = vals.get(col)
-                    # NULL never satisfies a comparison (3VL): accepted
-                    # filters must drop it exactly as Spark would have.
-                    if x is None or not _ROW_TESTS[tag](x, v):
-                        ok = False
-                        break
-                if ok:
-                    out = tuple(vals.get(c) for c in self.pfields) + (
-                        n_read,
-                        total,
-                    )
-                    if self.with_row_ids:
-                        out += (base_rid + pos,)
-                    yield out
 
 
 class ManifestCDFBatchReader(DataSourceReader):
@@ -2475,8 +2456,7 @@ class ManifestCDFBatchReader(DataSourceReader):
     def __init__(self, path: str, v_from: int, v_to: int, manifest: dict):
         self.path = path
         self.v_from, self.v_to = int(v_from), int(v_to)
-        self.logical, self.fields, self.casts = _schema_fields_casts(manifest)
-        self.ddl_types = [ddl.split(" ", 1)[1] for ddl in manifest["schema"]]
+        self.logical, self.fields, self.ddl_types = _schema_fields(manifest)
 
     def partitions(self):
         if self.v_from == self.v_to:
@@ -2493,17 +2473,10 @@ class ManifestCDFBatchReader(DataSourceReader):
         if partition.value is None:
             return
         name, mode, positions, kind = partition.value
-        batches = _cdf_file_batches(
+        yield from _cdf_file_batches(
             self.path, name, mode, positions, self.fields, self.ddl_types,
             self.logical, kind,
         )
-        if batches is None:  # non-JSON-native type: row-at-a-time scan
-            yield from _scan_file_changes(
-                self.path, name, mode, frozenset(positions),
-                self.fields, self.casts, kind,
-            )
-        else:
-            yield from batches
 
 
 _ZONE_TESTS_BY_TAG = {tag: fn for tag, fn in _ZONE_TESTS.values()}
@@ -2942,10 +2915,7 @@ class ManifestStreamReader(_DSSR):
         if manifest is None:
             manifest = _load_manifest(self.path)
         # Physical names drive data access (s33 column mapping).
-        cmap = manifest.get("column_mapping", {})
-        self.logical = [ddl.split(" ", 1)[0] for ddl in manifest["schema"]]
-        self.fields = [cmap.get(c, c) for c in self.logical]
-        self.ddl_types = [ddl.split(" ", 1)[1] for ddl in manifest["schema"]]
+        self.logical, self.fields, self.ddl_types = _schema_fields(manifest)
 
     def initialOffset(self) -> dict:
         return {"version": 0}  # before the first commit: stream everything
@@ -2995,17 +2965,7 @@ class ManifestStreamReader(_DSSR):
         tbl = _read_data_file_table(
             self.path, name, self.fields, self.ddl_types
         )
-        if tbl is not None:
-            yield from (
-                tbl.rename_columns(self.logical).combine_chunks().to_batches()
-            )
-            return
-        with open(
-            _os.path.join(self.path, name), encoding="utf-8"
-        ) as fh:
-            for line in fh:
-                vals = _json.loads(line)
-                yield tuple(vals.get(c) for c in self.fields)
+        yield from tbl.rename_columns(self.logical).combine_chunks().to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; nothing to reclaim
@@ -3073,8 +3033,7 @@ class ManifestCDFStreamReader(_DSSR):
         # superset): older epochs NULL-fill added columns, exactly as the
         # batch feed does (non-additive changes raise in _cdf_tasks).
         # Physical names (s33): renames never change disk keys.
-        self.logical, self.fields, self.casts = _schema_fields_casts(manifest)
-        self.ddl_types = [ddl.split(" ", 1)[1] for ddl in manifest["schema"]]
+        self.logical, self.fields, self.ddl_types = _schema_fields(manifest)
         self.per_commit = str(
             options.get("per_commit", "false")
         ).lower() in ("true", "1")
@@ -3122,22 +3081,10 @@ class ManifestCDFStreamReader(_DSSR):
         name, mode, positions, kind, ver = partition.value
         # ver is non-None exactly when per_commit declared the
         # _commit_version column, so the batch schema stays in lockstep.
-        batches = _cdf_file_batches(
+        yield from _cdf_file_batches(
             self.path, name, mode, positions, self.fields, self.ddl_types,
             self.logical, kind, ver=ver,
         )
-        if batches is not None:
-            yield from batches
-            return
-        rows = _scan_file_changes(
-            self.path, name, mode, frozenset(positions),
-            self.fields, self.casts, kind,
-        )
-        if ver is None:
-            yield from rows
-        else:
-            for r in rows:
-                yield r + (ver,)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; nothing to reclaim

@@ -354,3 +354,86 @@ def test_lloyd_argmin_scanner_catches_a_planted_copy():
         "    return df.agg(best, F.min(F.struct('cid', 'dist')))\n"
     )
     assert not _lloyd_argmin_functions(clean, "operators/x.py")
+
+
+# ------------------------------------------------ one manifest codec
+
+#: Functions of sources/python_source.py that open manifests, the stream
+#: manifest and deletion vectors — metadata, not data files.
+_MANIFEST_IO = frozenset({
+    "_load_manifest",
+    "_load_dv",
+    "_publish_manifest",
+    "_add_dv",
+    "JsonManifestStreamWriter.commit",
+})
+
+
+def _file_io(source: str) -> dict[str, list[str]]:
+    """The functions (``Class.method`` names) of a module that read files
+    (``open`` in a read mode, pyarrow's ``read_json``), open files for
+    writing, or write lines (a ``.write(...)`` call), per role."""
+    import ast
+
+    found: dict[str, set] = {"read": set(), "open-write": set(), "write": set()}
+
+    def visit(node, owner: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            owner = f"{owner}.{node.name}" if owner else node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == "open":
+                mode = node.args[1] if len(node.args) > 1 else next(
+                    (k.value for k in node.keywords if k.arg == "mode"), None
+                )
+                mode = mode.value if isinstance(mode, ast.Constant) else "r"
+                found["open-write" if set(mode) & set("wax+") else "read"].add(owner)
+            elif name == "read_json":
+                found["read"].add(owner)
+            elif name == "write" and isinstance(f, ast.Attribute):
+                found["write"].add(owner)
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    visit(ast.parse(source), "")
+    return {role: sorted(owners) for role, owners in found.items()}
+
+
+def test_one_data_file_reader_and_one_spool_writer():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    io = _file_io((root / "sources" / "python_source.py").read_text())
+    data = {role: [f for f in fs if f not in _MANIFEST_IO] for role, fs in io.items()}
+    assert data == {
+        "read": ["_read_data_file_table"],
+        "open-write": ["_Spool.to_file"],
+        "write": ["_spool_plain_batch"],
+    }, (
+        "json_manifest data files are read only by _read_data_file_table "
+        f"and written only through _Spool: {data}"
+    )
+
+
+def test_file_io_scanner_catches_a_planted_twin():
+    planted = (
+        "import json, pyarrow.json as paj\n"
+        "def _read_data_file_table(p):\n"
+        "    return paj.read_json(p)\n"
+        "class Reader:\n"
+        "    def _read_rows(self, p):\n"
+        "        with open(p, encoding='utf-8') as fh:\n"
+        "            return [json.loads(line) for line in fh]\n"
+        "def _spool_rows(rows, p):\n"
+        "    with open(p, mode='wb') as fh:\n"
+        "        for r in rows:\n"
+        "            fh.write(json.dumps(r).encode())\n"
+    )
+    assert _file_io(planted) == {
+        "read": ["Reader._read_rows", "_read_data_file_table"],
+        "open-write": ["_spool_rows"],
+        "write": ["_spool_rows"],
+    }

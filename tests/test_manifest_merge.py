@@ -78,3 +78,45 @@ def test_merge_runs_no_validation_job(spark, table):
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
     assert (out["rows_updated"], out["rows_inserted"]) == (2, 1)
     assert len(tracker.getJobIdsForGroup("merge-jobs")) == 4
+
+
+def test_merge_keys_match_as_python_set_membership(spark, tmp_path):
+    """A NaN update key matches no stored row (not even a stored NaN), and
+    a 0.0 key matches a stored -0.0 row: `k in keys` semantics, which an
+    Arrow membership test alone inverts in both cases (it compares bits).
+    A NaN key must not hide the other keys from the zone pruning of a
+    NaN-free file either. Pinned through rows_updated and the
+    deletion-vector positions."""
+    import json
+    import math
+    import os
+
+    from lime_on_spark_spark.sources.python_source import (
+        JsonManifestSink,
+        _load_dv,
+        _load_manifest,
+        merge_into_manifest_path,
+    )
+
+    spark.dataSource.register(JsonManifestSink)
+    path = str(tmp_path / "keys")
+    for rows in ([(float("nan"), 0), (-0.0, 1), (2.0, 2)], [(5.0, 3), (6.0, 4)]):
+        spark.createDataFrame(rows, "k double, v bigint").coalesce(1).write.format(
+            "json_manifest_sink"
+        ).option("path", path).mode("append").save()
+    stored = _load_manifest(path)["files"]
+    updates = spark.createDataFrame(
+        [(float("nan"), 10), (0.0, 11), (5.0, 12)], "k double, v bigint"
+    )
+    out = merge_into_manifest_path(spark, path, updates, "k")
+    assert (out["rows_updated"], out["rows_inserted"]) == (2, 1)
+    dvs = {
+        f["name"]: _load_dv(path, f["dv"])
+        for f in _load_manifest(path)["files"]
+        if f.get("dv")
+    }
+    nan_file = next(f["name"] for f in stored if f["stats"]["k"]["has_nan"])
+    plain_file = next(f["name"] for f in stored if not f["stats"]["k"]["has_nan"])
+    assert dvs == {nan_file: [1], plain_file: [0]}  # the -0.0 and 5.0 rows
+    with open(os.path.join(path, nan_file), encoding="utf-8") as fh:
+        assert math.copysign(1.0, json.loads(fh.readlines()[1])["k"]) == -1.0

@@ -6,8 +6,8 @@ argument) fails here rather than in a bench regression:
 
 * exact_ntile is one lazy plan — construction schedules no job, and the
   result still equals SQL ntile/row_number exactly;
-* the manifest writer's vectorized (Arrow/orjson) and row-at-a-time
-  spool paths produce identical parsed rows, zone stats and blooms;
+* the manifest writer's one columnar spool publishes identical parsed
+  rows, zone stats and blooms with and without write-time rules;
 * the PQ subvector frame's pre-partitioning removes the per-iteration
   argmin shuffle from the codes lineage;
 * the streaming thread-leak confs are set by ``get_spark()`` and left
@@ -87,12 +87,12 @@ def test_grouped_exact_ntile_construction_is_lazy(spark):
 
 
 def test_manifest_spool_paths_agree(spark, tmp_path):
-    """r17: the vectorized Arrow/orjson spool and the row-at-a-time spool
-    must publish identical parsed rows, zone stats (incl. the NaN flag)
-    and blooms. The same frame is written twice — plain (vectorized
-    path) and with a never-firing CHECK constraint (forces the row
-    path); a third write carries NaN (the vectorized path must decline
-    and the stats must flag it)."""
+    """The one columnar spool publishes identical parsed rows, zone stats
+    (incl. the NaN flag) and blooms whether or not rules are in force.
+    The same frame is written twice — plain, and with a CHECK constraint
+    that never fires (its masks run and flag nothing); a third write
+    carries NaN (the stdlib encoder must keep it, since orjson would
+    write null, and the stats must flag it)."""
     from lime_on_spark_spark.sources.python_source import (
         JsonManifestSink,
         JsonManifestSource,
@@ -118,8 +118,7 @@ def test_manifest_spool_paths_agree(spark, tmp_path):
         df.write.format("json_manifest_sink")
         .option("path", p_rows)
         .option("bloom_columns", "tag")
-        # A CHECK that never fires routes every batch down the original
-        # row-at-a-time body (rules force the row path).
+        # A CHECK that never fires: the rule masks run on every batch.
         .option("check_constraints", '[["i", "ge", -1]]')
         .mode("append")
         .save()
@@ -143,8 +142,8 @@ def test_manifest_spool_paths_agree(spark, tmp_path):
 
     assert table_state(p_fast) == table_state(p_rows)
 
-    # NaN payloads must decline the vectorized encoder (orjson would
-    # rewrite NaN to null) and flag the zone.
+    # NaN payloads must keep the stdlib encoder (orjson would rewrite NaN
+    # to null) and flag the zone.
     p_nan = str(tmp_path / "nan")
     nan_df = spark.range(0, 8, 1, 1).select(
         F.col("id").alias("i"),
