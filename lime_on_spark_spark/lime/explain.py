@@ -4,16 +4,19 @@ The Spark raison d'être: explain MANY instances at once. Shape (§3.3):
 
 1. one `mapInArrow` pass turns each instance row into its num_samples
    neighborhood rows (L2/L3: deterministic xxhash64 masks, the
-   reconstruction and, for tabular, the euclidean distance — NumPy over
-   Arrow, see `perturb.py`);
+   reconstruction and the distance to the instance — NumPy over Arrow,
+   see `perturb.py`); the masks themselves stay in that Python worker;
 2. score every perturbation with the broadcast MLlib model (L4 — the only
-   JVM↔model boundary, still DataFrame-native `model.transform`);
+   JVM↔model boundary, the fitted model's Java transformer);
 3. kernel weights as one codegen'd column over the distance (L5);
 4. one `mapInArrow` fit pass (`_fit_pass`) — it cuts each partition's
    batches into runs of equal instance_id, and when a run ends it fits
    that instance: the target class (the black box's first argmax on the
    unperturbed sample 0), closed-form ridge and feature selection in
-   NumPy (L6/L7), reading z, probs and y straight from the Arrow columns.
+   NumPy (L6/L7). It reads probs or y, the weights and the words from the
+   Arrow columns and regenerates each instance's mask z from (instance_id,
+   sample_id, seed, num_samples, width) with the sampler's own hash twin
+   (`perturb._mask_twin`), bit-identical by construction.
 
 Scale: no shuffle. The sampler emits each instance's whole neighborhood
 as one run of rows inside one partition, and scoring and weighting are
@@ -22,19 +25,31 @@ one stage. Executor memory holds one run (num_samples rows) regardless of
 corpus size. The pass raises on the executor if an instance_id shows up
 again after its run closed, so a plan that breaks contiguity fails loudly
 instead of fitting half-neighborhoods.
+
+Per-call fixed cost: building a call's plan takes the same number of Py4J
+round trips whatever the batch size. The ids reach the JVM as one parsed
+``IN`` (`_ids_in`), which ``get_spark()`` sessions plan as an ``InSet``
+that codegen does not inline, so a warm call compiles no new class; the
+kernel column comes from the session memo and the model's params were
+sent once, when it was memoized (`models._transform`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lime_on_spark_spark.lime.kernel import default_kernel_width, exponential_kernel
-from lime_on_spark_spark.lime.perturb import _tabular_samples, _text_samples
+from lime_on_spark_spark.lime.perturb import (
+    _freeze_worker_heap,
+    _mask_twin,
+    _tabular_samples,
+    _text_samples,
+)
 from lime_on_spark_spark.lime.ridge import explain_with_data
 from lime_on_spark_spark.lime.models import (
     score_tabular,
@@ -57,6 +72,40 @@ TEXT_SCHEMA = (
 #: Upstream default kernel width for text explanations.
 TEXT_KERNEL_WIDTH = 25.0
 
+
+def _ids_in(column: str, ids) -> Column:
+    """``column IN (ids)`` as one parsed expression: a single Py4J call
+    whatever the number of ids (``isin`` costs about three per id).
+    ``F.lit(False)`` for no ids. Raises TypeError, before any job runs,
+    for an id that is not an integer or does not fit a bigint."""
+    literals = []
+    for i in ids:
+        if isinstance(i, (bool, np.bool_)) or not isinstance(i, (int, np.integer)):
+            raise TypeError(f"ids must be integers, got {i!r} ({type(i).__name__})")
+        if not -(2**63) <= int(i) < 2**63:
+            raise TypeError(f"id {int(i)} does not fit a bigint")
+        literals.append(str(int(i)))
+    if not literals:
+        return F.lit(False)
+    name = column.replace("`", "``")
+    return F.expr(f"`{name}` IN ({', '.join(literals)})")
+
+
+def _columns(spark: SparkSession, *exprs: str) -> list[Column]:
+    """``exprs`` (a name or ``name AS alias``) as Columns, parsed once per
+    session: they do not depend on a call's ids."""
+    return session_memo(spark, ("lime.columns", exprs), lambda: [F.expr(e) for e in exprs])
+
+
+def _kernel_weight(spark: SparkSession, width: float) -> Column:
+    """The L5 ``weight`` over the sampler's ``dist`` column, built once per
+    session and width: the same expression for every call."""
+    return session_memo(
+        spark,
+        ("lime.kernel", width),
+        lambda: exponential_kernel(F.col("dist"), width).alias("weight"),
+    )
+
 def _corpus_means(spark: SparkSession, sf_dir: str) -> list[float]:
     """Corpus per-dimension means, memoized per session: the corpus is
     immutable for a session, the agg is deterministic, and recomputing it
@@ -70,7 +119,7 @@ def _corpus_means(spark: SparkSession, sf_dir: str) -> list[float]:
             emb.select(F.posexplode(as_double).alias("pos", "v"))
             .groupBy("pos")
             .agg(F.avg("v").alias("mu"))
-            .collect()
+            .collect()  # bounded: d rows, one per embedding dimension
         )
         return [r["mu"] for r in sorted(mu_rows, key=lambda r: r["pos"])]
 
@@ -145,10 +194,13 @@ def _fit_pass(
     alpha: float,
     with_words: bool = False,
     method: str = "highest_weights",
+    z_twin: Callable | None = None,
 ) -> DataFrame:
     """Fit every neighborhood of ``frame`` (instance_id, sample_id, z,
     probs or y, weight, and words when ``with_words``) in the partition
-    that holds it, one `mapInArrow` pass with no shuffle.
+    that holds it, one `mapInArrow` pass with no shuffle. With ``z_twin``
+    (a `perturb._mask_twin`, the explainers) the frame has no z: each
+    instance's mask is regenerated from its id, sample ids and words.
 
     Contract: each instance's rows are one contiguous run within one
     partition — what the samplers emit and narrow maps keep. A run may
@@ -175,14 +227,18 @@ def _fit_pass(
         return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), -1)
 
     def fit(instance_id: int, run: list) -> dict:
-        order = np.argsort(values(run, "sample_id"), kind="stable")
+        sample_id = values(run, "sample_id")
+        order = np.argsort(sample_id, kind="stable")
+        words = column(run, "words")[int(order[0])].as_py() if with_words else None
         return _fit_instance(
             instance_id,
-            matrix(run, "z")[order],
+            matrix(run, "z")[order]
+            if z_twin is None
+            else z_twin(instance_id, sample_id[order], words),
             values(run, "weight")[order],
             y=None if classifier else values(run, "y")[order],
             probs=matrix(run, "probs")[order] if classifier else None,
-            words=column(run, "words")[int(order[0])].as_py() if with_words else None,
+            words=words,
             k=k,
             alpha=alpha,
             method=method,
@@ -195,6 +251,7 @@ def _fit_pass(
         )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _freeze_worker_heap()
         closed: set[int] = set()
         current, parts = None, []
         for batch in batches:
@@ -228,6 +285,28 @@ def _fit_pass(
     return frame.mapInArrow(run, ddl)
 
 
+def _tabular_neighborhoods(
+    spark: SparkSession, sf_dir: str, instance_ids, num_samples: int, seed: int
+):
+    """The tabular explainers' samples (instance_id, sample_id, raw, dist),
+    the z twin of their masks and d. The sampler reads the float32
+    embedding and widens it to double exactly."""
+    # Corpus per-dimension means (distributed agg; d rows to the driver,
+    # cached per session × sf_dir).
+    mu = _corpus_means(spark, sf_dir)
+    instances = load_table(spark, sf_dir, "embeddings").filter(
+        _ids_in("vec_id", instance_ids)
+    ).select(*_columns(spark, "vec_id AS instance_id", "embedding"))
+    samples = _tabular_samples(
+        instances, x_col="embedding", id_col="instance_id", mu=mu,
+        num_samples=num_samples, seed=seed, with_dist=True,
+    )
+    z_twin = _mask_twin(
+        instances.schema, "instance_id", seed=seed, num_samples=num_samples, width=len(mu)
+    )
+    return samples, z_twin, len(mu)
+
+
 def explain_tabular(
     spark: SparkSession,
     sf_dir: str,
@@ -247,28 +326,14 @@ def explain_tabular(
     weights only the closest perturbations (local but noisy), a wider one
     smooths toward the global surrogate.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    as_double = F.transform("embedding", lambda v: v.cast("double"))
-    # Corpus per-dimension means (distributed agg; d rows to the driver,
-    # cached per session × sf_dir).
-    mu = _corpus_means(spark, sf_dir)
-    d = len(mu)
-
-    instances = emb.filter(F.col("vec_id").isin(instance_ids)).select(
-        F.col("vec_id").alias("instance_id"), as_double.alias("x")
-    )
-    samples = _tabular_samples(
-        instances, x_col="x", id_col="instance_id", mu=mu,
-        num_samples=num_samples, seed=seed, with_dist=True,
-    )
+    samples, z_twin, d = _tabular_neighborhoods(spark, sf_dir, instance_ids, num_samples, seed)
     model = train_tabular_model(spark, sf_dir)
-    weighted = score_tabular(model, samples).withColumn(
-        "weight",
-        exponential_kernel(F.col("dist"), default_kernel_width(d) * kernel_scale),
-    )
+    weight = _kernel_weight(spark, default_kernel_width(d) * kernel_scale)
     return _fit_pass(
-        weighted.select("instance_id", "sample_id", "z", "probs", "weight"),
-        k=k, alpha=alpha, method=feature_selection,
+        score_tabular(model, samples).select(
+            *_columns(spark, "instance_id", "sample_id", "probs"), weight
+        ),
+        k=k, alpha=alpha, method=feature_selection, z_twin=z_twin,
     )
 
 
@@ -292,31 +357,25 @@ def explain_text(
     downstream pipeline is identical — only the z-space and the feature
     naming change (vocab words vs positioned words)."""
     docs = load_table(spark, sf_dir, "documents")
-    instances = docs.filter(F.col("doc_id").isin(doc_ids)).select(
-        F.col("doc_id").alias("instance_id"), "text", "lang"
+    instances = docs.filter(_ids_in("doc_id", doc_ids)).select(
+        *_columns(spark, "doc_id AS instance_id", "text")
     )
     # "doc_words" not "words": the scoring pipeline's Tokenizer owns "words".
+    # The sampler's dist is the cosine distance scaled by 100, as upstream
+    # lime_text does before its width-25 kernel — without the scaling the
+    # kernel is ~1 everywhere and weighting is a no-op.
     samples = _text_samples(
         instances, text_col="text", id_col="instance_id",
-        num_samples=num_samples, seed=seed, bow=bow, with_words=True,
+        num_samples=num_samples, seed=seed, bow=bow, with_dist=True,
     )
     model, _labels = train_text_model(spark, sf_dir)
-    scored = score_text(model, samples)
-    # Cosine distance between binary z and the all-ones original:
-    # 1 - sum(z) / (sqrt(sum(z)) * sqrt(d')) = 1 - sqrt(n_kept / d'),
-    # scaled by 100 as upstream lime_text does before its width-25 kernel —
-    # without the scaling the kernel is ~1 everywhere and weighting is a
-    # no-op.
-    dist = (1 - F.sqrt(F.col("n_kept") / F.size("z"))) * 100
-    weighted = scored.withColumn(
-        "weight", exponential_kernel(dist, TEXT_KERNEL_WIDTH)
-    )
     return _fit_pass(
-        weighted.select(
-            "instance_id", "sample_id", "z",
-            F.col("doc_words").alias("words"), "probs", "weight",
+        score_text(model, samples).select(
+            *_columns(spark, "instance_id", "sample_id", "doc_words AS words", "probs"),
+            _kernel_weight(spark, TEXT_KERNEL_WIDTH),
         ),
         k=k, alpha=alpha, with_words=True, method=feature_selection,
+        z_twin=_mask_twin(instances.schema, "instance_id", seed=seed, num_samples=num_samples),
     )
 
 
@@ -338,22 +397,12 @@ def explain_tabular_regression(
         train_regression_model,
     )
 
-    mu = _corpus_means(spark, sf_dir)
-    d = len(mu)
-    emb = load_table(spark, sf_dir, "embeddings")
-    as_double = F.transform("embedding", lambda v: v.cast("double"))
-    instances = emb.filter(F.col("vec_id").isin(instance_ids)).select(
-        F.col("vec_id").alias("instance_id"), as_double.alias("x")
-    )
-    samples = _tabular_samples(
-        instances, x_col="x", id_col="instance_id", mu=mu,
-        num_samples=num_samples, seed=seed, with_dist=True,
-    )
+    samples, z_twin, d = _tabular_neighborhoods(spark, sf_dir, instance_ids, num_samples, seed)
     model = train_regression_model(spark, sf_dir)
-    weighted = score_regression(model, samples).withColumn(
-        "weight", exponential_kernel(F.col("dist"), default_kernel_width(d))
-    )
     return _fit_pass(
-        weighted.select("instance_id", "sample_id", "z", "y", "weight"),
-        k=k, alpha=alpha,
+        score_regression(model, samples).select(
+            *_columns(spark, "instance_id", "sample_id", "y"),
+            _kernel_weight(spark, default_kernel_width(d)),
+        ),
+        k=k, alpha=alpha, z_twin=z_twin,
     )

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lime_on_spark_spark.lime.explain import _fit_pass
+from lime_on_spark_spark.lime.explain import _fit_pass, _ids_in
 from lime_on_spark_spark.lime.kernel import exponential_kernel
 from lime_on_spark_spark.lime.perturb import _bernoulli_keep, with_samples
 from lime_on_spark_spark.sources.catalog import load_table
@@ -60,9 +60,7 @@ def block_means(spark: SparkSession, sf_dir: str, doc_ids: list[int]) -> DataFra
         decode_blob,
     )
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id").isin(doc_ids)
-    )
+    docs = load_table(spark, sf_dir, "documents").filter(_ids_in("doc_id", doc_ids))
     blobs = attach_fake_blobs(docs)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

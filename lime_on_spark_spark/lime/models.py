@@ -6,15 +6,67 @@ pipeline predicting `lang` from `text` (text path). Each fit is memoized
 in ``session.session_memo`` under ``("model", sf_dir, kind)``, so the
 driver's repeated query calls don't retrain, and a model fitted under a
 stopped application is dropped, not served to the next one.
+
+Scoring goes through each model's Java transformer (`_transform`), whose
+params are sent once, on the model's first scoring: pyspark's
+``model.transform`` re-sends every param over Py4J on each call (about 80
+round trips for the tabular model, a pipeline pays it per stage). Scorers
+that read only ``probability`` use a copy that computes nothing else
+(`_probability_model`): MLlib's plan for the two columns no one reads cost
+about four times the JVM CPU of the one they do.
 """
 
 from __future__ import annotations
+
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lime_on_spark_spark.session import session_memo
 from lime_on_spark_spark.sources.catalog import load_table
+
+#: Fitted model -> {probability_only: (its Java transformer, params sent;
+#: the `_probability_model` copy it came from)}.
+_JAVA_MODELS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _probability_model(model):
+    """A copy of the classifier ``model`` (or of a pipeline ending in one)
+    that computes only ``probability``: no rawPrediction or prediction
+    column, and no pipeline stage that only makes the classifier's label.
+    The probabilities are bit-identical: MLlib's ``predictProbability``
+    runs ``predictRaw`` then the same in-place softmax that
+    ``raw2probability`` runs on a copy of rawPrediction."""
+    from pyspark.ml import PipelineModel
+
+    stages = model.stages if isinstance(model, PipelineModel) else [model]
+    clf = stages[-1]
+    label = clf.getLabelCol()
+    kept = [
+        s for s in stages[:-1]
+        if not (s.hasParam("outputCol") and s.getOrDefault("outputCol") == label)
+    ]
+    slim = clf.copy({clf.rawPredictionCol: "", clf.predictionCol: ""})
+    return PipelineModel(kept + [slim]) if isinstance(model, PipelineModel) else slim
+
+
+def _transform(model, df: DataFrame, probability_only: bool = False) -> DataFrame:
+    """``model.transform(df)`` in one Py4J call, through a Java transformer
+    built on the first call: ``model._to_java()`` (a pipeline becomes one
+    Java ``PipelineModel``), from `_probability_model` with
+    ``probability_only``. Later param changes on the Python model are not
+    seen; the memoized models never change theirs. Keyed by identity, so a
+    ``model.copy(extra)`` gets its own."""
+    built = _JAVA_MODELS.setdefault(model, {})
+    if probability_only not in built:
+        source = _probability_model(model) if probability_only else model
+        # A JavaWrapper detaches its Java object when it is collected, so
+        # the copy lives as long as its transformer; a value holding the
+        # model itself would keep its weak key alive.
+        built[probability_only] = (source._to_java(), source if probability_only else None)
+    return DataFrame(built[probability_only][0].transform(df._jdf), df.sparkSession)
+
 
 def train_tabular_model(spark: SparkSession, sf_dir: str):
     """LogisticRegression on embeddings -> label (10 classes)."""
@@ -65,9 +117,11 @@ def score_tabular(model, df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """L4 for the tabular path: black-box probabilities for each raw vector."""
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    scored = model.transform(df.withColumn("features", array_to_vector(raw_col)))
+    scored = _transform(
+        model, df.withColumn("features", array_to_vector(raw_col)), probability_only=True
+    )
     return scored.withColumn("probs", vector_to_array("probability")).drop(
-        "features", "rawPrediction", "probability", "prediction"
+        "features", "probability"
     )
 
 
@@ -75,10 +129,10 @@ def score_text(model, df: DataFrame, text_col: str = "perturbed") -> DataFrame:
     """L4 for the text path: pipeline probabilities for each perturbed text."""
     from pyspark.ml.functions import vector_to_array
 
-    scored = model.transform(df.withColumnRenamed(text_col, "text"))
+    scored = _transform(model, df.withColumnRenamed(text_col, "text"), probability_only=True)
     return (
         scored.withColumn("probs", vector_to_array("probability"))
-        .drop("words", "features", "rawPrediction", "probability", "prediction", "label")
+        .drop("words", "features", "probability")
         .withColumnRenamed("text", text_col)
     )
 
@@ -117,7 +171,7 @@ def score_regression(model, df: DataFrame, raw_col: str = "raw") -> DataFrame:
     (upstream mode='regression': the ridge fits raw outputs, no softmax)."""
     from pyspark.ml.functions import array_to_vector
 
-    scored = model.transform(df.withColumn("features", array_to_vector(raw_col)))
+    scored = _transform(model, df.withColumn("features", array_to_vector(raw_col)))
     return scored.withColumnRenamed("prediction", "y").drop("features")
 
 
@@ -157,7 +211,7 @@ def train_quality_model(spark: SparkSession, sf_dir: str):
         scored = docs.withColumn("q", q)
         lo, hi = scored.agg(
             F.expr("percentile(q, array(0.25, 0.75))").alias("cuts")
-        ).first()["cuts"]
+        ).first()["cuts"]  # bounded: one row
         train = scored.filter(
             (F.col("q") <= lo) | (F.col("q") >= hi)
         ).withColumn("label", (F.col("q") >= hi).cast("double"))
@@ -180,10 +234,10 @@ def score_quality(model, df: DataFrame) -> DataFrame:
     P(high quality | text), dropping the pipeline's intermediate columns."""
     from pyspark.ml.functions import vector_to_array
 
-    scored = model.transform(df)
+    scored = _transform(model, df, probability_only=True)
     return scored.withColumn(
         "p_keep", F.element_at(vector_to_array("probability"), 2)
-    ).drop("words", "features", "rawPrediction", "probability", "prediction")
+    ).drop("words", "features", "probability")
 
 
 #: Per-language fixture vocabularies for the d88 langid trainer — common
@@ -320,9 +374,7 @@ def score_langid(model, df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds ``pred_lang`` to df: the model's language for each text — one
     broadcast-model transform, no shuffle."""
     langs = F.array(*[F.lit(x) for x in LANGID_LANGS])
-    scored = model.transform(
-        df.withColumn("chars", F.split(F.col(text_col), ""))
-    )
+    scored = _transform(model, df.withColumn("chars", F.split(F.col(text_col), "")))
     return scored.withColumn(
         "pred_lang",
         F.element_at(langs, (F.col("prediction") + 1).cast("int")),

@@ -10,8 +10,11 @@ no collect). Sample 0 is always the unperturbed instance, as upstream.
 
 Scale design: each sampler is ONE ``mapInArrow`` pass. An instance's whole
 neighborhood — masks, reconstruction, text re-join, and for the explainers
-the euclidean distance — is built by NumPy over the instance's Arrow row
-where that row lives; nothing round-trips the driver. The draws come from
+(``with_dist``) the distance to the instance — is built by NumPy over the
+instance's Arrow row where that row lives; nothing round-trips the driver.
+In ``with_dist`` mode the masks stay in the worker: the explainers' fit
+pass regenerates them with `_mask_twin` instead of reading a ``z`` column
+that crossed the JVM twice. The draws come from
 ``_xxhash64_*``, a vectorized twin of Spark's ``XXH64`` fed the same hash
 chain as ``_bernoulli_keep`` (the column form, kept for image-LIME and as
 the reference the tests compare against), so the masks are bit-identical
@@ -28,6 +31,7 @@ when the plan is built); a single instance may exceed it.
 
 from __future__ import annotations
 
+import gc
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -130,6 +134,31 @@ def _keep_mask(h_id: np.ndarray, num_samples: int, width: int) -> np.ndarray:
     return keep
 
 
+def _mask_twin(
+    schema: T.StructType,
+    id_col: str,
+    *,
+    seed: int,
+    num_samples: int,
+    width: int | None = None,
+) -> Callable[[int, np.ndarray, list | None], np.ndarray]:
+    """The ``z`` a sampler emits, regenerated in the explainers' fit pass
+    so the mask never crosses the JVM: ``twin(instance_id, sample_id,
+    words)`` is one instance's int32 (len(sample_id), width) mask from the
+    same hash chain the sampler ran (``id_col``'s type in ``schema``,
+    ``seed``, ``num_samples``). ``width`` None (text) takes the width from
+    the instance's interpretable words, ``len(words)``."""
+    id_hash = _id_hasher(schema, id_col)
+    seed_h = _seed_hash(seed)
+
+    def twin(instance_id: int, sample_id: np.ndarray, words: list | None) -> np.ndarray:
+        h_id = id_hash(np.array([instance_id]), seed_h)
+        mask = _keep_mask(h_id, num_samples, len(words) if width is None else width)
+        return mask[0][sample_id].astype(np.int32)
+
+    return twin
+
+
 def _instance_hashes(batch, id_col: str, id_hash: Callable, seed_h) -> np.ndarray:
     """The chain through each row's id; xxhash64 skips a null id."""
     ids = batch.column(id_col)
@@ -137,6 +166,20 @@ def _instance_hashes(batch, id_col: str, id_hash: Callable, seed_h) -> np.ndarra
     if ids.null_count:
         h = np.where(ids.is_valid().to_numpy(zero_copy_only=False), h, seed_h)
     return h
+
+
+def _freeze_worker_heap() -> None:
+    """Called as a pass starts in a Python worker. PySpark's daemon runs a
+    full ``gc.collect()`` after every task of a reused worker, and each one
+    walks every object the worker holds — mostly the modules it imported
+    (pyarrow, pandas, NumPy: about 40k objects), about 70 ms of CPU per
+    task on a 4-vCPU host, paid by both passes of every explain call.
+    ``gc.freeze()`` (once per process) moves what is alive now to the
+    permanent generation, so later collections walk only what came after;
+    frozen objects still die by reference count, only cycles among them
+    stay."""
+    if not gc.get_freeze_count():
+        gc.freeze()
 
 
 def _list_array(values, lengths: np.ndarray, *, row_null=None, item_null=None):
@@ -175,6 +218,7 @@ def _neighborhoods(
     )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _freeze_worker_heap()
         for batch in batches:
             for lo in range(0, batch.num_rows, step or batch.num_rows or 1):
                 chunk = batch.slice(lo, step)
@@ -208,8 +252,10 @@ def _tabular_samples(
     with_dist: bool,
 ) -> DataFrame:
     """``perturb_tabular``'s pass. ``with_dist`` (the explainers) drops
-    ``x_col`` and adds ``dist``: the euclidean distance from ``raw`` to x,
-    bit-identical to ``kernel.euclidean_distance(raw, x)``."""
+    ``x_col`` and ``z`` and adds ``dist``: the euclidean distance from
+    ``raw`` to x, bit-identical to ``kernel.euclidean_distance(raw, x)``.
+    The explainers' fit pass regenerates z with `_mask_twin`, so z never
+    crosses the JVM."""
     import pyarrow as pa
 
     x_type = instances.schema[x_col].dataType
@@ -245,7 +291,7 @@ def _tabular_samples(
         if not valid.all():
             null = np.broadcast_to(~valid[:, None, :], raw.shape).ravel()
         widths = np.full(n * num_samples, d)
-        out = [_list_array(z.ravel(), widths), _list_array(raw.ravel(), widths, item_null=null)]
+        out = [_list_array(raw.ravel(), widths, item_null=null)]
         if with_dist:
             sq = (raw - x[:, None, :]).reshape(-1, d)
             sq = sq * sq
@@ -256,14 +302,15 @@ def _tabular_samples(
                 acc = acc + sq[:, j]
             dist_null = None if null is None else null.reshape(-1, d).any(axis=1)
             out.append(pa.array(np.sqrt(acc), mask=dist_null))
+        else:
+            out.insert(0, _list_array(z.ravel(), widths))
         return out
 
-    fields = [
-        T.StructField("z", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("raw", T.ArrayType(T.DoubleType(), True), False),
-    ]
+    fields = [T.StructField("raw", T.ArrayType(T.DoubleType(), True), False)]
     if with_dist:
         fields.append(T.StructField("dist", T.DoubleType(), True))
+    else:
+        fields.insert(0, T.StructField("z", T.ArrayType(T.IntegerType(), False), False))
     return _neighborhoods(
         instances, num_samples, fields, build, drop=(x_col,) if with_dist else ()
     )
@@ -366,18 +413,25 @@ def _text_samples(
     num_samples: int,
     seed: int,
     bow: bool,
-    with_words: bool = False,
+    with_dist: bool = False,
 ) -> DataFrame:
     """``perturb_text`` (``bow=False``) / ``perturb_text_bow`` pass.
 
     Tokens are ``split(text, " ")``, empty tokens kept as Java's split with
     limit -1 keeps them; ``perturbed`` is the kept tokens joined by one
     space. A null text gives null z, vocab and n_kept and an empty
-    ``perturbed``, as the column form did. ``with_words`` (the explainers)
-    drops ``text_col`` and ``vocab`` and adds ``doc_words``: the
+    ``perturbed``, as the column form did.
+
+    ``with_dist`` (the explainers) drops ``text_col``, ``vocab``, ``z`` and
+    ``n_kept`` and adds ``dist`` and ``doc_words``. ``dist`` is the cosine
+    distance between z and the all-ones original, scaled by 100 as upstream
+    lime_text does before its width-25 kernel: 1 - sum(z) / (sqrt(sum(z)) *
+    sqrt(d')) = (1 - sqrt(n_kept / d')) * 100, d' the z width, in IEEE
+    double operations as Spark evaluates them. ``doc_words`` holds the
     interpretable features' words — the vocabulary in bow mode, the tokens
     otherwise — on sample 0's row only (null on the others, which no reader
-    looks at)."""
+    looks at); the fit pass regenerates z from its length with
+    `_mask_twin`."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -418,33 +472,42 @@ def _text_samples(
             kept_idx.append(lo + np.nonzero(tok_keep)[1])
 
         row_null = np.repeat(null, S) if null.any() else None
+        kept_words = toks.values.take(pa.array(np.concatenate(kept_idx)))
+        perturbed = pc.binary_join(_list_array(kept_words, kept_len.ravel()), " ")
+        features = pa.array(vocab, pa.list_(pa.string())) if bow else toks
+        rows = np.repeat(np.arange(n), S)
+        if with_dist:
+            # A null text has z width 0; its distance is masked null.
+            dist = (1.0 - np.sqrt(n_kept / np.maximum(z_len, 1))) * 100.0
+            not_sample0 = np.tile(np.arange(S) > 0, n)
+            return [
+                perturbed,
+                pa.array(dist.ravel(), mask=row_null),
+                features.take(pa.array(rows, mask=not_sample0)),
+            ]
         z_arr = _list_array(
             np.concatenate(z_vals).astype(np.int32), z_len.ravel(), row_null=row_null
         )
-        kept_words = toks.values.take(pa.array(np.concatenate(kept_idx)))
-        perturbed = pc.binary_join(_list_array(kept_words, kept_len.ravel()), " ")
         out = [z_arr, perturbed, pa.array(n_kept.ravel(), mask=row_null)]
-        features = pa.array(vocab, pa.list_(pa.string())) if bow else toks
-        rows = np.repeat(np.arange(n), S)
-        if with_words:
-            not_sample0 = np.tile(np.arange(S) > 0, n)
-            out.append(features.take(pa.array(rows, mask=not_sample0)))
-        elif bow:
+        if bow:
             out.insert(0, features.take(pa.array(rows)))
         return out
 
+    if with_dist:
+        fields = [
+            T.StructField("perturbed", T.StringType(), False),
+            T.StructField("dist", T.DoubleType(), True),
+            T.StructField("doc_words", T.ArrayType(T.StringType(), True), True),
+        ]
+        return _neighborhoods(docs, num_samples, fields, build, drop=(text_col,))
     fields = [
         T.StructField("z", T.ArrayType(T.IntegerType(), False), True),
         T.StructField("perturbed", T.StringType(), False),
         T.StructField("n_kept", T.IntegerType(), True),
     ]
-    drop: tuple[str, ...] = ()
-    if with_words:
-        fields.append(T.StructField("doc_words", T.ArrayType(T.StringType(), True), True))
-        drop = (text_col,)
-    elif bow:
+    if bow:
         fields.insert(0, T.StructField("vocab", T.ArrayType(T.StringType(), True), True))
-    return _neighborhoods(docs, num_samples, fields, build, drop=drop)
+    return _neighborhoods(docs, num_samples, fields, build)
 
 
 def perturb_text(

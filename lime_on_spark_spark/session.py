@@ -43,11 +43,10 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
-#: Streaming confs right for the sessions ``get_spark()`` builds, whose
-#: streaming queries are short-lived with ephemeral checkpoints. Not
-#: forced by ``configure()``: a host's long-lived session keeps its own
-#: checkpoint corruption detection and state-store policy.
-STREAMING_CONFS: dict[str, str] = {
+#: Confs right for the sessions ``get_spark()`` builds, not forced by
+#: ``configure()``: a host's long-lived session keeps its own checkpoint
+#: corruption detection, state-store policy and planner thresholds.
+OWN_SESSION_CONFS: dict[str, str] = {
     # r17: Spark 4.1's ChecksumCheckpointFileManager leaks its per-manager
     # thread pool when a streaming query terminates (~112 threads PER
     # availableNow query, measured): a long-lived session accumulates
@@ -64,12 +63,18 @@ STREAMING_CONFS: dict[str, str] = {
     # production stream would keep the default (false) to avoid per-batch
     # provider reloads.
     "spark.sql.streaming.stateStore.unloadOnCommit": "true",
+    # Every IN list becomes an InSet, whose values codegen reads from a
+    # referenced set instead of inlining them. With the default (10) a
+    # small IN list is compiled into the generated class, so each batch
+    # LIME call with new ids compiled new Janino classes; the scan still
+    # pushes the ids down (`PushedFilters: [In(...)]`).
+    "spark.sql.optimizer.inSetConversionThreshold": "0",
 }
 
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply RUNTIME_CONFS to an externally-owned session (best-effort);
-    STREAMING_CONFS stay the owner's choice."""
+    OWN_SESSION_CONFS stay the owner's choice."""
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
@@ -100,7 +105,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for key, value in {**RUNTIME_CONFS, **STREAMING_CONFS}.items():
+    for key, value in {**RUNTIME_CONFS, **OWN_SESSION_CONFS}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     _add_worker_hook(spark.sparkContext.environment)
@@ -136,7 +141,7 @@ def session_memo(spark: SparkSession, key: tuple, build):
     application, calling ``build()`` on a miss. Nothing is stored when
     ``build`` raises. Hits and misses are counted per name ``key[0]``."""
     global _memo_app
-    app = spark.sparkContext.applicationId
+    app = _application_id(spark.sparkContext)
     if app != _memo_app:
         _MEMO.clear()
         _memo_app = app
@@ -147,6 +152,16 @@ def session_memo(spark: SparkSession, key: tuple, build):
     stats["misses"] += 1
     value = _MEMO[key] = build()
     return value
+
+
+def _application_id(sc) -> str:
+    """``sc.applicationId``, read over Py4J once per ``SparkContext``: a
+    context keeps its id for life, and a new application is a new
+    context object."""
+    app = sc.__dict__.get("_memo_application_id")
+    if app is None:
+        app = sc._memo_application_id = sc.applicationId
+    return app
 
 
 def memo_stats() -> dict[str, dict[str, int]]:

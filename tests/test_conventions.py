@@ -437,3 +437,77 @@ def test_file_io_scanner_catches_a_planted_twin():
         "open-write": ["_spool_rows"],
         "write": ["_spool_rows"],
     }
+
+
+# ------------------------------------------------ bounded driver actions
+
+#: Driver actions: these with no argument, and ``take`` with an integer
+#: literal (pyarrow's ``take(indices)`` in the samplers is not a Spark
+#: action).
+_ACTIONS = frozenset({"collect", "first", "toPandas", "count"})
+
+
+def _unbounded_actions(source: str, rel: str) -> list[str]:
+    """Driver actions without a ``# bounded: <why>`` comment on a line of
+    the call, from the method name to the closing parenthesis."""
+    import ast
+    import io
+    import tokenize
+
+    comments = {
+        tok.start[0]: tok.string
+        for tok in tokenize.generate_tokens(io.StringIO(source).readline)
+        if tok.type == tokenize.COMMENT
+    }
+    bad = []
+    for node in ast.walk(ast.parse(source)):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        name, args = node.func.attr, [*node.args, *node.keywords]
+        if name == "take":
+            action = len(args) == 1 and isinstance(args[0], ast.Constant) and isinstance(
+                args[0].value, int
+            )
+        else:
+            action = name in _ACTIONS and not args
+        lines = range(node.func.end_lineno, node.end_lineno + 1)
+        if action and not any("bounded:" in comments.get(i, "") for i in lines):
+            bad.append(f"{rel}:{node.func.end_lineno}")
+    return bad
+
+
+def test_lime_driver_actions_are_bounded():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    offenders = [
+        use
+        for path in sorted((root / "lime").rglob("*.py"))
+        for use in _unbounded_actions(path.read_text(), path.relative_to(root).as_posix())
+    ]
+    assert not offenders, (
+        "every collect/first/take/toPandas/count in lime/ brings rows to the "
+        f"driver and must say why they are few (# bounded: <why>): {offenders}"
+    )
+
+
+def test_bounded_action_scanner_catches_a_planted_collect():
+    planted = (
+        "def f(df, batch, rows):\n"
+        "    mu = df.agg('x').collect()  # d rows\n"
+        "    n = df.count()\n"
+        "    top = df.take(5)\n"
+        "    cut = (df.groupBy('k')\n"
+        "           .agg('x')\n"
+        "           .first())\n"
+        "    ok = df.toPandas()  # bounded: one row per class\n"
+        "    ok2 = (df.select('a')\n"
+        "           .collect()  # bounded: k rows\n"
+        "    )\n"
+        "    return batch.take(rows), [1, 1].count(1), df.take(rows)\n"
+    )
+    assert _unbounded_actions(planted, "lime/x.py") == [
+        "lime/x.py:2", "lime/x.py:3", "lime/x.py:4", "lime/x.py:7",
+    ]

@@ -248,15 +248,16 @@ def test_streaming_query_leaves_no_checkpoint_manager_threads(spark, tmp_path):
 
 
 def test_configure_leaves_streaming_confs_to_the_session_owner(spark):
-    """``get_spark()`` sets the two streaming confs above; ``configure()``,
-    which runs on sessions the engine did not build, must not force them
-    (checkpoint corruption detection stays on a host's own session)."""
-    from lime_on_spark_spark.session import STREAMING_CONFS, configure
+    """``get_spark()`` sets the two streaming confs above and the InSet
+    threshold; ``configure()``, which runs on sessions the engine did not
+    build, must not force them (checkpoint corruption detection and the
+    planner's thresholds stay the host session's own)."""
+    from lime_on_spark_spark.session import OWN_SESSION_CONFS, configure
 
     foreign = spark.newSession()
-    for key in STREAMING_CONFS:
+    for key in OWN_SESSION_CONFS:
         foreign.conf.unset(key)
     configure(foreign)
     settings = foreign._jsparkSession.sessionState().conf().getAllConfs()
-    assert [key for key in STREAMING_CONFS if settings.contains(key)] == []
+    assert [key for key in OWN_SESSION_CONFS if settings.contains(key)] == []
     assert configure(foreign).conf.get("spark.sql.session.timeZone") == "UTC"

@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from lime_on_spark_spark.plans import registry  # noqa: E402
-from lime_on_spark_spark.session import RUNTIME_CONFS, STREAMING_CONFS  # noqa: E402
+from lime_on_spark_spark.session import OWN_SESSION_CONFS, RUNTIME_CONFS  # noqa: E402
 
 
 def _get(url: str):
@@ -41,7 +41,7 @@ def _spark_with_ui() -> SparkSession:
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "true")
     )
-    for key, value in {**RUNTIME_CONFS, **STREAMING_CONFS}.items():
+    for key, value in {**RUNTIME_CONFS, **OWN_SESSION_CONFS}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 
