@@ -52,7 +52,7 @@ def connected_components(
         return df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64("node", "label").cast("decimal(38, 0)")).alias("h"),
-        ).first()
+        ).first()  # bounded: one aggregate row.
 
     sig_old = None
     for _ in range(max_rounds):
@@ -77,7 +77,7 @@ def connected_components(
                 new_labels.alias("n")
                 .join(labels.alias("o"), "node")
                 .filter(F.col("n.label") != F.col("o.label"))
-                .count()
+                .count()  # bounded: a scalar.
             )
         else:
             changed = -1
@@ -177,7 +177,7 @@ def connected_components_star(
         return df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64("a", "b").cast("decimal(38, 0)")).alias("h"),
-        ).first()
+        ).first()  # bounded: one aggregate row.
 
     rounds = 0
     sig_old = _sig(e)

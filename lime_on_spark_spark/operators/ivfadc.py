@@ -3,8 +3,8 @@
 what each cell stores (operators/pq.py), and the two compose so a query
 scans ONLY the compressed codes of the probed cells:
 
-  1. coarse quantizer: KMeans cells over the corpus (the d63b IVF index,
-     memoized per session + corpus);
+  1. coarse quantizer: the engine's k-means cells over the corpus (the
+     d63b IVF index, memoized per session + corpus);
   2. residual encoding: every vector's RESIDUAL to its cell centroid is
      PQ-encoded (residuals cluster tighter than raw vectors, so the same
      codebook budget buys less quantization error — the reason FAISS
@@ -14,8 +14,8 @@ scans ONLY the compressed codes of the probed cells:
      vector count <= scan_cap_frac of the corpus, so cell-size skew can
      never silently degrade the scan to exhaustive); an ADC lookup table
      is built per (query, probed cell) from the QUERY's residual to that
-     cell; the scan is a broadcast equi-join of that table against the
-     codes of the probed cells only + one keyed sum — it never touches a
+     cell; the scan is an equi-join of that table against the codes of
+     the probed cells only + one keyed sum — it never touches a
      full-precision vector;
   4. exact rescore: the ADC shortlist (L candidates) joins back to the
      full-precision corpus for exact distances; top-k comes from the
@@ -24,14 +24,15 @@ scans ONLY the compressed codes of the probed cells:
 Scale: at 100 TB the corpus lives as (cell, vec_id, M one-byte codes) —
 32x smaller than float32 — bucketed by cell id so a probe touches
 n_probe/n_cells of the files; the ADC table is O(n_probe * M * K) doubles
-per query (broadcast), and only the L-row shortlist ever reads full
+per query, and only the L-row shortlist ever reads full
 vectors. Driver state is the centroid table + codebooks: O(n_cells*dim +
 M*K*dim/M) doubles, bounded by construction.
 
-Determinism contract: the coarse KMeans is seed-pinned, the PQ trainer
-keeps pq.py's Lloyd contract (lowest-id init, 6-dp rounding, lowest-cid
-ties), and every top-L/top-k window breaks ties on vec_id — two builds produce
-identical codes and identical search results (pinned in pytest).
+Determinism contract: the coarse cells and the PQ codebooks are both fits
+of pq.py's one Lloyd loop and keep its contract (lowest-id init, 6-dp
+rounding, lowest-cid ties), and every top-L/top-k window breaks ties on
+vec_id — two builds produce identical codes and identical search results
+(pinned in pytest).
 """
 
 from __future__ import annotations
@@ -53,14 +54,13 @@ def build_ivfadc_index(
     n_cells: int = 16,
     m_subspaces: int = 8,
     k_centroids: int = 16,
-    seed: int = 42,
 ):
     """Fit (or fetch) the composed index.
 
     Returns ``(codes, pq_cent, centroids, cell_sizes)``: codes =
     (cell, vec_id, m, cid) — the residual PQ code of every corpus vector
     tagged with its IVF cell; pq_cent = {(m, cid): coords} driver-held
-    codebooks; centroids = the coarse KMeans centers (ndarray);
+    codebooks; centroids = the coarse cell centroids (ndarray);
     cell_sizes = {cell: n_vectors} driver-held routing stats.
 
     Memoized per session: one build is amortized over every query against
@@ -68,9 +68,7 @@ def build_ivfadc_index(
     """
 
     def build():
-        assigned, centroids = build_ivf_index(
-            spark, sf_dir, n_cells=n_cells, seed=seed
-        )
+        assigned, centroids = build_ivf_index(spark, sf_dir, n_cells=n_cells)
         # Residual = vector - its cell centroid, via a broadcast equi-join
         # on the cell id (n_cells rows — never a cross join) and one zip_with.
         cent_df = spark.createDataFrame(
@@ -104,11 +102,13 @@ def build_ivfadc_index(
         )
         cell_sizes = {
             int(r["cell"]): int(r["n"])
-            for r in assigned.groupBy("cell").agg(F.count("*").alias("n")).collect()
+            for r in assigned.groupBy("cell")
+            .agg(F.count("*").alias("n"))
+            .collect()  # bounded: n_cells rows.
         }
         return (coded, pq_cent, centroids, cell_sizes)
 
-    key = ("ivfadc", sf_dir, dim, n_cells, m_subspaces, k_centroids, seed)
+    key = ("ivfadc", sf_dir, dim, n_cells, m_subspaces, k_centroids)
     return session_memo(spark, key, build)
 
 
@@ -118,12 +118,11 @@ def _select_probes(
     cell_sizes: dict[int, int],
     scan_cap_frac: float,
 ) -> dict[int, list[int]]:
-    """MASS-BOUNDED probe selection, shared by both ADC-table variants so
-    their routing can never drift: for each query, cells are taken
+    """MASS-BOUNDED probe selection: for each query, cells are taken
     nearest-first (centroid L2, ties broken on cell id via argsort's
     stable order over the rounded distances) while the probed cells'
     total vector count stays within ``scan_cap_frac`` of the corpus —
-    always at least one non-empty cell. A fixed n_probe turns KMeans
+    always at least one non-empty cell. A fixed n_probe turns k-means
     cell-size skew into an unbounded scan (one fat cell can hold half a
     small corpus); the mass budget makes the sub-linear-scan guarantee
     STRUCTURAL — routing enforces it, query rows only re-certify it.
@@ -150,67 +149,6 @@ def _select_probes(
 
 
 def ivfadc_adc_table(
-    queries: list[tuple[int, list[float]]],
-    centroids: np.ndarray,
-    pq_cent: dict[tuple[int, int], list[float]],
-    cell_sizes: dict[int, int],
-    *,
-    scan_cap_frac: float,
-    sub: int,
-) -> tuple[list[tuple], dict[int, list[int]]]:
-    """Driver-side ADC lookup rows for every (query, probed cell).
-
-    Probing = :func:`_select_probes` (the shared mass-budgeted router).
-    Per probed cell the QUERY RESIDUAL to that cell is cut into
-    subvectors and its squared L2 to every codebook entry tabulated.
-    Returns ``(rows, probes)``: rows = (qid, cell, m, cid, dt) —
-    O(n_queries * probed_cells * M * K), broadcast-sized by construction;
-    probes = {qid: [cell, ...]}.
-    """
-    probes = _select_probes(queries, centroids, cell_sizes, scan_cap_frac)
-    rows: list[tuple] = []
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        cells = probes[qid]
-        for cell in cells:
-            qr = q - centroids[cell]
-            for (m, cid), cv in pq_cent.items():
-                dt = round(
-                    float(
-                        sum(
-                            (qr[m * sub + j] - cv[j]) ** 2
-                            for j in range(len(cv))
-                        )
-                    ),
-                    6,
-                )
-                rows.append((qid, cell, m, cid, dt))
-    return rows, probes
-
-
-def ivfadc_search(
-    spark: SparkSession,
-    codes: DataFrame,
-    adc_rows: list[tuple],
-    *,
-    shortlist: int,
-) -> DataFrame:
-    """(qid, vec_id, approx, n_terms, rn): ADC distances over the probed
-    cells' codes only — one broadcast equi-join on (cell, m, cid) + one
-    keyed sum — with the per-query shortlist rank. The join against the
-    per-query table restricts the scan to probed cells BY CONSTRUCTION
-    (a cell absent from the table contributes no rows), so candidate
-    counts derived from this frame certify the probe bound. The join/
-    agg/rank body is :func:`ivfadc_search_df` — the driver-tuple variant
-    only adds the broadcast hint (its table is bounded by construction).
-    """
-    dt = spark.createDataFrame(
-        adc_rows, "qid bigint, cell int, m int, cid bigint, dt double"
-    )
-    return ivfadc_search_df(codes, F.broadcast(dt), shortlist=shortlist)
-
-
-def ivfadc_adc_table_df(
     spark: SparkSession,
     queries: list[tuple[int, list[float]]],
     centroids: np.ndarray,
@@ -220,17 +158,18 @@ def ivfadc_adc_table_df(
     scan_cap_frac: float,
     sub: int,
 ):
-    """DataFrame variant of :func:`ivfadc_adc_table` for LARGER query
-    sets (d94 runs every 17th vector): the driver holds only the probe
-    list and per-(query, cell, m) residual SUBVECTORS — |Q| * probes * M
+    """ADC lookup table for every (query, probed cell). Probing =
+    :func:`_select_probes`. Per probed cell the QUERY RESIDUAL to that
+    cell is cut into subvectors: the driver holds only the probe list and
+    these per-(query, cell, m) residual SUBVECTORS — |Q| * probes * M
     rows — and the K-way codebook expansion happens in a DISTRIBUTED
     broadcast join against the (m, cid, cvec) codebook frame, so the
     O(|Q| * probes * M * K) distance table never materializes on the
-    driver. Same mass-budgeted probe selection, same rounded distances
-    (both variants fold the squared L2 left-to-right, so they agree
-    bit-for-bit before the 6-dp round).
+    driver.
 
-    Returns ``(dt, probes)``: dt = a DataFrame (qid, cell, m, cid, dt).
+    Returns ``(dt, probes)``: dt = a DataFrame (qid, cell, m, cid, dt),
+    dt the rounded squared L2 of the residual subvector to the codebook
+    entry; probes = {qid: [cell, ...]}.
     """
     from lime_on_spark_spark.functions.vector import sq_l2
 
@@ -268,11 +207,16 @@ def ivfadc_adc_table_df(
     return dt, probes
 
 
-def ivfadc_search_df(
+def ivfadc_search(
     codes: DataFrame, dt: DataFrame, *, shortlist: int
 ) -> DataFrame:
-    """:func:`ivfadc_search` over a DataFrame distance table (no forced
-    broadcast — the table scales with |Q| and AQE picks the strategy)."""
+    """(qid, vec_id, approx, n_terms, rn): ADC distances over the probed
+    cells' codes only — one equi-join on (cell, m, cid) + one keyed sum —
+    with the per-query shortlist rank. The join against the per-query
+    table restricts the scan to probed cells BY CONSTRUCTION (a cell
+    absent from the table contributes no rows), so candidate counts
+    derived from this frame certify the probe bound. No forced broadcast:
+    the table scales with |Q| and AQE picks the strategy."""
     from pyspark.sql import Window
 
     approx = (

@@ -7,9 +7,9 @@ states the architecture and the determinism contract) with one subspace
 holding the whole vector and one K. At 100 TB nothing changes shape: the
 corpus never materializes on the driver, each iteration is one broadcast
 plus one update shuffle over a corpus partitioned once upfront, and cost
-is O(n·k·d / executors) per iteration — the same plan MLlib's KMeans
-lowers to, expressed in open DataFrame ops so the oracle below can replay
-it.
+is O(n·k·d / executors) per iteration, expressed in open DataFrame ops
+so the oracle below can replay it. IVF's coarse cells
+(`operators/ivf.py`) are this same fit.
 """
 
 from __future__ import annotations
@@ -20,6 +20,24 @@ from pyspark.sql import functions as F
 from lime_on_spark_spark.operators.pq import _lloyd
 
 
+def _kmeans(
+    emb: DataFrame, *, k: int, iters: int
+) -> tuple[DataFrame, dict[int, list[float]]]:
+    """The one-subspace call of :func:`pq._lloyd` over `emb(vec_id,
+    embedding)`: ``(codes, centroids)`` with codes = (vec_id, cid, dist)
+    and centroids = {cid: coords}, the ones the final assignment used."""
+    whole = emb.select(
+        "vec_id",
+        F.lit(0).alias("m"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("sv"),
+    )
+    codes, cent = _lloyd(whole, m_subspaces=1, ks=(k,), iters=iters)
+    return (
+        codes.select("vec_id", "cid", "dist"),
+        {cid: v for (_, _, cid), v in cent.items()},
+    )
+
+
 def lloyd_kmeans(emb: DataFrame, *, k: int = 8, iters: int = 3) -> DataFrame:
     """Run `iters` Lloyd assignments over `emb(vec_id, embedding)`.
 
@@ -28,13 +46,7 @@ def lloyd_kmeans(emb: DataFrame, *, k: int = 8, iters: int = 3) -> DataFrame:
     assignments with `iters - 1` centroid updates in between (a1 c1 a2 c2
     a3 for iters=3), matching the unrolled oracle CTE chain.
     """
-    whole = emb.select(
-        "vec_id",
-        F.lit(0).alias("m"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("sv"),
-    )
-    codes, _ = _lloyd(whole, m_subspaces=1, ks=(k,), iters=iters)
-    return codes.select("vec_id", "cid", "dist")
+    return _kmeans(emb, k=k, iters=iters)[0]
 
 
 def kmeans_oracle_ctes(*, k: int = 8, iters: int = 3) -> str:

@@ -68,7 +68,7 @@ def ordered_prefix_sum(
         *[F.sum(c).alias(c) for c in sum_cols]
     )
     total_types = dict(totals_df.dtypes)
-    totals = totals_df.collect()
+    totals = totals_df.collect()  # bounded: one row per range partition.
     offsets = {}
 
     def _zero(dtype: str):

@@ -356,6 +356,72 @@ def test_lloyd_argmin_scanner_catches_a_planted_copy():
     assert not _lloyd_argmin_functions(clean, "operators/x.py")
 
 
+def _clustering_imports(source: str, rel: str) -> list[str]:
+    """``rel:line`` of every import of ``pyspark.ml.clustering``: ``import``
+    of it or a submodule, ``from`` it, or ``from pyspark.ml import
+    clustering``."""
+    import ast
+
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names = [node.module, *(f"{node.module}.{a.name}" for a in node.names)]
+        else:
+            continue
+        if any(
+            n == "pyspark.ml.clustering" or n.startswith("pyspark.ml.clustering.")
+            for n in names
+        ):
+            found.append(f"{rel}:{node.lineno}")
+    return found
+
+
+def test_no_mllib_clustering_in_the_package():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    offenders = [
+        use
+        for path in sorted(root.rglob("*.py"))
+        for use in _clustering_imports(
+            path.read_text(), path.relative_to(root).as_posix()
+        )
+    ]
+    assert not offenders, (
+        "k-means is pq._lloyd (kmeans._kmeans for one subspace); MLlib's "
+        f"clustering is a second k-means mechanism: {offenders}"
+    )
+
+
+def test_clustering_import_scanner_catches_a_planted_import():
+    planted = (
+        "import pyspark.ml.clustering\n"
+        "import numpy as np, pyspark.ml.clustering as cl\n"
+        "def build(df):\n"
+        "    from pyspark.ml.clustering import KMeans\n"
+        "    from pyspark.ml import clustering, feature\n"
+        "    return KMeans(k=4).fit(df)\n"
+    )
+    assert _clustering_imports(planted, "operators/x.py") == [
+        "operators/x.py:1", "operators/x.py:2",
+        "operators/x.py:4", "operators/x.py:5",
+    ]
+    # Other pyspark.ml modules and mentions in comments or strings are not
+    # imports of the clustering module.
+    clean = (
+        "# from pyspark.ml.clustering import KMeans was here once\n"
+        "from pyspark.ml import feature\n"
+        "from pyspark.ml.feature import MinHashLSH\n"
+        "from .clustering import cluster_ids\n"
+        "doc = 'import pyspark.ml.clustering'\n"
+    )
+    assert not _clustering_imports(clean, "operators/x.py")
+
+
 # ------------------------------------------------ one manifest codec
 
 #: Functions of sources/python_source.py that open manifests, the stream
@@ -484,12 +550,14 @@ def test_lime_driver_actions_are_bounded():
     root = Path(lime_on_spark_spark.__file__).parent
     offenders = [
         use
-        for path in sorted((root / "lime").rglob("*.py"))
+        for pkg in ("lime", "operators")
+        for path in sorted((root / pkg).rglob("*.py"))
         for use in _unbounded_actions(path.read_text(), path.relative_to(root).as_posix())
     ]
     assert not offenders, (
-        "every collect/first/take/toPandas/count in lime/ brings rows to the "
-        f"driver and must say why they are few (# bounded: <why>): {offenders}"
+        "every collect/first/take/toPandas/count in lime/ and operators/ "
+        "brings rows to the driver and must say why they are few "
+        f"(# bounded: <why>): {offenders}"
     )
 
 

@@ -61,7 +61,7 @@ def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
     from lime_on_spark_spark.operators.ivf import build_ivf_index, ivf_topk
     from lime_on_spark_spark.plans import registry
 
-    assigned, centroids = build_ivf_index(spark, sf_dir, n_cells=16, seed=42)
+    assigned, centroids = build_ivf_index(spark, sf_dir, n_cells=16)
     query = assigned.filter(F.col("vec_id") == 0).head()
     qvec = [float(v) for v in query["embedding"]]
 
@@ -75,7 +75,7 @@ def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
 def test_ivf_partial_probe_values_correct(spark, sf_dir):
     from lime_on_spark_spark.operators.ivf import build_ivf_index, ivf_topk
 
-    assigned, centroids = build_ivf_index(spark, sf_dir, n_cells=16, seed=42)
+    assigned, centroids = build_ivf_index(spark, sf_dir, n_cells=16)
     query = assigned.filter(F.col("vec_id") == 0).head()
     qvec = np.array([float(v) for v in query["embedding"]])
 
@@ -95,6 +95,49 @@ def test_ivf_partial_probe_values_correct(spark, sf_dir):
     # descending order
     sims = [r["cos_sim"] for r in partial]
     assert sims == sorted(sims, reverse=True)
+
+
+def test_ivf_cells_stay_aligned_when_a_cluster_empties(spark, tmp_path):
+    """The two lowest ids hold the same vector, so Lloyd's second seed ties
+    the first everywhere, loses every member to it (ties go to the lower
+    cid) and drops out after the first assignment. Cells must still index
+    centroid rows: every vector's cell centroid is its nearest one, and a
+    full probe equals the brute-force top-k."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lime_on_spark_spark.operators.ivf import build_ivf_index, ivf_topk
+
+    n_cells = 6
+    vecs = np.random.default_rng(7).normal(size=(40, 8)).astype(np.float32)
+    vecs[1] = vecs[0]
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(40), pa.int64()),
+            "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(40)], pa.int32()),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    assigned, centroids = build_ivf_index(spark, str(tmp_path), n_cells=n_cells)
+    assert len(centroids) < n_cells  # the emptied cluster dropped out
+
+    rows = assigned.collect()
+    assert sorted(r["vec_id"] for r in rows) == list(range(40))
+    for r in rows:
+        d = np.linalg.norm(centroids - np.asarray(r["embedding"], np.float64), axis=1)
+        assert d[r["cell"]] == pytest.approx(d.min(), abs=1e-6)
+
+    v = vecs.astype(np.float64)
+    cos = v @ v[0] / (np.linalg.norm(v, axis=1) * np.linalg.norm(v[0]))
+    brute = sorted((-round(float(cos[i]), 6), i) for i in range(1, 40))[:10]
+    full = ivf_topk(
+        assigned, centroids, v[0].tolist(), k=10,
+        n_probe=len(centroids), exclude_ids=(0,),
+    ).collect()
+    assert [r["vec_id"] for r in full] == [i for _, i in brute]
+    for r, (neg, _) in zip(full, brute):
+        assert r["cos_sim"] == pytest.approx(-neg, abs=1e-6)
 
 
 def test_resize_deterministic_sampling(spark):
@@ -293,13 +336,14 @@ def test_ivfadc_two_builds_identical_and_budget_enforced(spark, sf_dir):
     queries = [(1, [0.0] * 64), (2, [20.0] * 64)]
     pq_cent = {(m, c): [0.0] * 8 for m in range(8) for c in range(2)}
     _, probes = ivfadc_adc_table(
-        queries, centroids, pq_cent, sizes,
+        spark, queries, centroids, pq_cent, sizes,
         scan_cap_frac=0.2, sub=8,
     )
     # An empty cell (size 0) must never be probed — it buys nothing and
     # costs M*K broadcast rows; and the worst-frac re-certification in
     # d92 must not KeyError on it.
     _, probes_empty = ivfadc_adc_table(
+        spark,
         queries,
         np.array([[0.0] * 64, [10.0] * 64, [20.0] * 64, [0.1] * 64]),
         pq_cent,
