@@ -763,16 +763,19 @@ class JsonManifestWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages):  # driver-side: publish atomically
-        prior: dict | None = None
-        prior_files: list = []
-        prior_version = 0
+        try:
+            self._commit(messages)
+        finally:
+            # Spool litter from failed/speculative task attempts is
+            # invisible to readers but accumulates; the job is done with
+            # its spool dir whether it published, no-opped or was refused.
+            _shutil.rmtree(self._spool_dir(), ignore_errors=True)
+
+    def _commit(self, messages) -> None:
         try:
             prior = _load_manifest(self.path)
         except FileNotFoundError:
-            pass
-        else:
-            prior_files = prior["files"]
-            prior_version = prior.get("version", 0)
+            prior = {}
         # IDEMPOTENT TRANSACTION (t26): a replayed (txn_app, txn_version)
         # commit is a silent NO-OP — the exactly-once contract for
         # foreachBatch sinks retrying after checkpoint rollback. Checked
@@ -781,7 +784,7 @@ class JsonManifestWriter(DataSourceArrowWriter):
         # and raising a concurrent-commit conflict on it would break
         # exactly-once whenever txn_* and expected_version are combined —
         # "already recorded" must win regardless of snapshot staleness.
-        txns = dict((prior or {}).get("txns", {}))
+        txns = dict(prior.get("txns", {}))
         if self.txn_app is not None:
             # "No entry yet" must be distinguished from "entry >= version":
             # a -1 sentinel would silently no-op an app's FIRST commit when
@@ -791,139 +794,95 @@ class JsonManifestWriter(DataSourceArrowWriter):
                 self.txn_app in txns
                 and txns[self.txn_app] >= self.txn_version
             ):
-                _shutil.rmtree(self._spool_dir(), ignore_errors=True)
                 return
             txns[self.txn_app] = self.txn_version
         # OPTIMISTIC CONCURRENCY (s25): validated BEFORE any spool file is
         # renamed in — a refused commit leaves the directory exactly as the
-        # winning writer published it (the spool is reclaimed below). This
-        # read-check catches serialized interleavings early with a precise
-        # message; the ATOMIC guarantee is _publish_manifest's exclusive
-        # create of the version slot, which catches true races too.
+        # winning writer published it. This read-check catches serialized
+        # interleavings early with a precise message; the ATOMIC guarantee
+        # is _publish_manifest's exclusive create of the version slot,
+        # which catches true races too.
+        prior_version = prior.get("version", 0)
         if (
             self.expected_version is not None
             and prior_version != self.expected_version
         ):
-            _shutil.rmtree(self._spool_dir(), ignore_errors=True)
             raise ManifestConflictError(
                 "concurrent commit conflict: this write was based on "
                 f"version {self.expected_version}, but the table is now at "
                 f"version {prior_version}; re-plan against the current "
                 "snapshot and retry"
             )
-        files = []
+        if not self.overwrite and prior:
+            # SCHEMA EVOLUTION (s20): an append may ADD columns — the
+            # committed schema becomes the new superset and readers
+            # NULL-fill old files for the added columns. Dropping or
+            # retyping an existing column is refused loudly: silently
+            # narrowing the schema would hide committed data.
+            prior_cols = dict(
+                ddl.split(" ", 1) for ddl in prior.get("schema", [])
+            )
+            new_cols = dict(ddl.split(" ", 1) for ddl in self.schema_ddl)
+            # A column ADDED after a rename must not reuse a physical
+            # name a renamed column still occupies on disk: logical
+            # 'a' renamed to 'b' keeps physical key 'a' in every
+            # file, so a new logical 'a' would silently alias it.
+            taken = set((prior.get("column_mapping") or {}).values())
+            for c in new_cols.keys() - prior_cols.keys():
+                # Compare in PHYSICAL terms: a re-added DROPPED name
+                # was already remapped to a fresh physical at plan
+                # time (s34), so only a live renamed physical refuses.
+                if self.colmap.get(c, c) in taken:
+                    raise ValueError(
+                        f"added column '{c}' collides with the "
+                        "physical name of a renamed column; pick a "
+                        "different name"
+                    )
+            for c, t in prior_cols.items():
+                if c not in new_cols:
+                    raise ValueError(
+                        f"append drops committed column '{c}'; "
+                        "schema evolution only adds columns"
+                    )
+                if new_cols[c] != t:
+                    raise ValueError(
+                        f"append retypes committed column '{c}': "
+                        f"{t} -> {new_cols[c]}"
+                    )
+        added = []
         for m in messages:
-            final = _os.path.join(self.path, m.final_name)
-            _os.replace(m.temp_path, final)
             entry = {"name": m.final_name, "n_rows": m.n_rows}
             if getattr(m, "stats", None) is not None:
                 entry["stats"] = m.stats
             if getattr(m, "blooms", None):
                 entry["bloom"] = m.blooms
-            files.append(entry)
-        schema_ddl = self.schema_ddl
-        if not self.overwrite:
-            # Append mode: merge with the prior jobs' manifest — replacing
-            # it wholesale would silently orphan (and thus "delete", for
+            added.append((m.temp_path, entry))
+        _commit_snapshot(
+            self.path,
+            prior,
+            {
+                "op": "OVERWRITE" if self.overwrite else "APPEND",
+                "n_files_added": len(messages),
+                "n_rows_written": sum(m.n_rows for m in messages),
+            },
+            # Append mode keeps the prior jobs' files: replacing them
+            # wholesale would silently orphan (and thus "delete", for
             # manifest-driven readers) every previously committed row.
-            files = prior_files + files
-            if prior is not None:
-                # SCHEMA EVOLUTION (s20): an append may ADD columns — the
-                # committed schema becomes the new superset and readers
-                # NULL-fill old files for the added columns. Dropping or
-                # retyping an existing column is refused loudly: silently
-                # narrowing the schema would hide committed data.
-                prior_cols = dict(
-                    ddl.split(" ", 1) for ddl in prior.get("schema", [])
-                )
-                new_cols = dict(ddl.split(" ", 1) for ddl in schema_ddl)
-                # A column ADDED after a rename must not reuse a physical
-                # name a renamed column still occupies on disk: logical
-                # 'a' renamed to 'b' keeps physical key 'a' in every
-                # file, so a new logical 'a' would silently alias it.
-                taken = set((prior.get("column_mapping") or {}).values())
-                for c in new_cols.keys() - prior_cols.keys():
-                    # Compare in PHYSICAL terms: a re-added DROPPED name
-                    # was already remapped to a fresh physical at plan
-                    # time (s34), so only a live renamed physical refuses.
-                    if self.colmap.get(c, c) in taken:
-                        raise ValueError(
-                            f"added column '{c}' collides with the "
-                            "physical name of a renamed column; pick a "
-                            "different name"
-                        )
-                for c, t in prior_cols.items():
-                    if c not in new_cols:
-                        raise ValueError(
-                            f"append drops committed column '{c}'; "
-                            "schema evolution only adds columns"
-                        )
-                    if new_cols[c] != t:
-                        raise ValueError(
-                            f"append retypes committed column '{c}': "
-                            f"{t} -> {new_cols[c]}"
-                        )
-        version = prior_version + 1
-        # ROW TRACKING (s37): every data file owns a contiguous row-id
-        # range [base_row_id, base_row_id + n_rows); fresh files claim
-        # ids from the table's monotone counter in sorted-name order.
-        # Ids are NEVER reused — an overwrite continues the counter.
-        next_rid = int((prior or {}).get("next_row_id", 0))
-        for f in sorted(files, key=lambda f: f["name"]):
-            if "base_row_id" not in f:
-                f["base_row_id"] = next_rid
-                next_rid += f["n_rows"]
-        manifest = {
-            "files": sorted(files, key=lambda f: f["name"]),
-            # Live rows = physical rows minus deletion-vector rows; append-
-            # carried prior entries keep their "dv"/"n_deleted" keys, so an
-            # append after a DELETE must not resurrect the deleted count.
-            "total_rows": sum(
-                f["n_rows"] - f.get("n_deleted", 0) for f in files
-            ),
-            "schema": schema_ddl,
-            "version": version,
-        }
-        if txns:
-            manifest["txns"] = txns
-        # COLUMN MAPPING rides every commit: physical names are forever
-        # (even an overwrite keeps the table's logical->physical map so
-        # files written before and after agree on disk keys).
-        merged_map = dict((prior or {}).get("column_mapping") or {})
-        merged_map.update(self._added_map)  # fresh physicals for re-adds
-        if merged_map:
-            manifest["column_mapping"] = merged_map
-        # DROPPED-physical tombstones are forever (like the mapping): the
-        # dropped keys still exist in old data files, so every future
-        # commit must keep refusing/remapping against them.
-        if (prior or {}).get("dropped_physical"):
-            manifest["dropped_physical"] = prior["dropped_physical"]
-        # GENERATED COLUMNS (s36) ride every commit (prior rules were
-        # merged into self.generated at plan time).
-        if self.generated:
-            manifest["generated"] = self.generated
-        manifest["next_row_id"] = next_rid
-        # DESCRIBE HISTORY (s35): every publish stamps what it did — the
-        # audit record Delta exposes per commit.
-        manifest["commit_info"] = {
-            "op": "OVERWRITE" if self.overwrite else "APPEND",
-            "n_files_added": len(files) if self.overwrite else len(messages),
-            "n_rows_written": sum(m.n_rows for m in messages),
-        }
-        try:
-            _publish_manifest(self.path, manifest)
-        except ManifestConflictError:
-            # Lost the atomic race for the version slot: un-publish this
-            # commit's data files (they are invisible to manifest readers,
-            # but leaving them would litter the directory for globbers)
-            # and reclaim the spool before surfacing the conflict.
-            for m in messages:
-                try:
-                    _os.remove(_os.path.join(self.path, m.final_name))
-                except OSError:
-                    pass
-            _shutil.rmtree(self._spool_dir(), ignore_errors=True)
-            raise
+            files=[] if self.overwrite else None,
+            added=added,
+            schema=self.schema_ddl,
+            txns=txns,
+            # COLUMN MAPPING: physical names are forever (even an
+            # overwrite keeps the table's logical->physical map so files
+            # written before and after agree on disk keys), plus fresh
+            # physicals for re-added dropped columns.
+            column_mapping={
+                **(prior.get("column_mapping") or {}),
+                **self._added_map,
+            },
+            # Prior rules were merged into self.generated at plan time.
+            generated=self.generated,
+        )
         if self.overwrite and not self.retain_history:
             # The new manifest supersedes the old one; delete the files it
             # listed (and their deletion-vector sidecars), or every
@@ -931,7 +890,7 @@ class JsonManifestWriter(DataSourceArrowWriter):
             # for any reader that globs the directory. (Older
             # _MANIFEST-v*.json become dangling — time travel requires
             # retain_history.)
-            for f in prior_files:
+            for f in prior.get("files", []):
                 for name in (f["name"], f.get("dv")):
                     if name is None:
                         continue
@@ -939,9 +898,6 @@ class JsonManifestWriter(DataSourceArrowWriter):
                         _os.remove(_os.path.join(self.path, name))
                     except OSError:
                         pass
-        # Spool litter from failed/speculative task attempts is invisible
-        # to readers but accumulates; the job is done with its spool dir.
-        _shutil.rmtree(self._spool_dir(), ignore_errors=True)
 
     def abort(self, messages):  # driver-side: no partial output survives
         _shutil.rmtree(self._spool_dir(), ignore_errors=True)
@@ -1211,7 +1167,17 @@ class ManifestConflictError(ValueError):
     snapshot and retry with the next version."""
 
 
-def _publish_manifest(path: str, manifest: dict) -> None:
+def _discard(path: str, names) -> None:
+    """Remove the files `names` from the table directory at `path`,
+    ignoring those already gone."""
+    for name in names:
+        try:
+            _os.remove(_os.path.join(path, name))
+        except OSError:
+            pass
+
+
+def _publish_manifest(path: str, manifest: dict, written=()) -> None:
     """Atomically publish a manifest: versioned snapshot FIRST (via an
     EXCLUSIVE create), then the latest pointer.
 
@@ -1232,9 +1198,15 @@ def _publish_manifest(path: str, manifest: dict) -> None:
     slot is taken — the commit IS durable); the caller must re-plan from
     the current snapshot, exactly as with a lost race.
 
-    Shared by the batch writer's commit(), DELETE, and MERGE (which are
-    otherwise a single-writer contract — this makes a violated contract
-    loud instead of lossy)."""
+    `written` names the files the commit put in the table directory. A
+    failure before the slot is claimed (a lost race included) removes
+    them: no snapshot lists them. Once v{N} is claimed they are the
+    durable snapshot's files, so a failed pointer write keeps them.
+
+    Called only by :func:`_commit_snapshot`, the one commit path of every
+    operation (writer commit, DELETE, MERGE, RESTORE, RENAME, DROP COLUMN,
+    CLONE), which are otherwise a single-writer contract — this makes a
+    violated contract loud instead of lossy."""
     reader_features = sorted(
         ({"deletion_vectors"} if any(
             f.get("dv") for f in manifest.get("files", [])
@@ -1254,21 +1226,22 @@ def _publish_manifest(path: str, manifest: dict) -> None:
     vp = _os.path.join(path, f"_MANIFEST-v{manifest['version']}.json")
     mp = _os.path.join(path, "_MANIFEST.json")
     tmp = vp + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        _json.dump(manifest, fh)
     try:
+        with open(tmp, "w", encoding="utf-8") as fh:
+            _json.dump(manifest, fh)
         _os.link(tmp, vp)  # atomic claim of the version slot (EEXIST loses)
     except FileExistsError:
+        _discard(path, written)
         raise ManifestConflictError(
             "concurrent commit conflict: version "
             f"{manifest['version']} was already published at {vp}; "
             "re-plan against the current snapshot and retry"
         ) from None
+    except BaseException:
+        _discard(path, written)
+        raise
     finally:
-        try:
-            _os.remove(tmp)
-        except OSError:
-            pass
+        _discard(path, [_os.path.basename(tmp)])
     tmp = mp + ".tmp"
     with open(tmp, "w", encoding="utf-8") as fh:
         _json.dump(manifest, fh)
@@ -1300,7 +1273,8 @@ def _add_dv(path: str, version: int, entry: dict, prior, hits) -> str:
     """Publish the deletion vector of manifest `entry` at `version`: its
     prior positions plus `hits`, as a `dv-v{N}-{file}` sidecar written
     atomically (temp file, then rename); `entry` gains the "dv" and
-    "n_deleted" keys. Shared by DELETE and MERGE."""
+    "n_deleted" keys. Called by _commit_snapshot for DELETE's and MERGE's
+    matches."""
     merged = sorted(set(prior) | set(hits))
     dv_name = f"dv-v{version}-{entry['name']}"
     tmp = _os.path.join(path, dv_name + ".tmp")
@@ -1310,6 +1284,125 @@ def _add_dv(path: str, version: int, entry: dict, prior, hits) -> str:
     entry["dv"] = dv_name
     entry["n_deleted"] = len(merged)
     return dv_name
+
+
+def _commit_snapshot(
+    path: str,
+    prior: dict,
+    info: dict,
+    *,
+    files: list | None = None,
+    added=(),
+    links: dict | None = None,
+    dvs: dict | None = None,
+    schema: list | None = None,
+    **overrides,
+) -> dict:
+    """Build the next snapshot of the table at `path` from `prior` (the
+    manifest the operation planned against; {} for a new table) plus one
+    operation, and publish it — the one commit path of the connector
+    (Delta's "previous table state plus one action"). Each operation
+    passes only what it changes:
+
+    * ``files``: the file list (default prior's), to which ``added``
+      (temp path, entry) pairs are renamed in, and on which ``dvs``
+      ({name: (prior positions, new positions)}) publish deletion vectors
+      (`_add_dv`); the result is sorted by name;
+    * ``links``: {name: target} symlinks made in the table directory
+      (CLONE's references to its source's data files and DVs);
+    * ``schema``: the DDL list (default prior's);
+    * ``overrides`` of the table state that otherwise rides every commit
+      from prior — ``txns``, ``column_mapping``, ``dropped_physical`` and
+      ``generated``; a None or empty value drops the key;
+    * ``info``: the ``commit_info`` record DESCRIBE HISTORY reads (s35).
+
+    The version is prior's plus one. ROW TRACKING (s37): files without a
+    ``base_row_id`` claim a contiguous range from the table's monotone
+    ``next_row_id`` counter in sorted-name order; ids are never reused.
+    ``total_rows`` counts live rows (physical minus deletion-vector
+    rows).
+
+    A failure before the version slot is claimed — a lost race in
+    :func:`_publish_manifest` included — removes every file this commit
+    wrote (links, data files renamed in, DV sidecars), so a refused
+    commit leaves the directory as it found it; a failure after the
+    claim keeps them, as v{N} lists them. Returns the published
+    manifest."""
+    carried = {
+        key: overrides.pop(key) if key in overrides else prior.get(key)
+        for key in ("txns", "column_mapping", "dropped_physical", "generated")
+    }
+    if overrides:
+        raise TypeError(f"not table state: {sorted(overrides)}")
+    version = prior.get("version", 0) + 1
+    if files is None:
+        files = prior.get("files", [])
+    files = [dict(f) for f in files]
+    dvs = dvs or {}
+    written: list[str] = []
+    try:
+        for name, target in (links or {}).items():
+            _os.symlink(target, _os.path.join(path, name))
+            written.append(name)
+        for temp, entry in added:
+            _os.replace(temp, _os.path.join(path, entry["name"]))
+            written.append(entry["name"])
+            files.append(dict(entry))
+        for f in files:
+            if f["name"] in dvs:
+                written.append(_add_dv(path, version, f, *dvs[f["name"]]))
+        files.sort(key=lambda f: f["name"])
+        next_rid = prior.get("next_row_id")
+        for f in files:
+            if "base_row_id" not in f:
+                next_rid = next_rid or 0
+                f["base_row_id"] = next_rid
+                next_rid += f["n_rows"]
+        manifest = {
+            "files": files,
+            "total_rows": sum(
+                f["n_rows"] - f.get("n_deleted", 0) for f in files
+            ),
+            "schema": prior["schema"] if schema is None else schema,
+            "version": version,
+            **{key: value for key, value in carried.items() if value},
+        }
+        if next_rid is not None:
+            manifest["next_row_id"] = next_rid
+        manifest["commit_info"] = info
+    except BaseException:
+        _discard(path, written)
+        raise
+    _publish_manifest(path, manifest, written)
+    return manifest
+
+
+def _dml_scan(spark, path: str, files: list, may_match, match):
+    """The matched-row scan DELETE and MERGE share: one task per file that
+    passes the zone test ``may_match(entry)``, each running
+    ``match(name, prior_dv) -> (positions, payload)`` where the reader
+    runs (the shared-filesystem contract of JsonManifestSink), with the
+    file's prior deletion vector so dead rows never match again.
+
+    Returns (candidates, dvs, payloads): ``dvs`` maps each file with new
+    matches to (prior positions, new positions), what
+    :func:`_commit_snapshot` publishes as deletion vectors; ``payloads``
+    maps every candidate to its payload. The driver holds O(#matches)
+    positions — the asymptotics of Delta's DV bitmaps."""
+    candidates = [f for f in files if may_match(f)]
+    prior = {
+        f["name"]: set(_load_dv(path, f["dv"])) if f.get("dv") else set()
+        for f in candidates
+    }
+    scanned = (
+        spark.sparkContext.parallelize(
+            list(prior.items()), max(1, len(candidates))
+        )
+        .map(lambda t: (t[0], match(*t)))
+        .collect()  # bounded: one entry per candidate file
+    )
+    dvs = {name: (prior[name], pos) for name, (pos, _) in scanned if pos}
+    return candidates, dvs, {name: payload for name, (_, payload) in scanned}
 
 
 def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
@@ -1339,7 +1432,6 @@ def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
     writer's commit().
     """
     manifest = _load_manifest(path)
-    files = [dict(f) for f in manifest["files"]]
     # Validate conjuncts against the committed schema UP FRONT: a value
     # whose comparison class mismatches its column would otherwise raise a
     # bare TypeError inside an executor task mid-DELETE (the reader can
@@ -1395,64 +1487,30 @@ def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
                 return False
         return True
 
-    candidates = [f for f in files if _zone_may_match(f)]
-    prior_dvs = {
-        f["name"]: set(_load_dv(path, f["dv"])) if f.get("dv") else set()
-        for f in candidates
-    }
     ptypes = {_cmap.get(c, c): t for c, t in col_types.items()}
-    scanned = (
-        spark.sparkContext.parallelize(
-            [f["name"] for f in candidates], max(1, len(candidates))
-        )
-        .map(
-            lambda name: (
-                name,
-                _delete_positions(
-                    path, name, conjuncts, ptypes, prior_dvs[name]
-                ),
-            )
-        )
-        .collect()
+    candidates, dvs, _ = _dml_scan(
+        spark,
+        path,
+        manifest["files"],
+        _zone_may_match,
+        lambda name, dv: (
+            _delete_positions(path, name, conjuncts, ptypes, dv),
+            None,
+        ),
     )
-    new_hits = {name: pos for name, pos in scanned if pos}
-    version = manifest.get("version", 0) + 1
-    n_new_deleted = 0
-    dv_written = 0
-    for f in files:
-        hits = new_hits.get(f["name"])
-        if not hits:
-            continue
-        _add_dv(path, version, f, prior_dvs[f["name"]], hits)
-        n_new_deleted += len(hits)
-        dv_written += 1
-    new_manifest = {
-        "files": files,
-        "total_rows": sum(f["n_rows"] - f.get("n_deleted", 0) for f in files),
-        "schema": manifest["schema"],
-        "version": version,
-    }
-    if manifest.get("txns"):
-        new_manifest["txns"] = manifest["txns"]
-    if manifest.get("column_mapping"):
-        new_manifest["column_mapping"] = manifest["column_mapping"]
-    if manifest.get("dropped_physical"):
-        new_manifest["dropped_physical"] = manifest["dropped_physical"]
-    if manifest.get("generated"):
-        new_manifest["generated"] = manifest["generated"]
-    if manifest.get("next_row_id") is not None:
-        new_manifest["next_row_id"] = manifest["next_row_id"]
-    new_manifest["commit_info"] = {
-        "op": "DELETE",
-        "rows_deleted": n_new_deleted,
-    }
-    _publish_manifest(path, new_manifest)
+    n_new_deleted = sum(len(hits) for _, hits in dvs.values())
+    new_manifest = _commit_snapshot(
+        path,
+        manifest,
+        {"op": "DELETE", "rows_deleted": n_new_deleted},
+        dvs=dvs,
+    )
     return {
-        "version": version,
+        "version": new_manifest["version"],
         "rows_deleted": n_new_deleted,
-        "dv_files_written": dv_written,
+        "dv_files_written": len(dvs),
         "files_scanned": len(candidates),
-        "files_total": len(files),
+        "files_total": len(new_manifest["files"]),
     }
 
 
@@ -1509,7 +1567,6 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     import uuid as _uuid
 
     manifest = _load_manifest(path)
-    files = [dict(f) for f in manifest["files"]]
     schema_ddl = manifest["schema"]
     got_ddl = [
         f"{f.name} {f.dataType.simpleString()}" for f in updates.schema.fields
@@ -1585,34 +1642,22 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
         i = _bisect.bisect_left(sorted_keys, lo)
         return i < len(sorted_keys) and sorted_keys[i] <= hi
 
-    candidates = [f for f in files if _zone_has_key(f)]
-    prior_dvs = {
-        f["name"]: set(_load_dv(path, f["dv"])) if f.get("dv") else set()
-        for f in candidates
-    }
-    scanned = (
-        spark.sparkContext.parallelize(
-            [f["name"] for f in candidates], max(1, len(candidates))
-        )
-        .map(
-            lambda name: (
-                name,
-                _key_matches(
-                    path, name, pkey, key_type, sorted_keys, prior_dvs[name]
-                ),
-            )
-        )
-        .collect()
+    candidates, dvs, found = _dml_scan(
+        spark,
+        path,
+        manifest["files"],
+        _zone_has_key,
+        lambda name, dv: _key_matches(
+            path, name, pkey, key_type, sorted_keys, dv
+        ),
     )
-    new_hits = {name: pos for name, (pos, _) in scanned if pos}
     # Matched = by KEY (the table side may legitimately hold several live
     # rows per key — e.g. pre-dedup appends; every one is DV'd).
-    matched_keys = {k for _, (_, ks) in scanned for k in ks}
-    version = manifest.get("version", 0) + 1
+    matched_keys = {k for ks in found.values() for k in ks}
 
     # Spool the update rows on executors (two-phase: only messages the
     # driver receives get renamed in; retried attempts leave inert litter
-    # in the spool dir, removed after publish).
+    # in the spool dir, removed with it).
     job_id = _uuid.uuid4().hex
     spool = _os.path.join(path, f"_temp-{job_id}")
     _os.makedirs(spool, exist_ok=True)
@@ -1647,80 +1692,48 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
 
     # Abort discipline (the JsonManifestWriter.abort contract): a failure
     # anywhere before the atomic publish must not strand this attempt's
-    # DV sidecars, renamed-in data files, or the spool dir. Orphans would
-    # be invisible to readers (manifest-driven) and vacuum would reclaim
-    # them eventually, but the two-phase protocol cleans up eagerly.
-    written: list[str] = []
+    # spool dir; a refused commit (_commit_snapshot) removes what it
+    # renamed in or wrote.
     try:
         messages = updates.mapInArrow(
             _spool_partition,
             "temp string, final string, n bigint, stats string",
-        ).collect()
-        for f in files:
-            hits = new_hits.get(f["name"])
-            if hits:
-                written.append(
-                    _add_dv(path, version, f, prior_dvs[f["name"]], hits)
-                )
-        for m in messages:
-            if m["n"] == 0:
-                continue  # empty partition: nothing spooled to publish
-            _os.replace(m["temp"], _os.path.join(path, m["final"]))
-            written.append(m["final"])
-            files.append(
+        ).collect()  # bounded: one message per partition of the updates
+        added = [
+            (
+                m["temp"],
                 {
                     "name": m["final"],
                     "n_rows": int(m["n"]),
                     "stats": _json.loads(m["stats"]),
-                }
+                },
             )
+            for m in messages
+            if m["n"]  # empty partition: nothing spooled to publish
+        ]
         rows_updated = len(matched_keys)
         rows_inserted = len(rows) - rows_updated
         # ROW TRACKING (s37): updated rows are delete+insert — the
         # re-inserted rows claim FRESH ids (documented divergence from
         # Delta row tracking's materialized preservation).
-        next_rid = int(manifest.get("next_row_id", 0))
-        for f in sorted(files, key=lambda f: f["name"]):
-            if "base_row_id" not in f:
-                f["base_row_id"] = next_rid
-                next_rid += f["n_rows"]
-        new_manifest = {
-            "files": sorted(files, key=lambda f: f["name"]),
-            "total_rows": sum(
-                f["n_rows"] - f.get("n_deleted", 0) for f in files
-            ),
-            "schema": schema_ddl,
-            "version": version,
-        }
-        if manifest.get("txns"):
-            new_manifest["txns"] = manifest["txns"]
-        if manifest.get("column_mapping"):
-            new_manifest["column_mapping"] = manifest["column_mapping"]
-        if manifest.get("dropped_physical"):
-            new_manifest["dropped_physical"] = manifest["dropped_physical"]
-        if manifest.get("generated"):
-            new_manifest["generated"] = manifest["generated"]
-        new_manifest["next_row_id"] = next_rid
-        new_manifest["commit_info"] = {
-            "op": "MERGE",
-            "rows_updated": rows_updated,
-            "rows_inserted": rows_inserted,
-        }
-        _publish_manifest(path, new_manifest)
-    except BaseException:
-        for name in written:
-            try:
-                _os.remove(_os.path.join(path, name))
-            except OSError:
-                pass
+        new_manifest = _commit_snapshot(
+            path,
+            manifest,
+            {
+                "op": "MERGE",
+                "rows_updated": rows_updated,
+                "rows_inserted": rows_inserted,
+            },
+            added=added,
+            dvs=dvs,
+        )
+    finally:
         _shutil.rmtree(spool, ignore_errors=True)
-        raise
-    _shutil.rmtree(spool, ignore_errors=True)
     return {
-        "version": version,
+        "version": new_manifest["version"],
         "rows_updated": rows_updated,
         "rows_inserted": rows_inserted,
-        "files_added": sum(1 for m in messages if m["n"] > 0),
+        "files_added": len(added),
         "files_scanned": len(candidates),
     }
 
@@ -1826,17 +1839,7 @@ def changes_between_manifest_path(
     file — cost scales with the CHANGE, not the table.
     """
     v_from, v_to = int(v_from), int(v_to)
-    if per_commit:
-        if not 0 <= v_from < v_to:
-            raise ValueError(f"need 0 <= v_from < v_to, got {v_from}, {v_to}")
-        tasks = []
-        new = None
-        for v in range(v_from, v_to):
-            t_v, new = _cdf_tasks(path, v, v + 1)
-            tasks += [(n, m, pos, kind, v + 1) for n, m, pos, kind in t_v]
-    else:
-        t0, new = _cdf_tasks(path, v_from, v_to)
-        tasks = [(n, m, pos, kind, None) for n, m, pos, kind in t0]
+    tasks, new = _cdf_tasks(path, v_from, v_to, per_commit)
     # v_to's schema is the superset (s20 evolution only adds columns).
     fields, pfields, ddl_types = _schema_fields(new)
     if update_key is not None:
@@ -1875,9 +1878,8 @@ def changes_between_manifest_path(
                 )
 
     # One partition per task; each scan emits Arrow batches (mapInArrow).
-    task_rows = [(n, m, sorted(pos), kind, v) for n, m, pos, kind, v in tasks]
     feed = spark.createDataFrame(
-        spark.sparkContext.parallelize(task_rows, len(task_rows)),
+        spark.sparkContext.parallelize(tasks, len(tasks)),
         "name string, mode string, positions array<bigint>, kind string, "
         "ver bigint",
     ).mapInArrow(_scan, ddl)
@@ -1926,89 +1928,128 @@ def _schema_fields(manifest: dict) -> tuple[list, list, list]:
 
 
 def _cdf_tasks(
-    path: str, v_from: int, v_to: int
-) -> tuple[list[tuple[str, str, frozenset, str]], dict]:
+    path: str, v_from: int, v_to: int, per_commit: bool = False
+) -> tuple[list[tuple[str, str, tuple, str, int | None]], dict]:
     """Plan the change-data-feed scan between two snapshots: the list of
-    (file, include|exclude, positions, insert|delete) tasks plus v_to's
-    manifest. Driver-side O(#files + #DV positions) metadata work, shared
-    by the batch feed (s24) and the CDF streaming source (t27)."""
+    (file, include|exclude, positions, insert|delete, commit version)
+    tasks plus v_to's manifest. Driver-side O(#files + #DV positions)
+    metadata work, the one planner of the batch feed (s24), the batch CDF
+    reader (s28) and the CDF streaming source (t27).
+
+    The net diff compares the endpoints (commit version None). With
+    ``per_commit`` (s38) the plan is the union of every adjacent diff
+    (v, v+1] in the range, each task tagged with v+1. Positions are a
+    sorted tuple: tasks pickle to executors (InputPartition), and a
+    frozenset's pickle is order-unstable across runs."""
     if not 0 <= v_from < v_to:
         raise ValueError(f"need 0 <= v_from < v_to, got {v_from}, {v_to}")
-    new = _load_manifest(path, v_to)
-    old = (
-        {
-            "files": [],
-            "schema": new["schema"],
-            "column_mapping": new.get("column_mapping", {}),
-        }
-        if v_from == 0
-        else _load_manifest(path, v_from)
+    spans = (
+        [(v, v + 1) for v in range(v_from, v_to)]
+        if per_commit
+        else [(v_from, v_to)]
     )
-    # Pre-image rows from v_from's files are CAST under v_to's schema, so
-    # the feed is only defined when evolution was additive (the append-path
-    # contract). An overwrite may legally retype/drop columns — refuse
-    # loudly rather than emit a miscast pre-image or crash in an executor.
-    # Compared in PHYSICAL terms (s33): a metadata-only RENAME between the
-    # endpoints changes logical names but not one disk key — the feed is
-    # perfectly defined under v_to's (renamed) schema.
-    old_map = old.get("column_mapping", {})
-    new_map = new.get("column_mapping", {})
-    old_phys = {
-        old_map.get(c, c): t
-        for c, t in (ddl.split(" ", 1) for ddl in old["schema"])
-    }
-    new_phys = {
-        new_map.get(c, c): t
-        for c, t in (ddl.split(" ", 1) for ddl in new["schema"])
-    }
-    dropped_new = set(new.get("dropped_physical", []))
-    for c, t in old_phys.items():
-        if c not in new_phys and c in dropped_new:
-            # Explicit DROP COLUMN between the endpoints (s34): the feed
-            # is defined under v_to's narrower schema — pre-image rows
-            # simply project the tombstoned physical away (Delta CDF
-            # reads under the latest schema). Only an overwrite that
-            # retypes/removes a LIVE column is non-additive.
-            continue
-        if new_phys.get(c) != t:
-            raise ValueError(
-                f"change data feed undefined across non-additive schema "
-                f"change on physical column {c!r}: {t} -> "
-                f"{new_phys.get(c)} (v{v_from} -> v{v_to})"
-            )
-    old_by_name = {f["name"]: f for f in old["files"]}
-    new_by_name = {f["name"]: f for f in new["files"]}
 
     def _dv(entry: dict) -> frozenset:
         return frozenset(
             _load_dv(path, entry["dv"]) if entry.get("dv") else ()
         )
 
-    tasks: list[tuple[str, str, frozenset, str]] = []
-    for name, f in new_by_name.items():
-        if name not in old_by_name:
-            tasks.append((name, "exclude", _dv(f), "insert"))
-            continue
-        dv_old, dv_new = _dv(old_by_name[name]), _dv(f)
-        # Positions deleted at v_from but live at v_to are RESURRECTIONS:
-        # impossible under forward DML (DVs only grow on a fixed file) but
-        # legitimate when a RESTORE (s29) republished a pre-DELETE entry —
-        # the feed emits them as ordinary inserts, so applying the feed
-        # still reproduces v_to exactly and a restore needs no special
-        # casing downstream (the s29 composition contract).
-        resurrected = dv_old - dv_new
-        if resurrected:
-            tasks.append((name, "include", resurrected, "insert"))
-        newly_deleted = dv_new - dv_old
-        if newly_deleted:
-            tasks.append((name, "include", newly_deleted, "delete"))
-    for name, f in old_by_name.items():
-        if name not in new_by_name:
-            tasks.append((name, "exclude", _dv(f), "delete"))
-    return tasks, new
+    tasks: list[tuple[str, str, tuple, str, int | None]] = []
+    old = None if v_from == 0 else _load_manifest(path, v_from)
+    for lo, hi in spans:
+        new = _load_manifest(path, hi)
+        if old is None:  # from empty: every live v_to row is an insert
+            old = {
+                "files": [],
+                "schema": new["schema"],
+                "column_mapping": new.get("column_mapping", {}),
+            }
+        # Pre-image rows from v_from's files are CAST under v_to's schema,
+        # so the feed is only defined when evolution was additive (the
+        # append-path contract). An overwrite may legally retype/drop
+        # columns — refuse loudly rather than emit a miscast pre-image or
+        # crash in an executor. Compared in PHYSICAL terms (s33): a
+        # metadata-only RENAME between the endpoints changes logical names
+        # but not one disk key — the feed is perfectly defined under
+        # v_to's (renamed) schema.
+        old_map = old.get("column_mapping", {})
+        new_map = new.get("column_mapping", {})
+        old_phys = {
+            old_map.get(c, c): t
+            for c, t in (ddl.split(" ", 1) for ddl in old["schema"])
+        }
+        new_phys = {
+            new_map.get(c, c): t
+            for c, t in (ddl.split(" ", 1) for ddl in new["schema"])
+        }
+        dropped_new = set(new.get("dropped_physical", []))
+        for c, t in old_phys.items():
+            if c not in new_phys and c in dropped_new:
+                # Explicit DROP COLUMN between the endpoints (s34): the
+                # feed is defined under v_to's narrower schema — pre-image
+                # rows simply project the tombstoned physical away (Delta
+                # CDF reads under the latest schema). Only an overwrite
+                # that retypes/removes a LIVE column is non-additive.
+                continue
+            if new_phys.get(c) != t:
+                raise ValueError(
+                    f"change data feed undefined across non-additive schema "
+                    f"change on physical column {c!r}: {t} -> "
+                    f"{new_phys.get(c)} (v{lo} -> v{hi})"
+                )
+        old_by_name = {f["name"]: f for f in old["files"]}
+        new_by_name = {f["name"]: f for f in new["files"]}
+        ver = hi if per_commit else None
+        for name, f in new_by_name.items():
+            if name not in old_by_name:
+                tasks.append((name, "exclude", _dv(f), "insert", ver))
+                continue
+            dv_old, dv_new = _dv(old_by_name[name]), _dv(f)
+            # Positions deleted at v_from but live at v_to are
+            # RESURRECTIONS: impossible under forward DML (DVs only grow on
+            # a fixed file) but legitimate when a RESTORE (s29) republished
+            # a pre-DELETE entry — the feed emits them as ordinary inserts,
+            # so applying the feed still reproduces v_to exactly and a
+            # restore needs no special casing downstream (the s29
+            # composition contract).
+            if dv_old - dv_new:
+                tasks.append((name, "include", dv_old - dv_new, "insert", ver))
+            if dv_new - dv_old:
+                tasks.append((name, "include", dv_new - dv_old, "delete", ver))
+        for name, f in old_by_name.items():
+            if name not in new_by_name:
+                tasks.append((name, "exclude", _dv(f), "delete", ver))
+        old = new
+    return [(n, m, tuple(sorted(p)), k, v) for n, m, p, k, v in tasks], new
 
 
-class JsonManifestSource(DataSource):
+class _PinnedManifest:
+    """The manifest snapshot a manifest DataSource plans against, loaded
+    ONCE per source instance and cached: schema() and reader()/
+    streamReader() are separate planning calls, and a commit landing
+    between them could pair v(N+1)'s schema with v(N)'s file list — a
+    batch scan would drop an added column, every micro-batch of a stream
+    would misbind columns. Both derive from the same snapshot regardless
+    of concurrent commits."""
+
+    _NO_PATH = "json_manifest_source requires option 'path'"
+
+    def _version(self):
+        return None  # the latest snapshot
+
+    def _manifest(self) -> dict:
+        cached = getattr(self, "_manifest_cache", None)
+        if cached is None:
+            path = self.options.get("path")
+            if not path:
+                raise ValueError(self._NO_PATH)
+            cached = self._manifest_cache = _load_manifest(
+                path, self._version()
+            )
+        return cached
+
+
+class JsonManifestSource(_PinnedManifest, DataSource):
     """`spark.read.format("json_manifest_source").option("path", p)` —
     reads a `json_manifest_sink` directory: manifest-listed files only,
     self-describing schema from the manifest, zone-map file skipping from
@@ -2036,7 +2077,7 @@ class JsonManifestSource(DataSource):
         # matches how checkpoints are used: a consumer records the version
         # it has fully applied and asks for changes SINCE it.
         #
-        # Resolved ONCE and cached (the _manifest_cache rule): schema()
+        # Resolved ONCE and cached (the _PinnedManifest rule): schema()
         # and reader() are separate planning calls, and re-reading the
         # latest pointer in each would let a commit in between pin the
         # declared schema at v(N) while the scan covers v(N+1) — silently
@@ -2051,28 +2092,12 @@ class JsonManifestSource(DataSource):
         self._versions_cache = (lo, hi)
         return self._versions_cache
 
-    def _manifest(self) -> dict:
-        # Loaded ONCE and cached: schema() and reader() are separate
-        # planning calls, and a commit landing between them could pair
-        # v(N+1)'s schema with v(N)'s file list. Both now derive from the
-        # same snapshot regardless of concurrent commits.
-        cached = getattr(self, "_manifest_cache", None)
-        if cached is not None:
-            return cached
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("json_manifest_source requires option 'path'")
+    def _version(self):
         if self._read_changes():
             # Batch CDF read (s28 — Delta's readChangeFeed shape): the
             # schema epoch is the ENDING snapshot's (the s20 superset).
-            self._manifest_cache = _load_manifest(
-                path, self._change_versions()[1]
-            )
-        else:
-            self._manifest_cache = _load_manifest(
-                path, self.options.get("version")
-            )
-        return self._manifest_cache
+            return self._change_versions()[1]
+        return self.options.get("version")
 
     def schema(self) -> str:
         cols = list(self._manifest()["schema"])
@@ -2462,17 +2487,12 @@ class ManifestCDFBatchReader(DataSourceReader):
         if self.v_from == self.v_to:
             return [InputPartition(None)]  # empty range: no changes
         tasks, _ = _cdf_tasks(self.path, self.v_from, self.v_to)
-        if not tasks:
-            return [InputPartition(None)]
-        return [
-            InputPartition((name, mode, tuple(sorted(pos)), kind))
-            for name, mode, pos, kind in tasks
-        ]
+        return [InputPartition(t) for t in tasks] or [InputPartition(None)]
 
     def read(self, partition: InputPartition):
         if partition.value is None:
             return
-        name, mode, positions, kind = partition.value
+        name, mode, positions, kind, _ = partition.value
         yield from _cdf_file_batches(
             self.path, name, mode, positions, self.fields, self.ddl_types,
             self.logical, kind,
@@ -2522,18 +2542,6 @@ def restore_manifest_path(spark, path: str, to_version: int) -> dict:
                     f"restore target v{to_version} references '{name}', "
                     "which was vacuumed; restore requires retained history"
                 )
-    manifest = {
-        "files": target["files"],
-        "total_rows": sum(
-            f["n_rows"] - f.get("n_deleted", 0) for f in target["files"]
-        ),
-        "schema": target["schema"],
-        "version": cur_version + 1,
-    }
-    if target.get("column_mapping"):
-        # The restored schema's logical names resolve through the TARGET
-        # snapshot's mapping (they were renamed together).
-        manifest["column_mapping"] = target["column_mapping"]
     # A restore that reverts a schema ADDITION is an implicit DROP of the
     # reverted columns: their physical keys still sit in the data files
     # written while they were live (outside the restored file list but in
@@ -2554,22 +2562,25 @@ def restore_manifest_path(spark, path: str, to_version: int) -> dict:
     }
     tombstones = list(target.get("dropped_physical", []))
     tombstones += sorted(cur_phys - tgt_phys - set(tombstones))
-    if tombstones:
-        manifest["dropped_physical"] = tombstones
-    if target.get("generated"):
-        manifest["generated"] = target["generated"]
-    if current.get("txns"):
-        manifest["txns"] = current["txns"]
-    # Row ids are never reused: the CURRENT counter rides the restore
-    # (it is >= the target's, and files written after the target may
+    # Content from the target; the txn table and the row-id counter ride
+    # from the CURRENT snapshot (row ids are never reused: the current
+    # counter is >= the target's, and files written after the target may
     # return via a later restore-forward).
-    if current.get("next_row_id") is not None:
-        manifest["next_row_id"] = current["next_row_id"]
-    manifest["commit_info"] = {"op": "RESTORE", "restored_from": int(to_version)}
-    _publish_manifest(path, manifest)
+    manifest = _commit_snapshot(
+        path,
+        current,
+        {"op": "RESTORE", "restored_from": int(to_version)},
+        files=target["files"],
+        schema=target["schema"],
+        # The restored schema's logical names resolve through the TARGET
+        # snapshot's mapping (they were renamed together).
+        column_mapping=target.get("column_mapping"),
+        dropped_physical=tombstones,
+        generated=target.get("generated"),
+    )
     return {
         "restored_from": int(to_version),
-        "new_version": cur_version + 1,
+        "new_version": manifest["version"],
         "files_restored": len(target["files"]),
         "total_rows": manifest["total_rows"],
     }
@@ -2608,28 +2619,14 @@ def rename_column_manifest_path(spark, path: str, old: str, new: str) -> dict:
     mapping = dict(manifest.get("column_mapping", {}))
     physical = mapping.pop(old, old)
     mapping[new] = physical
-    new_manifest = {
-        "files": manifest["files"],
-        "total_rows": manifest["total_rows"],
-        "schema": [
-            f"{new} {t}" if n == old else f"{n} {t}" for n, t in pairs
-        ],
-        "column_mapping": mapping,
-        "version": manifest.get("version", 0) + 1,
-    }
-    if generated:
-        new_manifest["generated"] = generated
-    if manifest.get("txns"):
-        new_manifest["txns"] = manifest["txns"]
-    if manifest.get("dropped_physical"):
-        new_manifest["dropped_physical"] = manifest["dropped_physical"]
-    if manifest.get("next_row_id") is not None:
-        new_manifest["next_row_id"] = manifest["next_row_id"]
-    new_manifest["commit_info"] = {
-        "op": "RENAME COLUMN",
-        "column": f"{old} -> {new}",
-    }
-    _publish_manifest(path, new_manifest)
+    new_manifest = _commit_snapshot(
+        path,
+        manifest,
+        {"op": "RENAME COLUMN", "column": f"{old} -> {new}"},
+        schema=[f"{new} {t}" if n == old else f"{n} {t}" for n, t in pairs],
+        column_mapping=mapping,
+        generated=generated,
+    )
     return {
         "new_version": new_manifest["version"],
         "physical_name": physical,
@@ -2671,24 +2668,15 @@ def drop_column_manifest_path(spark, path: str, col: str) -> dict:
     generated.pop(col, None)  # dropping the generated column drops its rule
     mapping = dict(manifest.get("column_mapping", {}))
     physical = mapping.pop(col, col)
-    new_manifest = {
-        "files": manifest["files"],
-        "total_rows": manifest["total_rows"],
-        "schema": [f"{n} {t}" for n, t in pairs if n != col],
-        "dropped_physical": list(manifest.get("dropped_physical", []))
-        + [physical],
-        "version": manifest.get("version", 0) + 1,
-    }
-    if generated:
-        new_manifest["generated"] = generated
-    if mapping:
-        new_manifest["column_mapping"] = mapping
-    if manifest.get("txns"):
-        new_manifest["txns"] = manifest["txns"]
-    if manifest.get("next_row_id") is not None:
-        new_manifest["next_row_id"] = manifest["next_row_id"]
-    new_manifest["commit_info"] = {"op": "DROP COLUMN", "column": col}
-    _publish_manifest(path, new_manifest)
+    new_manifest = _commit_snapshot(
+        path,
+        manifest,
+        {"op": "DROP COLUMN", "column": col},
+        schema=[f"{n} {t}" for n, t in pairs if n != col],
+        column_mapping=mapping,
+        dropped_physical=[*manifest.get("dropped_physical", []), physical],
+        generated=generated,
+    )
     return {
         "new_version": new_manifest["version"],
         "physical_name": physical,
@@ -2724,36 +2712,20 @@ def clone_manifest_path(spark, src: str, dst: str) -> dict:
     _os.makedirs(dst, exist_ok=True)
     if _os.path.exists(_os.path.join(dst, "_MANIFEST.json")):
         raise ValueError(f"clone destination {dst} is already a table")
-    for f in src_manifest["files"]:
-        for name in (f["name"], f.get("dv")):
-            if name is None:
-                continue
-            _os.symlink(
-                _os.path.abspath(_os.path.join(src, name)),
-                _os.path.join(dst, name),
-            )
-    manifest = {
-        "files": src_manifest["files"],
-        "total_rows": sum(
-            f["n_rows"] - f.get("n_deleted", 0)
+    # The clone is a new table: its history starts at v1, with the
+    # source's state but not its txn table.
+    manifest = _commit_snapshot(
+        dst,
+        dict(src_manifest, version=0),
+        {"op": "CLONE", "src_version": src_manifest.get("version", 0)},
+        links={
+            name: _os.path.abspath(_os.path.join(src, name))
             for f in src_manifest["files"]
-        ),
-        "schema": src_manifest["schema"],
-        "version": 1,
-    }
-    if src_manifest.get("column_mapping"):
-        manifest["column_mapping"] = src_manifest["column_mapping"]
-    if src_manifest.get("dropped_physical"):
-        manifest["dropped_physical"] = src_manifest["dropped_physical"]
-    if src_manifest.get("generated"):
-        manifest["generated"] = src_manifest["generated"]
-    if src_manifest.get("next_row_id") is not None:
-        manifest["next_row_id"] = src_manifest["next_row_id"]
-    manifest["commit_info"] = {
-        "op": "CLONE",
-        "src_version": src_manifest.get("version", 0),
-    }
-    _publish_manifest(dst, manifest)
+            for name in (f["name"], f.get("dv"))
+            if name is not None
+        },
+        txns=None,
+    )
     return {
         "files_cloned": len(src_manifest["files"]),
         "total_rows": manifest["total_rows"],
@@ -2877,28 +2849,15 @@ def vacuum_manifest_path(path: str, retain_versions: int = 1) -> dict:
 from pyspark.sql.datasource import DataSourceStreamReader as _DSSR  # noqa: E402
 
 
-class ManifestStreamSource(DataSource):
+class ManifestStreamSource(_PinnedManifest, DataSource):
     """`spark.readStream.format("json_manifest_stream_source")` over a
     `json_manifest_sink` directory — micro-batches = manifest commits."""
+
+    _NO_PATH = "json_manifest_stream_source requires 'path'"
 
     @classmethod
     def name(cls) -> str:
         return "json_manifest_stream_source"
-
-    def _manifest(self) -> dict:
-        # Loaded ONCE and cached (the JsonManifestSource._manifest rule):
-        # schema() and streamReader() are separate planning calls, and a
-        # concurrent schema-evolving commit landing between them would
-        # pair v(N)'s planned schema with v(N+1)'s field list — every
-        # micro-batch would then misbind columns.
-        cached = getattr(self, "_manifest_cache", None)
-        if cached is not None:
-            return cached
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("json_manifest_stream_source requires 'path'")
-        self._manifest_cache = _load_manifest(path)
-        return self._manifest_cache
 
     def schema(self) -> str:
         return ", ".join(self._manifest()["schema"])
@@ -2987,23 +2946,15 @@ class ManifestStreamReader(_DSSR):
 # ---------------------------------------------------------------------------
 
 
-class ManifestCDFStreamSource(DataSource):
+class ManifestCDFStreamSource(_PinnedManifest, DataSource):
     """Streaming change-data-feed over a `json_manifest_sink` directory —
     micro-batches = row-level changes between manifest versions."""
+
+    _NO_PATH = "json_manifest_cdf_stream_source requires 'path'"
 
     @classmethod
     def name(cls) -> str:
         return "json_manifest_cdf_stream_source"
-
-    def _manifest(self) -> dict:
-        cached = getattr(self, "_manifest_cache", None)
-        if cached is not None:
-            return cached
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("json_manifest_cdf_stream_source requires 'path'")
-        self._manifest_cache = _load_manifest(path)
-        return self._manifest_cache
 
     def schema(self) -> str:
         ddl = ", ".join(self._manifest()["schema"]) + ", _change_type string"
@@ -3049,16 +3000,7 @@ class ManifestCDFStreamReader(_DSSR):
         if lo == hi:  # Spark plans empty (start == end) batches routinely
             return [InputPartition(None)]
         try:
-            if self.per_commit:
-                tasks = []
-                for v in range(lo, hi):
-                    t_v, _ = _cdf_tasks(self.path, v, v + 1)
-                    tasks += [
-                        (n, m, pos, kind, v + 1) for n, m, pos, kind in t_v
-                    ]
-            else:
-                t0, _ = _cdf_tasks(self.path, lo, hi)
-                tasks = [(n, m, pos, kind, None) for n, m, pos, kind in t0]
+            tasks, _ = _cdf_tasks(self.path, lo, hi, self.per_commit)
         except FileNotFoundError:
             raise ValueError(
                 f"json_manifest_cdf_stream_source: a snapshot in (v{lo}, "
@@ -3066,14 +3008,8 @@ class ManifestCDFStreamReader(_DSSR):
                 "the oldest checkpointed stream offset, or restart with a "
                 "fresh checkpoint to re-bootstrap"
             ) from None
-        if not tasks:  # no-data batch: Spark still needs >= 1 partition
-            return [InputPartition(None)]
-        # Positions ship as a sorted tuple: InputPartition pickles to the
-        # executor, and a frozenset's pickle is order-unstable across runs.
-        return [
-            InputPartition((name, mode, tuple(sorted(pos)), kind, ver))
-            for name, mode, pos, kind, ver in tasks
-        ]
+        # A no-data batch still needs >= 1 partition.
+        return [InputPartition(t) for t in tasks] or [InputPartition(None)]
 
     def read(self, partition: InputPartition):  # executor-side
         if partition.value is None:

@@ -505,6 +505,85 @@ def test_file_io_scanner_catches_a_planted_twin():
     }
 
 
+def _commit_sites(source: str) -> dict[str, list[str]]:
+    """The functions (``Class.method`` names) of a module that call
+    ``_publish_manifest`` and that build a ``commit_info`` record (a
+    ``["commit_info"]`` store, a ``"commit_info"`` dict key or a
+    ``commit_info=`` keyword)."""
+    import ast
+
+    found: dict[str, set] = {"publish": set(), "commit_info": set()}
+
+    def visit(node, owner: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            owner = f"{owner}.{node.name}" if owner else node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == "_publish_manifest":
+                found["publish"].add(owner)
+            if any(k.arg == "commit_info" for k in node.keywords):
+                found["commit_info"].add(owner)
+        keys = []
+        if isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store):
+            keys = [node.slice]
+        elif isinstance(node, ast.Dict):
+            keys = node.keys
+        if any(isinstance(k, ast.Constant) and k.value == "commit_info" for k in keys):
+            found["commit_info"].add(owner)
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner)
+
+    visit(ast.parse(source), "")
+    return {role: sorted(owners) for role, owners in found.items()}
+
+
+def test_one_commit_path_for_every_manifest_snapshot():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    sites = _commit_sites((root / "sources" / "python_source.py").read_text())
+    assert sites == {
+        "publish": ["_commit_snapshot"],
+        "commit_info": ["_commit_snapshot"],
+    }, (
+        "every json_manifest snapshot is built and published by "
+        f"_commit_snapshot; pass it what the operation changes: {sites}"
+    )
+
+
+def test_commit_scanner_catches_a_planted_copy():
+    planted = (
+        "def _commit_snapshot(path, prior, info):\n"
+        "    manifest = dict(prior)\n"
+        "    manifest['commit_info'] = info\n"
+        "    _publish_manifest(path, manifest)\n"
+        "class Writer:\n"
+        "    def commit(self, m):\n"
+        "        m = {'files': [], 'commit_info': {'op': 'APPEND'}}\n"
+        "        mod._publish_manifest(self.path, m)\n"
+        "def clone(src, dst):\n"
+        "    return dict(src, commit_info={'op': 'CLONE'})\n"
+    )
+    assert _commit_sites(planted) == {
+        "publish": ["Writer.commit", "_commit_snapshot"],
+        "commit_info": ["Writer.commit", "_commit_snapshot", "clone"],
+    }
+    # Reading a record, defining the publisher and mentions in comments or
+    # strings are not a second commit path.
+    clean = (
+        "# manifest['commit_info'] = info; _publish_manifest(p, m)\n"
+        "def _publish_manifest(path, manifest):\n"
+        "    return manifest.get('commit_info')\n"
+        "def history(m):\n"
+        "    doc = \"_publish_manifest(path, {'commit_info': 1})\"\n"
+        "    return m['commit_info']['op'], dict(m.get('commit_info') or {})\n"
+    )
+    assert _commit_sites(clean) == {"publish": [], "commit_info": []}
+
+
 # ------------------------------------------------ bounded driver actions
 
 #: Driver actions: these with no argument, and ``take`` with an integer
@@ -550,12 +629,13 @@ def test_lime_driver_actions_are_bounded():
     root = Path(lime_on_spark_spark.__file__).parent
     offenders = [
         use
-        for pkg in ("lime", "operators")
+        for pkg in ("lime", "operators", "sources")
         for path in sorted((root / pkg).rglob("*.py"))
         for use in _unbounded_actions(path.read_text(), path.relative_to(root).as_posix())
     ]
     assert not offenders, (
-        "every collect/first/take/toPandas/count in lime/ and operators/ "
+        "every collect/first/take/toPandas/count in lime/, operators/ and "
+        "sources/ "
         "brings rows to the driver and must say why they are few "
         f"(# bounded: <why>): {offenders}"
     )
