@@ -77,7 +77,13 @@ def _ids_in(column: str, ids) -> Column:
     """``column IN (ids)`` as one parsed expression: a single Py4J call
     whatever the number of ids (``isin`` costs about three per id).
     ``F.lit(False)`` for no ids. Raises TypeError, before any job runs,
-    for an id that is not an integer or does not fit a bigint."""
+    for an id that is not an integer or does not fit a bigint.
+
+    One distinct id is padded with ``NULL``, which no id equals: the
+    optimizer rewrites a one-element ``IN`` as ``=`` with the id inlined
+    in the generated class, so every call with a new lone id compiled new
+    classes. A filter drops the rows the padded ``IN`` makes NULL, as it
+    drops the rows it makes false."""
     literals = []
     for i in ids:
         if isinstance(i, (bool, np.bool_)) or not isinstance(i, (int, np.integer)):
@@ -87,6 +93,8 @@ def _ids_in(column: str, ids) -> Column:
         literals.append(str(int(i)))
     if not literals:
         return F.lit(False)
+    if len(set(literals)) == 1:
+        literals.append("NULL")
     name = column.replace("`", "``")
     return F.expr(f"`{name}` IN ({', '.join(literals)})")
 

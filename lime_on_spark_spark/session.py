@@ -5,10 +5,17 @@ Two entry paths:
 * ``get_spark()`` — builds a local session (tests, bench). Its Python
   processes start with ``_site/sitecustomize.py``, which installs the
   zipimport fixes of ``_zipimport.py`` (the compile cache included) before
-  pyspark is imported.
+  pyspark is imported. When it launches the driver JVM, it launches it with
+  ``launch_confs()``: the driver memory and, unless the launch already
+  names a garbage collector, the serial collector. In local mode that JVM
+  is the only executor, and its live heap stays small at the scale factors
+  the engine runs, so the serial collector keeps the committed heap close
+  to the live data; G1, the JVM's default, grows the committed heap toward
+  ``-Xmx`` and keeps it (README, "Why the serial collector").
 * ``configure(spark)`` — applies the runtime-settable confs to a session we
   did NOT build (the verify driver owns its own ``SparkSession``); every
-  catalog load calls this so the engine works under a foreign session.
+  catalog load calls this so the engine works under a foreign session. It
+  never touches the JVM's options.
 
 Scale notes (100 TB target): all confs here are also correct on a real
 cluster — AQE handles post-shuffle coalescing and skew-join splitting, the
@@ -20,8 +27,11 @@ initial value).
 from __future__ import annotations
 
 import os
+import re
 from contextlib import contextmanager
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: Directory holding only the worker start-up hook ``sitecustomize.py``.
@@ -72,6 +82,53 @@ OWN_SESSION_CONFS: dict[str, str] = {
 }
 
 
+#: Java options of the driver JVM that ``get_spark()`` launches.
+DRIVER_JAVA_OPTIONS = "-XX:+UseSerialGC"
+
+#: A JVM option that selects a garbage collector. The JVM refuses to start
+#: when two are selected ("Multiple garbage collectors selected").
+_COLLECTOR_FLAG = re.compile(r"-XX:\+Use\w+GC\b")
+
+#: Environment variables whose text reaches the driver JVM's command line:
+#: spark-submit's arguments and options, and the JVM's own option variables.
+_JVM_OPTION_VARS = (
+    "PYSPARK_SUBMIT_ARGS",
+    "SPARK_SUBMIT_OPTS",
+    "JAVA_TOOL_OPTIONS",
+    "JDK_JAVA_OPTIONS",
+    "_JAVA_OPTIONS",
+)
+
+
+def _collector_named() -> bool:
+    """Whether the driver JVM's launch already selects a collector: in one
+    of ``_JVM_OPTION_VARS``, or in the ``spark-defaults.conf`` spark-submit
+    reads (under ``SPARK_CONF_DIR``, else ``SPARK_HOME/conf``)."""
+    texts = [os.environ.get(name, "") for name in _JVM_OPTION_VARS]
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+            texts += [line for line in fh if not line.lstrip().startswith("#")]
+    except OSError:
+        pass  # no defaults file: spark-submit reads none either
+    return any(_COLLECTOR_FLAG.search(text) for text in texts)
+
+
+def launch_confs() -> dict[str, str]:
+    """The driver JVM's settings for a ``get_spark()`` launch: its memory
+    ($SPARK_GRAFT_DRIVER_MEM, else 8g) and ``DRIVER_JAVA_OPTIONS``. The
+    Java options are left out when the JVM is already running (nothing
+    would launch with them) and when the launch already names a collector,
+    which wins. A ``spark.driver.defaultJavaOptions`` that the caller passes
+    in ``PYSPARK_SUBMIT_ARGS`` replaces this one: those arguments come later
+    on spark-submit's command line."""
+    confs = {"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")}
+    jvm_running = SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+    if not jvm_running and not _collector_named():
+        confs["spark.driver.defaultJavaOptions"] = DRIVER_JAVA_OPTIONS
+    return confs
+
+
 def configure(spark: SparkSession) -> SparkSession:
     """Apply RUNTIME_CONFS to an externally-owned session (best-effort);
     OWN_SESSION_CONFS stay the owner's choice."""
@@ -102,10 +159,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for key, value in {**RUNTIME_CONFS, **OWN_SESSION_CONFS}.items():
+    for key, value in {**launch_confs(), **RUNTIME_CONFS, **OWN_SESSION_CONFS}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     _add_worker_hook(spark.sparkContext.environment)

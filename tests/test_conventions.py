@@ -659,3 +659,64 @@ def test_bounded_action_scanner_catches_a_planted_collect():
     assert _unbounded_actions(planted, "lime/x.py") == [
         "lime/x.py:2", "lime/x.py:3", "lime/x.py:4", "lime/x.py:7",
     ]
+
+
+# ------------------------------------------------ one place for JVM flags
+
+#: Confs that put options on the driver JVM's command line.
+_JAVA_OPTION_CONFS = ("spark.driver.defaultJavaOptions", "spark.driver.extraJavaOptions")
+
+
+def _java_option_sites(source: str, rel: str) -> list[str]:
+    """``rel:line`` of every string in code (a docstring is not code) that
+    names one of ``_JAVA_OPTION_CONFS``."""
+    import ast
+
+    tree = ast.parse(source)
+    docstrings = {
+        id(node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+    }
+    lines = sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docstrings
+        and any(conf in node.value for conf in _JAVA_OPTION_CONFS)
+    )
+    return [f"{rel}:{line}" for line in lines]
+
+
+def test_driver_java_options_only_in_session():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    offenders = [
+        use
+        for path in sorted(root.rglob("*.py"))
+        if (rel := path.relative_to(root).as_posix()) != "session.py"
+        for use in _java_option_sites(path.read_text(), rel)
+    ]
+    assert not offenders, (
+        "the driver JVM's options are session.launch_confs(); a second "
+        f"setter can select a second collector, which the JVM refuses: {offenders}"
+    )
+
+
+def test_java_option_scanner_catches_a_planted_copy():
+    planted = (
+        '"""Sets spark.driver.extraJavaOptions for the probe."""\n'
+        "def build(builder, gc):\n"
+        "    # spark.driver.defaultJavaOptions is session.py's\n"
+        '    builder = builder.config("spark.driver.extraJavaOptions", gc)\n'
+        '    confs = {"spark.driver.defaultJavaOptions": "-XX:+UseG1GC"}\n'
+        '    flag = f"--conf spark.driver.extraJavaOptions={gc}"\n'
+        '    return builder.config("spark.executor.extraJavaOptions", gc), confs, flag\n'
+    )
+    assert _java_option_sites(planted, "tools/x.py") == [
+        "tools/x.py:4", "tools/x.py:5", "tools/x.py:6",
+    ]

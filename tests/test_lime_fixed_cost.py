@@ -3,8 +3,10 @@
 A warm ``explain_tabular``/``explain_text`` call builds its plan in a fixed
 number of Py4J round trips (the ids travel as one parsed ``IN``, the
 call-invariant columns come from the session memo, the model's params were
-sent when it was memoized), compiles no new Janino class (``get_spark()``
-plans every ``IN`` as an ``InSet``, which codegen does not inline), keeps
+sent when it was memoized), compiles no new Janino class at any batch
+size (``get_spark()`` plans every ``IN`` as an ``InSet``, which codegen
+does not inline, and a lone distinct id is padded so that the optimizer
+cannot turn its ``IN`` into an ``=``), keeps
 the ids in the parquet scan's pushed filters, and never carries the mask
 ``z`` through the JVM: the fit pass regenerates it with the sampler's own
 hash twin, which the property test below holds to the ``z`` the public
@@ -89,13 +91,27 @@ def test_warm_call_round_trips_are_bounded_and_do_not_grow_with_the_batch(
     assert sent[8] <= budget, sent
 
 
-@pytest.mark.parametrize("kind", ["tabular", "text"])
-def test_warm_call_with_fresh_ids_compiles_no_class(spark, sf_dir, kind):
-    rng = np.random.default_rng(29)
+#: Fresh batches by id suffix: (distinct ids, copies of each). One id, and
+#: one id repeated, both reach the optimizer as a one-element ``IN``.
+_BATCHES = {"": (8, 1), "-one": (1, 1), "-duplicated": (1, 3)}
+
+
+@pytest.mark.parametrize(
+    "kind,distinct,copies",
+    [
+        pytest.param(kind, distinct, copies, id=kind + suffix)
+        for suffix, (distinct, copies) in _BATCHES.items()
+        for kind in ("tabular", "text")
+    ],
+)
+def test_warm_call_with_fresh_ids_compiles_no_class(spark, sf_dir, kind, distinct, copies):
+    # Each batch shape draws its own ids: a class compiled for another
+    # shape's ids must not hide this one's.
+    rng = np.random.default_rng([29, distinct, copies])
     for _ in range(2):
-        _call(spark, sf_dir, kind, _ids(rng, 8)).collect()
+        _call(spark, sf_dir, kind, _ids(rng, distinct) * copies).collect()
     before = _compiles(spark)
-    _call(spark, sf_dir, kind, _ids(rng, 8)).collect()
+    _call(spark, sf_dir, kind, _ids(rng, distinct) * copies).collect()
     assert _compiles(spark) - before == 0
 
 

@@ -19,7 +19,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from lime_on_spark_spark.plans import registry  # noqa: E402
-from lime_on_spark_spark.session import OWN_SESSION_CONFS, RUNTIME_CONFS  # noqa: E402
+from lime_on_spark_spark.session import (  # noqa: E402
+    OWN_SESSION_CONFS,
+    RUNTIME_CONFS,
+    launch_confs,
+)
 
 
 def _get(url: str):
@@ -29,7 +33,8 @@ def _get(url: str):
 
 def _spark_with_ui() -> SparkSession:
     # get_spark() disables the UI; this probe needs the REST API, so it
-    # mirrors get_spark's config with the UI on (probe-only session).
+    # mirrors get_spark's config with the UI on (probe-only session), on
+    # the same driver JVM settings.
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
         SparkSession.builder.appName("taskskew")
@@ -38,10 +43,9 @@ def _spark_with_ui() -> SparkSession:
             "spark.sql.shuffle.partitions",
             os.environ.get("SPARK_GRAFT_SHUFFLE", "8"),
         )
-        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "true")
     )
-    for key, value in {**RUNTIME_CONFS, **OWN_SESSION_CONFS}.items():
+    for key, value in {**launch_confs(), **RUNTIME_CONFS, **OWN_SESSION_CONFS}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 
