@@ -1377,32 +1377,80 @@ def _commit_snapshot(
     return manifest
 
 
+def _arrow_tasks(spark, ddl: str, rows: list, run, out_ddl: str):
+    """A lazy DataFrame (``out_ddl``) of what ``run(task)`` yields, as
+    Arrow record batches, for each of ``rows`` (tuples under ``ddl``;
+    ``task`` is the row as a dict).
+
+    The task rows travel as a local relation (``createDataFrame`` of an
+    Arrow table builds it in the JVM, with no Python worker) and run as
+    ``mapInArrow`` tasks: at most ``defaultParallelism`` of them, each
+    shipping only its own slice of the rows. These run in the session's
+    one SQL Python worker pool. A Python RDD (``parallelize``) would start
+    a second worker daemon with its own workers for the rest of the
+    session: the JVM keys its worker factories by the worker's
+    environment, and PythonRDD's lacks the SPARK_SIMPLIFIED_TRACEBACK the
+    SQL runners set."""
+    import pyarrow as pa
+
+    names = [d.split(" ", 1)[0] for d in ddl.split(", ")]
+    columns = zip(*rows) if rows else [()] * len(names)
+    table = pa.table({n: list(c) for n, c in zip(names, columns)})
+
+    def _task(batches):
+        for batch in batches:
+            for task in batch.to_pylist():
+                yield from run(task)
+
+    return spark.createDataFrame(table, ddl).mapInArrow(_task, out_ddl)
+
+
 def _dml_scan(spark, path: str, files: list, may_match, match):
-    """The matched-row scan DELETE and MERGE share: one task per file that
-    passes the zone test ``may_match(entry)``, each running
+    """The matched-row scan DELETE and MERGE share: every file that passes
+    the zone test ``may_match(entry)`` runs
     ``match(name, prior_dv) -> (positions, payload)`` where the reader
     runs (the shared-filesystem contract of JsonManifestSink), with the
-    file's prior deletion vector so dead rows never match again.
+    file's prior deletion vector so dead rows never match again; a file
+    is one row of an :func:`_arrow_tasks` scan (at most
+    ``defaultParallelism`` tasks), and that row carries its own prior DV.
+    When no file passes, no job runs.
 
     Returns (candidates, dvs, payloads): ``dvs`` maps each file with new
     matches to (prior positions, new positions), what
     :func:`_commit_snapshot` publishes as deletion vectors; ``payloads``
-    maps every candidate to its payload. The driver holds O(#matches)
-    positions — the asymptotics of Delta's DV bitmaps."""
+    maps every candidate to its payload (a list of ints, or None). The
+    driver holds O(#matches) positions — the asymptotics of Delta's DV
+    bitmaps."""
     candidates = [f for f in files if may_match(f)]
+    if not candidates:
+        return candidates, {}, {}
     prior = {
-        f["name"]: set(_load_dv(path, f["dv"])) if f.get("dv") else set()
+        f["name"]: _load_dv(path, f["dv"]) if f.get("dv") else []
         for f in candidates
     }
-    scanned = (
-        spark.sparkContext.parallelize(
-            list(prior.items()), max(1, len(candidates))
+
+    def _scan(task):
+        import pyarrow as pa
+
+        hits, payload = match(task["name"], task["dv"])
+        yield pa.RecordBatch.from_pydict(
+            {"name": [task["name"]], "hits": [hits], "payload": [payload]},
+            schema=pa.schema([
+                ("name", pa.string()),
+                ("hits", pa.list_(pa.int64())),
+                ("payload", pa.list_(pa.int64())),
+            ]),
         )
-        .map(lambda t: (t[0], match(*t)))
-        .collect()  # bounded: one entry per candidate file
-    )
-    dvs = {name: (prior[name], pos) for name, (pos, _) in scanned if pos}
-    return candidates, dvs, {name: payload for name, (_, payload) in scanned}
+
+    scanned = _arrow_tasks(
+        spark,
+        "name string, dv array<bigint>",
+        list(prior.items()),
+        _scan,
+        "name string, hits array<bigint>, payload array<bigint>",
+    ).collect()  # bounded: one row per candidate file
+    dvs = {r.name: (prior[r.name], r.hits) for r in scanned if r.hits}
+    return candidates, dvs, {r.name: r.payload for r in scanned}
 
 
 def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
@@ -1424,11 +1472,12 @@ def delete_where_manifest_path(spark, path: str, conjuncts: list) -> dict:
     any task runs — a class-mismatched value is a loud driver-side
     ValueError.
 
-    Scale shape: the matching-position scan runs DISTRIBUTED (one task
-    per candidate file, zone-pruned first — a clustered predicate scans
-    the zone, not the world); the driver holds O(#deleted) positions —
-    the same asymptotics as Delta's DV bitmaps — and the commit is a
-    driver-side metadata publish. Same single-writer contract as the
+    Scale shape: the matching-position scan runs DISTRIBUTED (the
+    candidate files spread over at most ``defaultParallelism`` tasks,
+    zone-pruned first — a clustered predicate scans the zone, not the
+    world; no job at all when the zone test prunes every file); the
+    driver holds O(#deleted) positions — the same asymptotics as Delta's
+    DV bitmaps — and the commit is a driver-side metadata publish. Same single-writer contract as the
     writer's commit().
     """
     manifest = _load_manifest(path)
@@ -1521,13 +1570,13 @@ def _load_dv(path: str, dv_name: str) -> list[int]:
 
 def _key_matches(
     path: str, name: str, column: str, ddl_type: str, keys: list, prior_dv
-) -> tuple[list[int], list]:
-    """Executor-side MERGE scan of one data file: (positions, stored key
-    values) of the live rows whose `column` value is one of `keys`, by one
-    Arrow membership test over that column. Matches as Python's `x in
-    set(keys)` does: `keys` holds no NaN (a parsed NaN is in no set), and
-    -0.0 folds into 0.0 on both sides (pc.is_in compares bits, `in`
-    compares values)."""
+) -> tuple[list[int], list[int]]:
+    """Executor-side MERGE scan of one data file: (positions, index in
+    `keys` of each one's value) of the live rows whose `column` value is
+    one of `keys`, by one Arrow membership test over that column. Matches
+    as Python's `x in set(keys)` does: `keys` holds no NaN (a parsed NaN
+    is in no set), and -0.0 folds into 0.0 on both sides (pc.is_in
+    compares bits, `in` compares values)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1541,7 +1590,8 @@ def _key_matches(
     hit = hit.to_numpy(zero_copy_only=False)
     hit[list(prior_dv)] = False
     pos = np.flatnonzero(hit)
-    return pos.tolist(), col.take(pa.array(pos)).to_pylist()
+    found = pc.index_in(col.take(pa.array(pos)), value_set=value_set)
+    return pos.tolist(), found.to_pylist()
 
 
 def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
@@ -1554,10 +1604,10 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
     Contract: ``updates`` must carry exactly the committed schema (MERGE
     does not evolve — s20 owns that) and be unique on ``key_col``; both
     are validated loudly before any file is touched. The matched-position
-    scan ships the update KEY SET to one task per candidate data file —
-    sized by the update batch, the CDC shape (at true 100 TB-batch scale
-    you'd swap the set for a join against a keyed index; the snapshot
-    protocol is unchanged). Updates spool per-partition on executors
+    scan ships the update KEY SET to every task of the scan — sized by
+    the update batch, the CDC shape (at true 100 TB-batch scale you'd
+    swap the set for a join against a keyed index; the snapshot protocol
+    is unchanged). Updates spool per-partition on executors
     (task-unique temp names, retry/speculation-safe) and only
     driver-confirmed spools are renamed in — the s12 two-phase commit.
 
@@ -1609,8 +1659,8 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
             f"{len(rows)} rows, {len(keys)} distinct keys"
         )
 
-    # Matched-row scan: one task per candidate file, update key set in the
-    # task closure (bounded by the update batch — the CDC contract). The
+    # Matched-row scan (_dml_scan), update key set in the task closure
+    # (bounded by the update batch — the CDC contract). The
     # candidate list is ZONE-PRUNED first with the key column's manifest
     # stats (the s16/s19 machinery): a file whose [min, max] zone holds
     # none of the update keys is never opened. A NaN key matches no
@@ -1651,9 +1701,10 @@ def merge_into_manifest_path(spark, path: str, updates, key_col: str) -> dict:
             path, name, pkey, key_type, sorted_keys, dv
         ),
     )
-    # Matched = by KEY (the table side may legitimately hold several live
-    # rows per key — e.g. pre-dedup appends; every one is DV'd).
-    matched_keys = {k for ks in found.values() for k in ks}
+    # Matched = by KEY, as indices into sorted_keys (the table side may
+    # legitimately hold several live rows per key — e.g. pre-dedup
+    # appends; every one is DV'd).
+    matched_keys = {i for ix in found.values() for i in ix}
 
     # Spool the update rows on executors (two-phase: only messages the
     # driver receives get renamed in; retried attempts leave inert litter
@@ -1829,14 +1880,16 @@ def changes_between_manifest_path(
     inserted at v+1 and deleted at v+2 (invisible in the net diff, which
     only ever compares the endpoints) appears as BOTH changes, and a
     consumer can replay commits in order. Costs one manifest load per
-    intermediate version (all must be retained) and one task per
+    intermediate version (all must be retained) and one file read per
     changed-file-per-commit; with ``update_key``, pairing windows are
     (key, version) — per-commit updates, strictly sharper than the
     whole-range pairing.
 
     Scale shape: the diff is driver-side O(#files + #DV positions)
-    metadata work; row materialization is one executor task per changed
-    file — cost scales with the CHANGE, not the table.
+    metadata work; row materialization reads each changed file once on an
+    executor (:func:`_arrow_tasks`: at most ``defaultParallelism`` tasks,
+    each shipping only its own files' positions) — cost scales with the
+    CHANGE, not the table.
     """
     v_from, v_to = int(v_from), int(v_to)
     tasks, new = _cdf_tasks(path, v_from, v_to, per_commit)
@@ -1866,23 +1919,21 @@ def changes_between_manifest_path(
     ddl = ", ".join(new["schema"]) + ", _change_type string"
     if per_commit:
         ddl += ", _commit_version bigint"
-    if not tasks:
-        return spark.createDataFrame([], ddl)
 
-    def _scan(batches):
-        for batch in batches:
-            for t in batch.to_pylist():
-                yield from _cdf_file_batches(
-                    path, t["name"], t["mode"], t["positions"], pfields,
-                    ddl_types, fields, t["kind"], ver=t["ver"],
-                )
+    def _scan(t):
+        return _cdf_file_batches(
+            path, t["name"], t["mode"], t["positions"], pfields, ddl_types,
+            fields, t["kind"], ver=t["ver"],
+        )
 
-    # One partition per task; each scan emits Arrow batches (mapInArrow).
-    feed = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
+    feed = _arrow_tasks(
+        spark,
         "name string, mode string, positions array<bigint>, kind string, "
         "ver bigint",
-    ).mapInArrow(_scan, ddl)
+        tasks,
+        _scan,
+        ddl,
+    )
     if update_key is None:
         return feed
     from pyspark.sql import Window as _W

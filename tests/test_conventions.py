@@ -720,3 +720,75 @@ def test_java_option_scanner_catches_a_planted_copy():
     assert _java_option_sites(planted, "tools/x.py") == [
         "tools/x.py:4", "tools/x.py:5", "tools/x.py:6",
     ]
+
+
+# ------------------------------------------------ one Python worker pool
+
+#: Python RDD API: a job through it runs in a second worker daemon (the
+#: JVM keys worker factories by the worker environment, and PythonRDD's
+#: differs from the SQL runners'), which lives for the rest of the session.
+_PYTHON_RDD_API = frozenset({"parallelize", "rdd", "foreachPartition", "runJob"})
+
+
+def _python_rdd_uses(source: str, rel: str) -> list[str]:
+    """``rel:line`` of every attribute access to the Python RDD API
+    (``parallelize``, ``.rdd``, ``mapPartitions*``, ``foreachPartition``,
+    ``runJob``); each line is listed once."""
+    import ast
+
+    lines = {
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Attribute)
+        and (node.attr in _PYTHON_RDD_API or node.attr.startswith("mapPartitions"))
+    }
+    return [f"{rel}:{line}" for line in sorted(lines)]
+
+
+def test_no_python_rdd_in_the_package():
+    from pathlib import Path
+
+    import lime_on_spark_spark
+
+    root = Path(lime_on_spark_spark.__file__).parent
+    offenders = [
+        use
+        for path in sorted(root.rglob("*.py"))
+        for use in _python_rdd_uses(
+            path.read_text(), path.relative_to(root).as_posix()
+        )
+    ]
+    assert not offenders, (
+        "a Python RDD job starts a second worker daemon for the session; run "
+        "the work as DataFrame Arrow tasks (python_source._arrow_tasks): "
+        f"{offenders}"
+    )
+
+
+def test_python_rdd_scanner_catches_a_planted_copy():
+    planted = (
+        "def scan(spark, files, match):\n"
+        "    return spark.sparkContext.parallelize(files, 4).map(match).collect()\n"
+        "def rows(df):\n"
+        "    return df.rdd.mapPartitions(lambda it: it)\n"
+        "def each(df, sc, f):\n"
+        "    df.foreachPartition(f)\n"
+        "    sc.runJob(df, f)\n"
+        "    return df.rdd.mapPartitionsWithIndex(f)\n"
+    )
+    assert _python_rdd_uses(planted, "sources/x.py") == [
+        "sources/x.py:2", "sources/x.py:4", "sources/x.py:6",
+        "sources/x.py:7", "sources/x.py:8",
+    ]
+    # pandas' Series.map, a variable named rdd, DataFrame Arrow tasks and
+    # mentions in comments or strings are not the RDD API.
+    clean = (
+        "# sc.parallelize(tasks) was the old shape\n"
+        "def tags(pdf, rdd):\n"
+        "    doc = 'df.rdd.mapPartitions(f); spark.sparkContext.parallelize'\n"
+        "    out = pdf['word'].map(len)\n"
+        "    return rdd, out\n"
+        "def tasks(df, f):\n"
+        "    return df.mapInArrow(f, 'x int').foreachBatch\n"
+    )
+    assert not _python_rdd_uses(clean, "sources/x.py")
